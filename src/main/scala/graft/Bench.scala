@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Pinned-prior contention canary (VERDICT r14 → r15 #1): a fixed,
   * purely JVM-local CPU+memory workload run between chunks — while the
@@ -145,15 +145,8 @@ object Bench {
   /** Fresh session + uncounted warmup (JIT/codegen compile, parquet
     * footer+filesystem caches, shuffle machinery) — otherwise the first
     * query of each chunk absorbs the one-time session cost. */
-  private def newSession(sfDir: String, cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    JvmHygiene.silenceGatedWarnings() // GlobalWindowSpec carries this gate
+  private def newSession(sfDir: String): SparkSession = {
+    val spark = LocalSession.create()
     try {
       spark.read.parquet(s"$sfDir/lineitem.parquet")
         .groupBy("l_returnflag").count()
@@ -236,79 +229,24 @@ object Bench {
     // relative weight is what packing needs)
     "pipeline_crawl_audit" -> 9.1, "pdf_pages_scan" -> 3.0)
 
-  /** Queries that must share one session because their bench forms share
-    * a memoized stage (SharedBenchStages.prefixPairs — computed by the
-    * first, reused by the rest). Order inside the group is the run
-    * order. */
-  /** Spec access to the affinity groups (BenchOverrideSpec asserts the
-    * names key real bench entries — a typo would silently drop the
-    * co-session guarantee). */
-  private[graft] def runTogetherNames: Seq[Seq[String]] = RunTogether
-
-  private val RunTogether: Seq[Seq[String]] =
-    Seq(Seq("dedup_clusters", "dedup_apply", "dedup_apply_best",
-        "dedup_soft_weights"),
-      // r12: both consume SharedBenchStages.mutualKnnEdges — in separate
-      // bins each would rebuild the shared edge stage in its own session
-      Seq("graph_kcore", "graph_kcore_audit"),
-      // r13: both consume SharedBenchStages.crawlWet + crawlDeduped —
-      // the flagship runs first and pays the memo builds, the audit
-      // rides the stored artifacts and measures only its detectors
-      Seq("pipeline_crawl_to_pack", "pipeline_crawl_audit"),
-      // r16: these two families share JVM-SCOPED driver-value model
-      // memos (TrainingQueries.clsModels / pqModels survive chunk
-      // session teardown), so the one-time train cost lands on
-      // whichever member runs FIRST anywhere in the run — splitting
-      // them makes the refreshed priors ORDER-DEPENDENT (r16: the
-      // committed classifier_train_audit prior read 0.017 s from a run
-      // where curriculum_stages trained first; the next pack treated
-      // the audit as free, placed it without its sibling, and its bin
-      // overran the mean by ~6 s — the whole "chunk 0 tax" left after
-      // the JIT warmup fix). Same bin ⇒ the group's SUM is stable
-      // run-over-run regardless of internal attribution.
-      Seq("curriculum_stages", "classifier_train_audit"),
-      Seq("pq_adc_consistency", "pq_recall_floor", "ann_ivfpq_dominance",
-        "ann_pqindex_topk"))
-
   /** Pack queries into session-sized chunks, balancing PRIOR COST, not
     * alphabet (r9 adjudication: alphabetical chunks put the whole dedup
     * family — every localCheckpoint-heavy kernel — into one session,
     * whose accumulated JVM/block state inflated those readings ~13× over
-    * isolated runs while other chunks idled). Greedy LPT: sort units by
-    * prior cost descending, always assign to the cheapest bin with room.
-    * Heavy queries land FIRST in their bins — on the freshest session
-    * state — and no bin holds more than one or two of them. */
+    * isolated runs while other chunks idled). Greedy LPT: sort queries
+    * by prior cost descending, always assign to the cheapest bin with
+    * room. Heavy queries land FIRST in their bins — on the freshest
+    * session state — and no bin holds more than one or two of them. */
   private def pack[Fn](names: Seq[(String, Fn)], chunkSize: Int)
       : Seq[Seq[(String, Fn)]] = {
-    val byName = names.toMap
-    val grouped = RunTogether.map(_.filter(byName.contains))
-      .filter(_.nonEmpty)
-    val inGroup = grouped.flatten.toSet
-    val units: Seq[Seq[(String, Fn)]] =
-      grouped.map(_.map(n => n -> byName(n))) ++
-        names.filterNot { case (n, _) => inGroup.contains(n) }
-          .map(Seq(_))
-    val sorted = units.sortBy { u =>
-      (-u.map { case (n, _) => prior(n) }.sum, u.head._1)
-    }
     val nBins = math.max(1, math.ceil(names.size.toDouble / chunkSize).toInt)
     val bins = Array.fill(nBins)(
       (scala.collection.mutable.ArrayBuffer.empty[(String, Fn)], Array(0.0)))
-    var extra = List.empty[(scala.collection.mutable.ArrayBuffer[(String, Fn)],
-      Array[Double])]
-    sorted.foreach { u =>
-      val cost = u.map { case (n, _) => prior(n) }.sum
-      val candidates = (bins.toList ++ extra)
-        .filter { case (b, _) => b.size + u.size <= chunkSize || b.isEmpty }
-      candidates.sortBy { case (_, c) => c(0) }.headOption match {
-        case Some((b, c)) => b ++= u; c(0) += cost
-        case None =>
-          val nb = (scala.collection.mutable.ArrayBuffer(u: _*),
-            Array(cost))
-          extra ::= nb
-      }
+    names.sortBy { case (n, _) => (-prior(n), n) }.foreach { q =>
+      val (b, c) = bins.filter(_._1.size < chunkSize).minBy(_._2(0))
+      b += q; c(0) += prior(q._1)
     }
-    (bins.toList ++ extra).map(_._1.toSeq).filter(_.nonEmpty)
+    bins.toList.map(_._1.toSeq).filter(_.nonEmpty)
   }
 
   /** The suite compiles thousands of distinct whole-stage-codegen
@@ -417,6 +355,14 @@ object Bench {
     }
   }
 
+  /** The timed suite: exactly the gate catalog (`SparkEntry.queries`,
+    * the forms the DuckDB oracle checks), by name, optionally narrowed
+    * to the `SPARK_GRAFT_ONLY` subset. */
+  private[graft] def suite(only: Option[Set[String]])
+      : Seq[(String, (SparkSession, String) => DataFrame)] =
+    SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => only.forall(_.contains(name)) }
+
   def main(args: Array[String]): Unit = {
     // NOT `foreach(sys.exit)`: the zero-arg `sys.exit()` overload types
     // as Nothing (conforming to Int => Unit), so that spelling EVALUATES
@@ -444,13 +390,12 @@ object Bench {
       } catch { case _: Throwable => None }
     val procStart = procStat()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = LocalSession.cpus
     // Local-iteration escape hatch: SPARK_GRAFT_ONLY=q1,q2 times a subset
     // (unset in driver runs — full suite).
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.benchQueries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    val names = suite(only)
     // Suite partitioning (r6-r9 adjudications): one long-lived session
     // accumulated JVM state (generated-class/JIT CodeHeap residue +
     // localCheckpoint block pressure) until mid-suite readings inflated
@@ -501,10 +446,9 @@ object Bench {
     val loadPerChunk = scala.collection.mutable.ArrayBuffer.empty[Double]
     def loadNow: Double = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    val nThreads = scala.util.Try(cpus.toInt).getOrElse(32)
     def contentionSample(): Unit = {
       loadPerChunk += loadNow
-      if (!noCanary) canarySecs += BenchCanary.reading(nThreads)
+      if (!noCanary) canarySecs += BenchCanary.reading(cpus)
     }
     var first = true
     // JVM warmup OUTSIDE every timed window (VERDICT r15 #2): chunk 0
@@ -518,7 +462,7 @@ object Bench {
     // starts from the same JVM state every later chunk does. The
     // schema-drift gate also moves here (it was inside chunk 0's timer).
     if (!sys.env.contains("SPARK_GRAFT_NO_WARMUP")) {
-      val spark = newSession(sfDir, cpus)
+      val spark = newSession(sfDir)
       try {
         graft.queries.SchemaContract.enforce(spark, sfDir)
         first = false
@@ -565,7 +509,7 @@ object Bench {
       // warmup itself introduced). Running the canary workload once,
       // unrecorded, absorbs the drain window; later chunk teardowns are
       // lighter and their samples read clean without this.
-      if (!noCanary) BenchCanary.reading(nThreads)
+      if (!noCanary) BenchCanary.reading(cpus)
     }
     val chunks = pack(names, chunkSize)
     // chunk membership of every query, captured from the ACTUAL run plan
@@ -577,7 +521,7 @@ object Bench {
       contentionSample()
       val wall0 = System.nanoTime()
       val gc0 = gcMsNow
-      val spark = newSession(sfDir, cpus)
+      val spark = newSession(sfDir)
       if (first) {
         // Fail fast with ONE named error if the testdata's engine-visible
         // schema drifted (driver regeneration) — otherwise every query
@@ -597,16 +541,12 @@ object Bench {
           }
         val dt = (System.nanoTime() - t0) / 1e9
         // generated-class hygiene — see JvmHygiene (adaptive: every 8
-        // queries, or immediately under CodeHeap pressure). Live memoized
-        // checkpoints (SharedBenchStages) are pinned, everything else
-        // drops — blocking, so removal cost stays outside the next
-        // query's timed window.
-        JvmHygiene.purgeBlocks(spark,
-          graft.queries.SharedBenchStages.pinnedIds(spark))
+        // queries, or immediately under CodeHeap pressure). Blocking, so
+        // removal cost stays outside the next query's timed window.
+        JvmHygiene.purgeBlocks(spark)
         sinceGc = JvmHygiene.maybeGc(sinceGc)
         (name, dt, ok)
       }
-      graft.queries.SharedBenchStages.clear()
       spark.stop()
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()

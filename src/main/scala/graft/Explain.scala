@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan (and optionally run) any
   * named SparkEntry query — the `.explain("formatted")` iteration loop
   * the build discipline requires, without editing test code.
@@ -13,15 +11,8 @@ object Explain {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val doRun = args.length > 2 && args(2) == "run"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val df = SparkEntry.benchQueries(name)(spark, sfDir)
+    val spark = LocalSession.create()
+    val df = SparkEntry.queries(name)(spark, sfDir)
     df.explain("formatted")
     if (doRun) {
       val t0 = System.nanoTime()

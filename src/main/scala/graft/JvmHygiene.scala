@@ -75,11 +75,7 @@ object JvmHygiene {
     * readings inflate 4-40× over isolated runs (dedup_substring_spans
     * 48.5 s in-suite vs 12.7 s isolated on UNCHANGED code). Queries are
     * independent, so between them every tracked cache entry and leaked
-    * persistent RDD is droppable — EXCEPT blocks in `keep`: live
-    * checkpoints of cross-query memoized stages
-    * (SharedBenchStages.pinnedIds); a localCheckpoint's lineage is
-    * truncated, so unpersisting a LIVE one is not a slowdown but a
-    * correctness break for its next consumer.
+    * persistent RDD is droppable.
     *
     * blocking = true (r9 adjudication of the purge↔checkpoint
     * interaction): the purge runs OUTSIDE the timed window, and a
@@ -87,8 +83,7 @@ object JvmHygiene {
     * messages that then compete with the NEXT query's first timed
     * stages — paying the removal cost here keeps it out of the
     * measurement. */
-  def purgeBlocks(spark: org.apache.spark.sql.SparkSession,
-      keep: Set[Int] = Set.empty): Unit = {
+  def purgeBlocks(spark: org.apache.spark.sql.SparkSession): Unit = {
     try spark.sharedState.cacheManager.clearCache()
     catch { case _: Exception => () }
     // per-RDD try: one throwing blocking unpersist (block-manager RPC
@@ -96,13 +91,10 @@ object JvmHygiene {
     // leaked survivors would silently re-create the pressure this purge
     // exists to remove
     try {
-      spark.sparkContext.getPersistentRDDs
-        .foreach { case (id, rdd) =>
-          if (!keep.contains(id)) {
-            try rdd.unpersist(blocking = true)
-            catch { case _: Exception => () }
-          }
-        }
+      spark.sparkContext.getPersistentRDDs.values.foreach { rdd =>
+        try rdd.unpersist(blocking = true)
+        catch { case _: Exception => () }
+      }
     } catch { case _: Exception => () }
   }
 }

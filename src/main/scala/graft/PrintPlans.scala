@@ -1,16 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump formatted physical plans for the headline queries (plan-audit
   * tool; output reviewed into PLANS.md). */
 object PrintPlans {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession.create()
     val interesting = Seq("q1_agg", "s2_scan_pushdown", "j1_equi_join",
       "j_multiway", "j3_range_join", "w1_row_number", "k1_cosine_topk",
       "dedup_exact", "a4_pivot_stats", "events_hourly", "events_sessionize",

@@ -47,15 +47,4 @@ object SparkEntry {
       GraphQueries.oracles ++ CompressionQueries.oracles ++
       RankingQueries.oracles ++ WebQueries.oracles ++
       PipelineQueries.oracles
-
-  /** The bench suite: `queries` with a few audit entries swapped for
-    * deterministically SAMPLED variants (e.g. the exact-all-pairs
-    * dominance audits probe a 10% source slice). The correctness gate
-    * (Verify → DuckDB) always runs the full `queries` forms; at real
-    * scale these audits run on a sample too, so the bench measures the
-    * production shape instead of an O(N²) verification pass. */
-  def benchQueries: Map[String, (SparkSession, String) => DataFrame] =
-    queries ++ ExtensionQueries.benchOverrides ++
-      TrainingQueries.benchOverrides ++ GraphQueries.benchOverrides ++
-      PipelineQueries.benchOverrides
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-headroom spot bench (VERDICT r16 #8): at sf0.1 every suite
@@ -21,15 +21,8 @@ import org.apache.spark.sql.functions._
 object SpotBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val copies = sys.env.getOrElse("SPARK_GRAFT_COPIES", "8").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.create()
     def noop(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
 
@@ -103,7 +96,7 @@ object SpotBench {
       .mkString("{", ",", "}")
     val failed = walls.collect { case (k, _, false) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
-    println(f"""{"metric":"spot_total","value":${walls.map(_._2).sum}%.2f,"unit":"sec","sf":"$sfDir","copies":$copies,"cpus":$cpus,"failed":$failed,"queries":$qs}""")
+    println(f"""{"metric":"spot_total","value":${walls.map(_._2).sum}%.2f,"unit":"sec","sf":"$sfDir","copies":$copies,"cpus":${LocalSession.cpus},"failed":$failed,"queries":$qs}""")
     spark.stop()
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import graft.operators.{LshIndex, TextAnalysis, WebArchive}
 import graft.streaming.DocIngest
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming-twin micro-bench (VERDICT r13 #3): `startCrawlPipeline`
@@ -36,15 +36,7 @@ object StreamBench {
       "/root/testdata/sf0.01")
     val nBatches = sys.env.get("SPARK_GRAFT_STREAM_BATCHES")
       .map(_.toInt).getOrElse(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.create()
 
     val setupT0 = System.nanoTime()
     val docs = queries.Tables.t(spark, sfDir, "documents")

@@ -94,46 +94,47 @@ object Pipeline {
           Fingerprints.hashEmbed(col("page_content"), dim))
     }
 
-    // W2 id assignment continuing from the existing collection size.
-    val existing = VectorCollection.count(spark, collectionRoot, collection)
-    val points = VectorCollection.assignIdsOrdered(
-        embedded.select(col("vector"), col("page_content"), col("materia"),
-          col("ano"), col("qid")),
-        existing, Seq("qid"))
-      .drop("qid")
-      .select(col("id"), col("vector"), col("page_content"), col("materia"),
-        col("ano").cast("int").as("ano"))
+    // Both persists are released however the load ends: a failed append
+    // (e.g. a wrong-dimension vector) must not leave them in the session.
+    try {
+      // W2 id assignment continuing from the existing collection size.
+      val existing = VectorCollection.count(spark, collectionRoot, collection)
+      val points = VectorCollection.assignIdsOrdered(
+          embedded.select(col("vector"), col("page_content"), col("materia"),
+            col("ano"), col("qid")),
+          existing, Seq("qid"))
+        .drop("qid")
+        .select(col("id"), col("vector"), col("page_content"), col("materia"),
+          col("ano").cast("int").as("ano"))
 
-    // S8 load + A3 reconcile.
-    val (attempted, added) =
-      VectorCollection.append(spark, collectionRoot, collection, points)
+      // S8 load + A3 reconcile.
+      val (attempted, added) =
+        VectorCollection.append(spark, collectionRoot, collection, points)
 
-    // A4 stats merge (todas questoes = attempted per (year, subject);
-    // questoes add = rows inserted THIS run — ids continue from the
-    // pre-append offset, so `id >= existing` selects exactly this batch;
-    // re-counting the whole collection would record cumulative totals on
-    // a second run into a non-empty collection (the reference writes the
-    // per-run added_questions, qdrant_text_loader.__etl_metadata_saving).
-    statsCsv.foreach { csv =>
-      val attemptedCounts = questions.groupBy(col("year"), col("subject"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("kind", lit("todas questoes"))
-      val addedCounts = VectorCollection
-        .read(spark, collectionRoot, collection)
-        .filter(col("id") >= existing)
-        .groupBy(col("ano").as("year"), col("materia").as("subject"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("kind", lit("questoes add"))
-      val stats = LoadStats.mergeWithExisting(spark, Some(csv),
-        attemptedCounts.unionByName(addedCounts)
-          .select(col("year"), col("subject"), col("kind"), col("n")))
-      LoadStats.writeCsv(stats, csv + ".out")
-    }
+      // A4 stats merge (todas questoes = attempted per (year, subject);
+      // questoes add = rows inserted THIS run — ids continue from the
+      // pre-append offset, so `id >= existing` selects exactly this batch;
+      // re-counting the whole collection would record cumulative totals on
+      // a second run into a non-empty collection (the reference writes the
+      // per-run added_questions, qdrant_text_loader.__etl_metadata_saving).
+      statsCsv.foreach { csv =>
+        val attemptedCounts = questions.groupBy(col("year"), col("subject"))
+          .agg(count(lit(1)).as("n"))
+          .withColumn("kind", lit("todas questoes"))
+        val addedCounts = VectorCollection
+          .read(spark, collectionRoot, collection)
+          .filter(col("id") >= existing)
+          .groupBy(col("ano").as("year"), col("materia").as("subject"))
+          .agg(count(lit(1)).as("n"))
+          .withColumn("kind", lit("questoes add"))
+        val stats = LoadStats.mergeWithExisting(spark, Some(csv),
+          attemptedCounts.unionByName(addedCounts)
+            .select(col("year"), col("subject"), col("kind"), col("n")))
+        LoadStats.writeCsv(stats, csv + ".out")
+      }
 
-    val nPairs = pairs.count()
-    embedded.unpersist()
-    questions.unpersist()
-    LoadReport(nPairs, 0L, attempted, added)
+      LoadReport(pairs.count(), 0L, attempted, added)
+    } finally { embedded.unpersist(); questions.unpersist(); () }
   }
 
   /** E3 — `file_to_vectorDB` (qdrant_text_loader.py:144-240): load one

@@ -382,7 +382,12 @@ object Dedup {
     * candidates; candidates are verified with the exact shingle-set Jaccard,
     * so the OUTPUT contract equals `ngramJaccardPairs` whenever banding
     * recall is 1 at the threshold (choose bands so that
-    * (1/bands)^(k/bands·…) — standard S-curve — is well left of it). */
+    * (1/bands)^(k/bands·…) — standard S-curve — is well left of it).
+    *
+    * EAGER: building the returned plan already runs the corpus scan and
+    * the shingle/minhash kernel, through the signature table's
+    * `localCheckpoint`. Calling this costs a full pass over `docs` even
+    * if the result is never consumed. */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3, k: Int = 64, bands: Int = 16,
       threshold: Double = 0.8): DataFrame = {

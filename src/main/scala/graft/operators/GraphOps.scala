@@ -272,12 +272,13 @@ object GraphOps {
     // node-sized table every round. Same fixpoint semantics: converged
     // iff the simultaneous removal deleted nobody.
     // auto-named observations: fixed names collide if two peel loops
-    // ever run concurrently (driver-thread overlap, guide §2.6)
+    // ever run concurrently (driver-thread overlap, guide §2.6). A lost
+    // metric throws rather than reading as 0 — a fake count would fake
+    // convergence.
     def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
       val obs = org.apache.spark.sql.Observation()
       val cp = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
-      (cp, Option(obs.get.getOrElse("n", null))
-        .map(_.asInstanceOf[Long]).getOrElse(0L))
+      (cp, obs.get("n").asInstanceOf[Long])
     }
     var (alive, aliveCount) =
       checkpointCounted(nbr.select(col("id")).distinct())

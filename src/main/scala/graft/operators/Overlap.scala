@@ -20,22 +20,45 @@ import org.apache.spark.sql.SparkSession
   * connectedComponents note). Use ONLY for genuinely independent
   * builds. */
 object Overlap {
+  private val groups = new java.util.concurrent.atomic.AtomicLong
+
+  /** Run `b` on a sibling driver thread while `a` runs here; returns
+    * both results. The sibling's jobs run under their own job group. If
+    * `a` throws, that group is cancelled (running and future jobs) before
+    * the join, so the failure surfaces without waiting out the sibling.
+    * When both fail, `a`'s exception is thrown with the sibling's
+    * attached via `addSuppressed`. */
   def inParallel[A, B](a: => A, b: => B): (A, B) = {
     val session = SparkSession.getActiveSession.orNull
+    val group = s"graft-overlap-${groups.incrementAndGet()}"
     var bRes: Option[Either[Throwable, B]] = None
     val t = new Thread(() => {
-      // job groups/descriptions are thread-local; the child thread only
-      // needs the active-session binding for code that resolves it
-      // implicitly (frames carry their own session regardless)
-      if (session != null) SparkSession.setActiveSession(session)
-      val r = try Right(b) catch { case e: Throwable => Left(e) }
-      bRes = Some(r)
+      // job groups/descriptions are thread-local (inherited as a copy),
+      // so the group set here tags only the sibling's jobs; the
+      // active-session binding serves code that resolves it implicitly
+      if (session != null) {
+        SparkSession.setActiveSession(session)
+        val sc = session.sparkContext
+        sc.setJobGroup(group, sc.getLocalProperty("spark.job.description"),
+          interruptOnCancel = true)
+      }
+      bRes = Some(try Right(b) catch { case e: Throwable => Left(e) })
     }, "graft-overlap")
     t.setDaemon(true)
     t.start()
     val aRes =
       try a
-      finally t.join() // never leave the sibling build running
+      catch { case e: Throwable =>
+        if (session != null)
+          session.sparkContext.cancelJobGroupAndFutureJobs(group)
+        t.join() // never leave the sibling build running
+        bRes.foreach {
+          case Left(sib) if sib ne e => e.addSuppressed(sib)
+          case _ => ()
+        }
+        throw e
+      }
+    t.join()
     bRes match {
       case Some(Right(r)) => (aRes, r)
       case Some(Left(e)) => throw e

@@ -3523,82 +3523,4 @@ object ExtensionQueries {
         |     END AS INT) AS n_bytes
         |FROM fr ORDER BY doc_id, frame_idx""".stripMargin
   )
-
-  /** Bench-only variants (see SparkEntry.benchQueries): the exact
-    * all-pairs dominance audit probed on a deterministic 10% source
-    * slice — at real scale the audit runs on a sample while the
-    * production operator (knnGraphCells) runs in full; the correctness
-    * gate keeps the exhaustive form. Same 0-row contract. */
-  val benchOverrides: Map[String, Q] = Map(
-    // Bench-only: the three connected-components consumers share ONE
-    // memoized, checkpointed prefix-filter pair table per session
-    // (SharedBenchStages) instead of re-deriving the pair pipeline —
-    // and its internal localCheckpoint — three times. Same plans
-    // downstream of the pair stage; the GATE still runs the plain
-    // self-contained forms. Bench.RunTogether keeps the trio in one
-    // session so the memo actually hits.
-    "dedup_clusters" -> ((s, d) => {
-      Dedup.connectedComponents(SharedBenchStages.prefixPairs(s, d))
-        .orderBy(col("id"))
-    }),
-    "dedup_apply" -> ((s, d) => {
-      Dedup.dropNearDuplicates(t(s, d, "documents"), "doc_id",
-          SharedBenchStages.prefixPairs(s, d))
-        .select(col("doc_id"), col("source"))
-        .orderBy(col("doc_id"))
-    }),
-    "dedup_apply_best" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val weights = TextAnalysis.qualityFrame(docs, "doc_id", "text")
-        .select(col("doc_id"), col("quality"))
-      Dedup.dropNearDuplicatesBest(docs, "doc_id",
-          SharedBenchStages.prefixPairs(s, d), weights, "quality")
-        .select(col("doc_id"), col("source"))
-        .orderBy(col("doc_id"))
-    }),
-    "dedup_soft_weights" -> ((s, d) => {
-      Dedup.softDedupWeights(t(s, d, "documents"), "doc_id",
-          SharedBenchStages.prefixPairs(s, d))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Bench-only: verify the SemDeDup precision contract on the pairs
-    // whose smaller id falls in a deterministic 10% sample — the brute
-    // side then costs |sample|·N comparisons instead of N²/2. The gate
-    // still runs the full audit.
-    "emb_semantic_precision" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val sem = Dedup.cosinePairsSemantic(emb, "vec_id", "embedding",
-          threshold = 0.3, ncells = 8)
-        .filter(pmod(col("id_a"), lit(10)) === 0)
-      val e = emb.repartition(emb.sparkSession.conf
-          .get("spark.sql.shuffle.partitions").toInt)
-        .select(col("vec_id").as("id"),
-          graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
-      val sampled = e.filter(pmod(col("id"), lit(10)) === 0)
-      val brute = sampled.as("a").join(e.as("b"), col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-          graft.functions.VectorFunctions
-            .cosineSimilarity(col("a.v"), col("b.v")).as("cosine"))
-        .filter(col("cosine") >= 0.3)
-      sem.join(brute, Seq("id_a", "id_b"), "left_anti")
-        .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "knn_graph_dominance" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val sampled = emb.filter(pmod(col("vec_id"), lit(10)) === 0)
-      val exact = SimilaritySearch.knnGraphForSources(emb, "vec_id",
-          "embedding", 3, sampled, "vec_id")
-        .select(col("src"), col("rank"), col("score").as("exact_score"))
-      val approx = SimilaritySearch.knnGraphCells(emb, "vec_id",
-          "embedding", 3, ncells = 8)
-        .select(col("src"), col("rank"), col("score").as("approx_score"))
-      approx.join(exact, Seq("src", "rank"))
-        .filter(col("approx_score") > col("exact_score"))
-        .select(col("src"), col("rank"), col("exact_score"),
-          col("approx_score"))
-    })
-  )
 }

@@ -547,72 +547,4 @@ object GraphQueries {
         |round(CAST(spr AS DOUBLE) / 10000.0 / cnt, 4) AS mean_precision
         |FROM m""".stripMargin
   )
-
-  /** Bench-only variant: the gate's graph_beam_recall pays an exact N²
-    * knnGraph to build its edges (the verification baseline); the bench
-    * measures the PRODUCTION configuration — beam search over the
-    * cell-restricted graph ([[SimilaritySearch.knnGraphCells]], per-cell
-    * quadratic), same queries, same hop/beam budget. Output rows are
-    * not gated here (the recall floor belongs to the exact-graph form). */
-  val benchOverrides: Map[String, Q] = Map(
-    // Bench-only: the gate builds its edges with the exact N² knnGraph
-    // (the value oracle replays it); the bench measures the iteration
-    // loops over the PRODUCTION edge build (cell-restricted, per-cell
-    // quadratic). The loop code — the operator under test — is identical.
-    "graph_pagerank" -> ((s, d) => {
-      val edges = SimilaritySearch.knnGraphCells(t(s, d, "embeddings"),
-        "vec_id", "embedding", k = 4, ncells = 8)
-      GraphOps.pageRankInt(edges, "src", "dst", iters = 3)
-        .orderBy(col("id"))
-    }),
-
-    "graph_labelprop" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val edges = SimilaritySearch.knnGraphCells(emb, "vec_id", "embedding",
-        k = 4, ncells = 8)
-      val seeds = emb.select(col("vec_id"),
-        when(col("vec_id") < 50, col("label").cast("long")).as("lbl"))
-      GraphOps.labelPropagate(edges, "src", "dst", seeds, "vec_id", "lbl",
-          iters = 3)
-        .orderBy(col("id"))
-    }),
-
-    // Bench-only (VERDICT r11 #1): the gate forms each pay the exact N²
-    // knnGraph + mutual self-join deliberately (the oracle replays it);
-    // the bench measures the OPERATOR — the bounded simultaneous-peeling
-    // loop — over the production edge build, and the two entries share
-    // ONE mutual-edge stage (SharedBenchStages.mutualKnnEdges) instead
-    // of deriving the same knn + mutual join twice in one session.
-    "graph_kcore" -> ((s, d) => {
-      GraphOps.kCore(SharedBenchStages.mutualKnnEdges(s, d),
-          "src", "dst", k = 2, maxRounds = 8)
-        .orderBy(col("id"))
-    }),
-
-    "graph_kcore_audit" -> ((s, d) => {
-      GraphOps.kCore(SharedBenchStages.mutualKnnEdges(s, d),
-          "src", "dst", k = 2, maxRounds = 8)
-        .filter(col("core_degree") < 2)
-        .orderBy(col("id"))
-    }),
-
-    "graph_beam_recall" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val edges = SimilaritySearch.knnGraphCells(emb, "vec_id", "embedding",
-        k = 8, ncells = 8)
-      val queries = emb.filter(col("vec_id") >= 100 && col("vec_id") < 110)
-        .select(col("vec_id"), col("embedding"))
-      val entries = emb.filter(col("vec_id") < 16).select(col("vec_id"))
-      val beam = GraphOps.beamSearchGraph(emb, "vec_id", "embedding",
-          edges, "src", "dst", queries, "vec_id", "embedding",
-          entries, "vec_id", k = 11, beamWidth = 32, hops = 5)
-        .filter(col("id") =!= col("query_id"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("query_id"))
-        .orderBy(desc("score"), col("id").asc)
-      beam.withColumn("_rk", row_number().over(w))
-        .filter(col("_rk") <= 10)
-        .groupBy("query_id").agg(count(lit(1)).as("hits"))
-    })
-  )
 }

@@ -45,14 +45,7 @@ object PipelineQueries {
     * artifact a crawl pipeline writes to storage between stages; the
     * checkpoint is the single-process stand-in. `rec_idx` rides along
     * for the audit's composite-id checks. */
-  private[graft] def wetRecords(s: SparkSession, d: String): DataFrame =
-    wetPlan(s, d).localCheckpoint()
-
-  /** The un-materialized stage-1 plan — [[wetRecords]] checkpoints it
-    * for the self-contained gate forms; the bench memo
-    * ([[SharedBenchStages.crawlWet]]) checkpoints it ITSELF, so taking
-    * the raw plan there avoids materializing the WET table twice. */
-  private[graft] def wetPlan(s: SparkSession, d: String): DataFrame = {
+  private[graft] def wetRecords(s: SparkSession, d: String): DataFrame = {
     val wet = WebArchive.wetConversion(
       t(s, d, "documents")
         .select(col("doc_id").cast("long").as("doc_id"), col("text"))
@@ -64,6 +57,7 @@ object PipelineQueries {
       .filter(col("warc_type") === "conversion")
       .select(col("doc_id"), col("rec_idx").cast("long").as("rec_idx"),
         col("payload").as("text"))
+      .localCheckpoint()
   }
 
   /** Stages 1-3 (ingest → quality gate → LSH dedup) as one DataFrame —
@@ -117,9 +111,7 @@ object PipelineQueries {
     Dedup.dropNearDuplicates(kept, "doc_id", pairs)
   }
 
-  /** Stage 4: token counting + greedy sequence packing at 512 — shared
-    * by the gate form and the bench override (which differ only in
-    * where the deduped corpus comes from). */
+  /** Stage 4: token counting + greedy sequence packing at 512. */
   private def packStage(uniq: DataFrame): DataFrame = {
     val withTokens = uniq.select(col("doc_id"),
       size(graft.functions.Fingerprints.tokens(col("text")))
@@ -158,9 +150,9 @@ object PipelineQueries {
     }))
 
   /** The audit's four detectors over a stage-1 record table and a
-    * survivor corpus — shared by the gate form (which builds both
-    * itself) and the bench override (which reads the memoized
-    * artifacts). The detectors — exact pair generation, the median
+    * survivor corpus — separate from the gate form so a spec can feed
+    * it corrupted inputs (the live-detector negative control). The
+    * detectors — exact pair generation, the median
     * recompute, the pack structure — are always the audit's OWN work:
     * independence from the pipeline's computation is the point. */
   private[graft] def auditFrame(recs: DataFrame,
@@ -209,27 +201,6 @@ object PipelineQueries {
         .unionByName(vPack)
         .orderBy(col("kind"), col("id_a"), col("id_b"))
   }
-
-  /** Bench-only variants (see `SparkEntry.benchQueries`): the gate
-    * forms above are each self-contained — flagship and audit both
-    * re-run the whole synth→WET→quality→dedup chain, so benching them
-    * separately measures the codec chain and the dedup TWICE per
-    * suite. At production scale the pipeline writes the `*.warc.wet`
-    * product and the curated survivor corpus ONCE and every downstream
-    * consumer — the packer, the invariant auditor — reads the stored
-    * artifact; the [[SharedBenchStages]] memos are the single-process
-    * stand-in (the kcore precedent, VERDICT r11 #1). Only the
-    * ARTIFACTS are shared: the audit's detectors (exact pair
-    * generation, median recompute, pack-structure checks) remain its
-    * own work, so the measured audit cost is the verification cost,
-    * not a second pipeline run. Output-identical to the gate forms —
-    * BenchOverrideSpec pins the equality. */
-  val benchOverrides: Map[String, Q] = Map(
-    "pipeline_crawl_to_pack" -> ((s, d) =>
-      packStage(SharedBenchStages.crawlDeduped(s, d))),
-    "pipeline_crawl_audit" -> ((s, d) =>
-      auditFrame(SharedBenchStages.crawlWet(s, d),
-        SharedBenchStages.crawlDeduped(s, d))))
 
   val oracles: Map[String, String] = Map(
 

@@ -41,34 +41,22 @@ object TrainingQueries {
   /** DSIR feature-hash buckets (must match the oracle SQL literal). */
   private val DsirBuckets = 1024
 
-  // Models are deterministic functions of (corpus, hyperparams) — two
-  // trains yield identical models (hash-ordered k-means init, full-batch
-  // zero-init GD) — so the gate queries that share one share its cache:
-  // a warm model registry, not a correctness shortcut. Keyed by sf dir;
-  // values are driver-sized (1k doubles / 65 doubles).
-  private val pqModels =
-    new java.util.concurrent.ConcurrentHashMap[String, Pq.Model]()
-  private val clsModels =
-    new java.util.concurrent.ConcurrentHashMap[String, Classifier.Model]()
-
   // maxIter 12: the gate contracts hold for ANY codebook (consistency is
   // algebraic, the recall floor is pinned under this exact setting), so
   // paying Lloyd's full convergence tail buys the gate nothing.
-  private def pqModel(s: SparkSession, d: String): Pq.Model =
-    pqModels.computeIfAbsent(d,
-      _ => Pq.train(t(s, d, "embeddings"), "embedding", PqM, PqKsub,
-        maxIter = 12))
+  private def trainPq(s: SparkSession, d: String): Pq.Model =
+    Pq.train(t(s, d, "embeddings"), "embedding", PqM, PqKsub, maxIter = 12)
 
-  private def clsModel(s: SparkSession, d: String): Classifier.Model =
-    clsModels.computeIfAbsent(d, _ => {
-      val emb = t(s, d, "embeddings")
-      val dim = emb.select(size(col("embedding")).as("n"))
-        .filter(col("n") > 0).limit(1).collect().head.getInt(0)
-      Classifier.train(
-        emb.select(col("embedding").as("x"),
-          (col("label") < 5).cast("double").as("y")),
-        "x", "y", dim, lr = ClsLr, iters = ClsIters)
-    })
+  private def trainClassifier(s: SparkSession, d: String)
+      : Classifier.Model = {
+    val emb = t(s, d, "embeddings")
+    val dim = emb.select(size(col("embedding")).as("n"))
+      .filter(col("n") > 0).limit(1).collect().head.getInt(0)
+    Classifier.train(
+      emb.select(col("embedding").as("x"),
+        (col("label") < 5).cast("double").as("y")),
+      "x", "y", dim, lr = ClsLr, iters = ClsIters)
+  }
 
   private def queryVec(s: SparkSession, d: String): Seq[Double] =
     t(s, d, "embeddings").filter(col("vec_id") === 0)
@@ -115,7 +103,7 @@ object TrainingQueries {
     //    two independent code paths. ───────────────────────────────────
     "pq_adc_consistency" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
-      val model = pqModel(s, d)
+      val model = trainPq(s, d)
       val q = queryVec(s, d)
       val enc = Pq.encode(emb, "vec_id", "embedding", model)
       val adc = Pq.adcScores(enc, model, q)
@@ -136,7 +124,7 @@ object TrainingQueries {
     //    PqSpec, the same split as ann_ivf_recall. ──────────────────────
     "pq_recall_floor" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
-      val model = pqModel(s, d)
+      val model = trainPq(s, d)
       val q = queryVec(s, d)
       val enc = Pq.encode(emb, "vec_id", "embedding", model)
       val exact = emb.select(col("vec_id").cast("long").as("id"),
@@ -157,7 +145,7 @@ object TrainingQueries {
     //    analogue of ann_ivf_dominance one compression level down). ─────
     "ann_ivfpq_dominance" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
-      val model = pqModel(s, d)
+      val model = trainPq(s, d)
       val q = queryVec(s, d)
       val k = 10
       val w = org.apache.spark.sql.expressions.Window
@@ -340,7 +328,7 @@ object TrainingQueries {
     //    violations are emitted. Stage populations are data-defined and
     //    pinned in ClassifierSpec. ───────────────────────────────────────
     "curriculum_stages" -> ((s, d) => {
-      val model = clsModel(s, d)
+      val model = trainClassifier(s, d)
       val emb = t(s, d, "embeddings")
       val scored = Classifier.scoreFrame(
         emb.select(col("vec_id"), col("embedding").as("x")), "x", model)
@@ -373,7 +361,7 @@ object TrainingQueries {
     //    dominance is `ann_ivfpq_dominance`. ─────────────────────────────
     "ann_pqindex_topk" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
-      val model = pqModel(s, d)
+      val model = trainPq(s, d)
       val q = queryVec(s, d)
       val k = 10
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_pq_idx_" +
@@ -434,7 +422,7 @@ object TrainingQueries {
     //    The audit frame is MODEL-sized (loss history + one scalar), not
     //    data-sized — built on the driver by design. ────────────────────
     "classifier_train_audit" -> ((s, d) => {
-      val model = clsModel(s, d)
+      val model = trainClassifier(s, d)
       import s.implicits._
       val ascents = model.lossHistory.toSeq.sliding(2).zipWithIndex.collect {
         case (Seq(prev, cur), i) if cur > prev + 1e-12 =>
@@ -981,24 +969,5 @@ object TrainingQueries {
         |    / ((j.cnt_b + 1.0) / (tot.nb + tot.nbins)))) + 0.5) AS BIGINT)
         |  AS psi_micro
         |FROM j CROSS JOIN tot ORDER BY j.bin""".stripMargin
-  )
-
-  /** Bench-only variants (see SparkEntry.benchQueries): the gate form of
-    * `dedup_apply_semantic` runs the brute all-pairs side purely as the
-    * dominance baseline; the bench times the PRODUCTION path (semantic
-    * pairs → CC → survivors) — at real scale the brute baseline runs on
-    * a sample, never the corpus. */
-  val benchOverrides: Map[String, Q] = Map(
-    "dedup_apply_semantic" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      // bounded Lloyd rounds: SemDeDup survivor semantics hold for ANY
-      // clustering (that is the gate's dominance contract), so the bench
-      // measures the production path at the iteration budget a corpus-
-      // scale run would use, not Lloyd's convergence tail.
-      val sem = Dedup.cosinePairsSemantic(emb, "vec_id", "embedding",
-        threshold = 0.3, ncells = 8, maxIter = 12)
-      Dedup.dropNearDuplicates(emb, "vec_id", sem)
-        .agg(count(lit(1)).as("survivors"))
-    })
   )
 }

@@ -1,115 +1,22 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-
-/** The bench-only shared-stage forms (SharedBenchStages memo) must stay
-  * OUTPUT-IDENTICAL to the gate forms they stand in for — the bench is a
-  * measurement of the same computation, not a different computation.
-  * (The sampled audit overrides are exempt by design: they deliberately
-  * probe a slice; these three are full-output swaps.) */
+/** The bench harness has no override forms: it times exactly the gate
+  * catalog, the plans the oracle checks. Also its priors parsing and
+  * contention canary. */
 class BenchOverrideSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
-
-  private def rows(df: DataFrame): Seq[Seq[Any]] =
-    df.collect().map(_.toSeq.map {
-      case d: Double => math.rint(d * 1e9) / 1e9
-      case x => x
-    }.toSeq).toSeq
-
-  test("shared-pair-stage overrides equal the gate forms " +
-      "(dedup_clusters / dedup_apply / dedup_apply_best)") {
-    try {
-      for (name <- Seq("dedup_clusters", "dedup_apply", "dedup_apply_best",
-          "dedup_soft_weights")) {
-        val gate = rows(SparkEntry.queries(name)(spark, sf))
-        val bench = rows(SparkEntry.benchQueries(name)(spark, sf))
-        assert(bench === gate, s"bench override diverged for $name")
-      }
-    } finally {
-      // clear() also unpersists the memo's pinned checkpoint blocks —
-      // this shared test session lives on, and nothing else may drop a
-      // pinned id
-      graft.queries.SharedBenchStages.clear()
-    }
-  }
-
-  test("kcore bench overrides: one shared mutual-edge stage, the " +
-      "fixpoint witness holds on the production edge build too") {
-    try {
-      // the memo is compute-once: both entries must see the SAME
-      // checkpointed table (reference equality — a second derivation
-      // would mean the shared stage isn't shared)
-      val e1 = graft.queries.SharedBenchStages.mutualKnnEdges(spark, sf)
-      val e2 = graft.queries.SharedBenchStages.mutualKnnEdges(spark, sf)
-      assert(e1 eq e2, "mutualKnnEdges must memoize per (session, dir)")
-      // mutual edges are symmetric by construction
-      val asym = e1.as("f").join(e1.as("b"),
-        org.apache.spark.sql.functions.col("f.src") ===
-          org.apache.spark.sql.functions.col("b.dst") &&
-        org.apache.spark.sql.functions.col("f.dst") ===
-          org.apache.spark.sql.functions.col("b.src"), "left_anti")
-      assert(asym.count() === 0L, "mutual edge table must be symmetric")
-
-      val core = SparkEntry.benchQueries("graph_kcore")(spark, sf)
-        .collect()
-      assert(core.nonEmpty, "2-core of the mutual cell graph is empty")
-      assert(core.forall(_.getAs[Long]("core_degree") >= 2L),
-        "every survivor retains >= k in-core neighbors")
-      // the audit form is the 0-row fixpoint witness — it must hold on
-      // the production edges exactly as on the gate's exact edges
-      assert(SparkEntry.benchQueries("graph_kcore_audit")(spark, sf)
-        .count() === 0L)
-    } finally {
-      graft.queries.SharedBenchStages.clear()
-    }
-  }
-
-  test("flagship bench overrides: one shared WET + deduped-corpus " +
-      "artifact pair, output-identical to the self-contained gate " +
-      "forms, audit detectors still 0-row on the stored artifacts") {
-    try {
-      // compute-once: both entries must see the SAME checkpointed
-      // artifacts (reference equality — a second derivation would mean
-      // the shared stage isn't shared)
-      val w1 = graft.queries.SharedBenchStages.crawlWet(spark, sf)
-      val w2 = graft.queries.SharedBenchStages.crawlWet(spark, sf)
-      assert(w1 eq w2, "crawlWet must memoize per (session, dir)")
-      val c1 = graft.queries.SharedBenchStages.crawlDeduped(spark, sf)
-      val c2 = graft.queries.SharedBenchStages.crawlDeduped(spark, sf)
-      assert(c1 eq c2, "crawlDeduped must memoize per (session, dir)")
-      // the packed output from the stored corpus equals the gate form's
-      val gate = rows(
-        SparkEntry.queries("pipeline_crawl_to_pack")(spark, sf))
-      val bench = rows(
-        SparkEntry.benchQueries("pipeline_crawl_to_pack")(spark, sf))
-      assert(bench === gate,
-        "bench override diverged for pipeline_crawl_to_pack")
-      // the audit's detectors run over the stored artifacts and must
-      // find the same nothing the gate form finds
-      assert(SparkEntry.benchQueries("pipeline_crawl_audit")(spark, sf)
-        .count() === 0L,
-        "flagship invariant audit fired on the shared bench artifacts")
-    } finally {
-      graft.queries.SharedBenchStages.clear()
-    }
-  }
-
-  test("catalog key discipline: every bench override and every oracle " +
-      "keys an existing gate query — an orphan override would add an " +
-      "UNGATED bench entry, an orphan oracle a dead driver row") {
+  // an orphan oracle would be a dead driver row; a bench entry outside
+  // the gate catalog would time a plan the oracle never checks
+  test("catalog key discipline: bench suite = gate catalog, every oracle " +
+      "keys it") {
     val qs = SparkEntry.queries.keySet
-    val orphanOverrides = SparkEntry.benchQueries.keySet -- qs
-    assert(orphanOverrides.isEmpty,
-      s"bench overrides without a gate query: $orphanOverrides")
+    assert(Bench.suite(None).map(_._1) === qs.toSeq.sorted,
+      "the bench suite must be the gate catalog, by name")
+    assert(Bench.suite(Some(Set("q1_agg", "no_such_query"))).map(_._1)
+      === Seq("q1_agg"))
     val orphanOracles = SparkEntry.oracleSql.keySet -- qs
     assert(orphanOracles.isEmpty,
       s"oracles without a gate query: $orphanOracles")
-    // and the RunTogether affinity groups must name real bench entries —
-    // a typo would silently drop the co-session guarantee
-    for (g <- Bench.runTogetherNames; n <- g)
-      assert(SparkEntry.benchQueries.contains(n),
-        s"RunTogether names unknown query: $n")
   }
 
   test("priors parsing is per-pair: one malformed numeric token keeps " +

@@ -15,7 +15,7 @@ import org.apache.spark.sql.catalyst.plans.logical.Window
   * semantics), so the risk to manage is a FUTURE query accidentally
   * windowing data-sized input with no key. This allowlist turns that
   * mistake into a named test failure; the harness mains silence the
-  * WindowExec logger (Bench/Verify) because the warning carries no query
+  * WindowExec logger (`LocalSession`) because the warning carries no query
   * name and the gated list is maintained here.
   *
   * Bounded-frame justification per entry:
@@ -72,7 +72,7 @@ class GlobalWindowSpec extends SparkSpec {
 
   test("global (unpartitioned) windows appear ONLY in the allowlisted " +
       "queries, each with its pinned count") {
-    val found = SparkEntry.benchQueries.toSeq.sortBy(_._1).flatMap {
+    val found = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
         val n = fn(spark, sf).queryExecution.optimizedPlan.collect {
           case w: Window if w.partitionSpec.isEmpty => w

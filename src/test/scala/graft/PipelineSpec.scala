@@ -124,4 +124,24 @@ class PipelineSpec extends SparkSpec {
       Pipeline.processFolder(spark, pagesNoKey, emptyKeys, root, "enem")
     }
   }
+
+  test("E1: a failed load releases the pipeline's persisted frames " +
+      "(wrong-dimension vectors into a collection of another dim)") {
+    for (client <- Seq(false, true)) {
+      val root = Files.createTempDirectory("graft_etl_dim").toString
+      VectorCollection.recreate(spark, root, "enem", dim = 32)
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val e = intercept[Exception] {
+        Pipeline.processFolder(spark, TestBooklet.pagesDf(spark),
+          TestBooklet.keysDf(spark), root, "enem", dim = 64,
+          embedder = if (client) Some(new CountingEmbedder(64)) else None)
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("vector dim != declared")),
+        s"expected the dim assertion, got $e")
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+      assert(leaked.isEmpty,
+        s"client=$client: the failed load left persisted RDDs $leaked")
+    }
+  }
 }
