@@ -2,7 +2,7 @@ package graft.etl
 
 import graft.functions.{Fingerprints, TextFunctions => TF}
 import graft.operators.{ExtractPipeline, Pairing}
-import graft.sources.VectorCollection
+import graft.sources.{PdfSource, VectorCollection}
 import graft.stats.LoadStats
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -26,9 +26,8 @@ object Pipeline {
 
   /** E1 from RAW PDF BYTES on disk: scan `pdfDir` with
     * [[graft.sources.PdfSource]] (pure-JVM PdfCodec), split the
-    * inventory into test booklets (PV) and answer keys (GB, page-0 text
-    * — the reference reads its keys from the key PDF's first page,
-    * enem_pdf_extractor.py:959-966), and run [[processFolder]]. The
+    * inventory into test booklets and answer keys
+    * (`PdfSource.bookletsAndKeys`), and run [[processFolder]]. The
     * whole reference flow — directory to vector collection — in one
     * call with no fixture boundary, for the PdfCodec-decodable subset. */
   def processPdfFolder(spark: SparkSession, pdfDir: String,
@@ -36,12 +35,9 @@ object Pipeline {
       statsCsv: Option[String] = None, imagesMode: Boolean = false,
       embedder: Option[Embedder] = None,
       embedBatchSize: Int = 64): LoadReport = {
-    val all = graft.sources.PdfSource.pages(spark, pdfDir)
+    val all = PdfSource.pages(spark, pdfDir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pages = all.filter(TF.kindOf(col("file_name")) === "PV")
-    val keyTexts = all
-      .filter(TF.kindOf(col("file_name")) === "GB" && col("page_idx") === 0)
-      .select(col("file_name"), col("page_text").as("key_text"))
+    val (pages, keyTexts) = PdfSource.bookletsAndKeys(all)
     try processFolder(spark, pages, keyTexts, collectionRoot, collection,
       dim, statsCsv, imagesMode, embedder, embedBatchSize)
     finally { all.unpersist(); () }

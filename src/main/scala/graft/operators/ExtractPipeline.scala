@@ -122,10 +122,4 @@ object ExtractPipeline {
     questions.select(col("year"), col("subject"),
       TF.txtRecord(col("year"), col("question_text"), col("correct_answer"))
         .as("record"))
-
-  /** S5/S6-style partitioned sink (one file tree per (year, subject)). */
-  def writePartitioned(questions: DataFrame, path: String,
-      format: String = "json"): Unit =
-    questions.write.mode("overwrite")
-      .partitionBy("year", "subject").format(format).save(path)
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.DirSwap
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,29 +32,14 @@ object LshIndex {
   private def tablePaths(path: String): Seq[String] =
     Seq(bucketsPath(path), sigsPath(path), fpsPath(path))
 
-  /** Heal an interrupted [[compact]] swap (the
-    * [[graft.sources.VectorCollection]] recovery contract, per table): a
-    * live dir missing while its `._old` backup exists rolls the backup
-    * forward; a stale backup NEXT TO a live dir (crash after the second
-    * rename) is dropped. Called from every read/write entry point, so
-    * no manual recovery step exists. Single-writer assumption as for
-    * the collection. */
+  /** Heal an interrupted [[compact]] swap: one
+    * [[graft.sources.DirSwap.heal]] per table. Called from every
+    * read/write entry point, so no manual recovery step exists. */
   private def healSwaps(spark: SparkSession, path: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     tablePaths(path).foreach { s =>
       val live = new org.apache.hadoop.fs.Path(s)
-      val fs = live.getFileSystem(conf)
-      val bak = new org.apache.hadoop.fs.Path(s + "._old")
-      if (fs.exists(bak)) {
-        if (!fs.exists(live)) {
-          // tolerate a concurrent healer: a lost rename race leaves the
-          // index healthy (the OTHER caller rolled the backup forward),
-          // so only a failed rename with live STILL missing is an error
-          if (!fs.rename(bak, live) && !fs.exists(live))
-            throw new java.io.IOException(
-              s"failed to heal interrupted compact: rename $bak -> $live")
-        } else fs.delete(bak, true)
-      }
+      DirSwap.heal(live.getFileSystem(conf), live)
     }
   }
 
@@ -176,7 +162,7 @@ object LshIndex {
     * candidates dedup; sigs dedup per id in [[probePairs]]) but grows
     * the index and its redundant-candidate work monotonically. compact
     * bounds that: keep-one-per-id rewrites via the temp-then-swap
-    * pattern of [[graft.sources.VectorCollection.compact]] — a failure
+    * of [[graft.sources.DirSwap]] — a failure
     * before a table's swap leaves that table untouched; a failure
     * inside a swap is healed by [[healSwaps]] on the next read. Any
     * copy of a duplicated row is the right copy (all content-derived),
@@ -195,17 +181,7 @@ object LshIndex {
       fs.delete(tmp, true)
       write(rewrite(df), tmp.toString)
       val after = spark.read.parquet(tmp.toString).count()
-      val liveP = new org.apache.hadoop.fs.Path(live)
-      val bak = new org.apache.hadoop.fs.Path(live + "._old")
-      fs.delete(bak, true)
-      def renameOrThrow(a: org.apache.hadoop.fs.Path,
-          b: org.apache.hadoop.fs.Path): Unit =
-        if (!fs.rename(a, b))
-          throw new java.io.IOException(
-            s"index compact swap: rename $a -> $b failed")
-      renameOrThrow(liveP, bak)
-      renameOrThrow(tmp, liveP)
-      fs.delete(bak, true)
+      DirSwap.replace(fs, new org.apache.hadoop.fs.Path(live), tmp)
       (before, after)
     }
     val b = swapIn(bucketsPath(path),

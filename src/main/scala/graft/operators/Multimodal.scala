@@ -99,9 +99,9 @@ object Multimodal {
     *
     * Rows are laid out in a deterministic (size desc, id) order and packed
     * into partitions of ≈`targetBytes` via a global byte prefix sum — the
-    * same two-pass shape as `VectorCollection.assignIds` / `Packing`
-    * (per-partition sums to the driver, O(partitions) traffic, then a
-    * local emit pass; data never leaves its partition until the final
+    * same two-pass shape as `VectorCollection.assignIdsOrdered` /
+    * `Packing` (per-partition sums to the driver, O(partitions) traffic,
+    * then a local emit pass; data never leaves its partition until the final
     * exact bucket→partition placement). Guarantees: a partition's payload
     * stays under targetBytes + its last row's size, and a row larger than
     * targetBytes sits alone. Returns the input columns + `task_bucket`,

@@ -22,12 +22,17 @@ import org.apache.spark.sql.SparkSession
 object Overlap {
   private val groups = new java.util.concurrent.atomic.AtomicLong
 
+  /** How long a failing primary waits for its cancelled sibling. */
+  private val FailureJoinMs = 30000L
+
   /** Run `b` on a sibling driver thread while `a` runs here; returns
     * both results. The sibling's jobs run under their own job group. If
-    * `a` throws, that group is cancelled (running and future jobs) before
-    * the join, so the failure surfaces without waiting out the sibling.
-    * When both fail, `a`'s exception is thrown with the sibling's
-    * attached via `addSuppressed`. */
+    * `a` throws, that group is cancelled (running and future jobs) and
+    * the sibling is joined for at most [[FailureJoinMs]], so the failure
+    * surfaces without waiting out the sibling. A sibling still alive
+    * then (stuck in driver code no job cancel reaches) is interrupted
+    * and a `TimeoutException` rides along via `addSuppressed`; when both
+    * fail, the sibling's exception is attached the same way. */
   def inParallel[A, B](a: => A, b: => B): (A, B) = {
     val session = SparkSession.getActiveSession.orNull
     val group = s"graft-overlap-${groups.incrementAndGet()}"
@@ -51,8 +56,13 @@ object Overlap {
       catch { case e: Throwable =>
         if (session != null)
           session.sparkContext.cancelJobGroupAndFutureJobs(group)
-        t.join() // never leave the sibling build running
-        bRes.foreach {
+        t.join(FailureJoinMs)
+        if (t.isAlive) {
+          t.interrupt()
+          e.addSuppressed(new java.util.concurrent.TimeoutException(
+            s"overlapped build still running ${FailureJoinMs / 1000} s " +
+              "after the primary failed; interrupted"))
+        } else bRes.foreach {
           case Left(sib) if sib ne e => e.addSuppressed(sib)
           case _ => ()
         }

@@ -13,13 +13,14 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * The mapping needs a GLOBAL prefix sum of token counts — the naive form
   * is `sum(tokens) OVER (ORDER BY ...)`, a single-partition window that
   * funnels the whole corpus through one task. This implementation is the
-  * scale form (same two-pass shape as `VectorCollection.assignIds`):
+  * scale form (same two-pass shape as
+  * `VectorCollection.assignIdsOrdered`):
   * range-partitioned sort, one tiny job collecting ONE (partition, sum)
   * row per partition, driver prefix-sums those, then one emit pass adds
   * each partition's offset locally. Data never leaves its partition;
   * driver traffic is O(partitions). Both passes re-execute the same
-  * deterministic sort lineage (the `assignIds` pattern — no cache leaked
-  * into the session's CacheManager).
+  * deterministic sort lineage (the `assignIdsOrdered` pattern — no cache
+  * leaked into the session's CacheManager).
   */
 object Packing {
 

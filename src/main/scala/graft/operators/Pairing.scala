@@ -14,6 +14,14 @@ import org.apache.spark.sql.functions._
   */
 object Pairing {
 
+  /** (file_name, kind, year, day, color) from each file name. */
+  private def classify(files: DataFrame): DataFrame =
+    files.select(col("file_name"),
+      TF.kindOf(col("file_name")).as("kind"),
+      TF.yearOf(col("file_name")).as("year"),
+      TF.dayOf(col("file_name")).as("day"),
+      TF.colorOf(col("file_name")).as("color"))
+
   /** files: one column `file_name`. Returns (file_name, answer_file).
     *
     * The join key includes the year: a folder carrying the same (day,
@@ -23,11 +31,7 @@ object Pairing {
     * matched keys pins that determinism even if a folder ships duplicate
     * keys for one (year, day, color). */
   def pair(files: DataFrame): DataFrame = {
-    val classified = files.select(col("file_name"),
-      TF.kindOf(col("file_name")).as("kind"),
-      TF.yearOf(col("file_name")).as("year"),
-      TF.dayOf(col("file_name")).as("day"),
-      TF.colorOf(col("file_name")).as("color"))
+    val classified = classify(files)
     val tests = classified.filter(col("kind") === "PV")
       .select(col("file_name"), col("year"), col("day"), col("color"))
     val keys = classified.filter(col("kind") === "GB")
@@ -41,11 +45,7 @@ object Pairing {
   /** The reference's abort semantics: any unpaired test ⇒ empty result.
     * Returns the unpaired tests (caller raises if non-empty). */
   def unpairedTests(files: DataFrame): DataFrame = {
-    val classified = files.select(col("file_name"),
-      TF.kindOf(col("file_name")).as("kind"),
-      TF.yearOf(col("file_name")).as("year"),
-      TF.dayOf(col("file_name")).as("day"),
-      TF.colorOf(col("file_name")).as("color"))
+    val classified = classify(files)
     val tests = classified.filter(col("kind") === "PV")
     val keys = classified.filter(col("kind") === "GB")
       .select(col("year"), col("day"), col("color"))

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *  - an upsert batch touches only the buckets its ids hash into: read
   *    those buckets (partition-pruned scan), anti-join the replaced ids,
   *    union the batch, rewrite JUST those bucket directories (temp dir +
-  *    rename swap, crash-safe like `VectorCollection.compact`);
+  *    the crash-safe [[DirSwap]] swap);
   *  - untouched buckets are never read, never written — at 100 TB with
   *    4096 buckets, upserting a 1 GB batch costs ~batch-sized I/O plus the
   *    affected buckets' rewrite, not a collection scan. This is the same
@@ -42,13 +42,11 @@ object BucketedCollection {
       .write.partitionBy("bucket").mode(SaveMode.Overwrite).parquet(path)
   }
 
-  /** Heal a crash inside `upsert`'s per-bucket swap: a `bucket=N._old`
-    * backup whose live sibling is MISSING means the JVM died between the
-    * two renames — roll the backup forward; a backup next to a live dir is
-    * stale (crash after the forward rename) and is dropped. Buckets are
-    * swapped independently, so after healing the collection is a
-    * consistent mix of pre- and post-batch buckets; re-running the same
-    * idempotent upsert batch converges it (documented contract — parquet
+  /** Heal a crash inside `upsert`'s per-bucket swap: one
+    * [[DirSwap.heal]] per `bucket=N._old` backup. Buckets are swapped
+    * independently, so after healing the collection is a consistent mix
+    * of pre- and post-batch buckets; re-running the same idempotent
+    * upsert batch converges it (documented contract — parquet
     * directories have no cross-directory atomic commit without a table
     * format's manifest). */
   private def recoverInterruptedSwap(spark: SparkSession,
@@ -56,18 +54,10 @@ object BucketedCollection {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return
-    fs.listStatus(root).foreach { st =>
-      val nm = st.getPath.getName
-      if (nm.startsWith("bucket=") && nm.endsWith("._old")) {
-        val live = new org.apache.hadoop.fs.Path(root,
-          nm.stripSuffix("._old"))
-        if (!fs.exists(live)) {
-          if (!fs.rename(st.getPath, live))
-            throw new java.io.IOException(
-              s"failed to heal interrupted swap: ${st.getPath} -> $live")
-        } else fs.delete(st.getPath, true)
-      }
-    }
+    fs.listStatus(root).map(_.getPath.getName)
+      .filter(nm => nm.startsWith("bucket=") && nm.endsWith("._old"))
+      .foreach(nm => DirSwap.heal(fs,
+        new org.apache.hadoop.fs.Path(root, nm.stripSuffix("._old"))))
   }
 
   def read(spark: SparkSession, path: String): DataFrame = {
@@ -122,27 +112,17 @@ object BucketedCollection {
       _.join(staged.select(col(idCol)), Seq(idCol), "left_anti")
         .unionByName(staged))
 
-    // Rewrite affected buckets into a temp dir, then swap each directory —
-    // same crash-safety protocol as VectorCollection.compact: a failure
-    // before the renames leaves the collection untouched.
+    // Rewrite affected buckets into a temp dir, then swap each directory
+    // through DirSwap: a failure before the swaps leaves the collection
+    // untouched.
     val tmp = path + "._upsert"
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
     merged.repartition(col("bucket"))
       .write.partitionBy("bucket").mode(SaveMode.Overwrite).parquet(tmp)
     fs.mkdirs(new org.apache.hadoop.fs.Path(path)) // first-ever upsert
     buckets.foreach { b =>
-      val live = new org.apache.hadoop.fs.Path(s"$path/bucket=$b")
-      val fresh = new org.apache.hadoop.fs.Path(s"$tmp/bucket=$b")
-      val bak = new org.apache.hadoop.fs.Path(s"$path/bucket=$b._old")
-      fs.delete(bak, true)
-      def renameOrThrow(a: org.apache.hadoop.fs.Path,
-          c: org.apache.hadoop.fs.Path): Unit =
-        if (!fs.rename(a, c))
-          throw new java.io.IOException(
-            s"upsert swap: rename $a -> $c failed")
-      if (fs.exists(live)) renameOrThrow(live, bak)
-      renameOrThrow(fresh, live)
-      fs.delete(bak, true)
+      DirSwap.replace(fs, new org.apache.hadoop.fs.Path(s"$path/bucket=$b"),
+        new org.apache.hadoop.fs.Path(s"$tmp/bucket=$b"))
     }
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
     UpsertReport(buckets.length, nUpdates - replaced, replaced)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.functions.PdfCodec
+import graft.functions.{PdfCodec, TextFunctions => TF}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,17 +19,29 @@ import org.apache.spark.sql.functions._
   * the [[graft.operators.Multimodal.balancedBySize]] path instead. */
 object PdfSource {
 
-  /** (file_name, page_idx, page_text, has_images, image_names) — one row
-    * per page of every `*.pdf` under `dir`. */
-  def pages(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+  /** The `*.pdf` files under `dir` as (path, content) rows. */
+  private def pdfFiles(spark: SparkSession, dir: String): DataFrame =
     spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.pdf")
       .load(dir)
       .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
+
+  private def fileName(path: String): String =
+    path.substring(path.lastIndexOf('/') + 1)
+
+  /** (file_name, page_idx, page_text, has_images, image_names) — one row
+    * per page of every `*.pdf` under `dir`. */
+  def pages(spark: SparkSession, dir: String): DataFrame =
+    decodePages(pdfFiles(spark, dir))
+
+  /** The page decode behind [[pages]], over any (path, content) rows —
+    * the batch listing above or a streaming `binaryFile` micro-batch. */
+  def decodePages(files: DataFrame): DataFrame = {
+    val spark = files.sparkSession
+    import spark.implicits._
+    files.as[(String, Array[Byte])]
       .flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
+        val name = fileName(path)
         PdfCodec.extractPages(bytes).map(p =>
           (name, p.pageIdx, p.text, p.hasImages, p.imageNames))
       }
@@ -37,19 +49,27 @@ object PdfSource {
         "image_names")
   }
 
+  /** Split decoded pages into test-booklet pages (PV) and answer-key
+    * texts (GB, page-0 text — the reference reads its keys from the key
+    * PDF's first page, enem_pdf_extractor.py:959-966): returns
+    * (pages, keyTexts(file_name, key_text)), the inputs of
+    * `ExtractPipeline.extract`. */
+  def bookletsAndKeys(pages: DataFrame): (DataFrame, DataFrame) =
+    (pages.filter(TF.kindOf(col("file_name")) === "PV"),
+      pages.filter(TF.kindOf(col("file_name")) === "GB" &&
+          col("page_idx") === 0)
+        .select(col("file_name"), col("page_text").as("key_text")))
+
   /** (file_name, page_idx, image_name, filter, image_bytes) — one row per
     * image XObject; DCTDecode payloads are writable .jpg files as-is
     * (pair with [[graft.operators.Multimodal.writeBinaryFiles]] for the
     * reference's one-PNG-per-page-image sink). */
   def images(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.pdf")
-      .load(dir)
-      .select(col("path"), col("content"))
+    pdfFiles(spark, dir)
       .as[(String, Array[Byte])]
       .flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
+        val name = fileName(path)
         PdfCodec.extractImages(bytes).map(im =>
           (name, im.pageIdx, im.name, im.filter, im.bytes))
       }

@@ -11,11 +11,12 @@ import org.apache.spark.sql.functions._
   * ano INT)`.
   *
   * Scale notes:
-  *  - `assignIds` uses per-partition offsets (zipWithIndex semantics) —
-  *    NOT a global row_number window, which would funnel 100 TB through a
-  *    single partition. Ids are (offset + dense enumeration), matching the
-  *    reference's running-count ids (qdrant_text_loader.py:189-210) without
-  *    a driver loop.
+  *  - `assignIdsOrdered` uses per-partition offsets (zipWithIndex
+  *    semantics) over a range-partitioned sort — NOT a global row_number
+  *    window, which would funnel 100 TB through a single partition. Ids
+  *    are (offset + dense enumeration), matching the reference's
+  *    running-count ids (qdrant_text_loader.py:189-210) without a driver
+  *    loop.
   *  - append is idempotent per batch directory; `count()` after write is
   *    the reference's status-check reconciliation (:222, :306).
   */
@@ -75,31 +76,14 @@ object VectorCollection {
     create(spark, root, name, dim)
   }
 
-  /** `compact`'s directory swap (live → `._old`, tmp → live) has a crash
-    * window in which the live path is briefly absent while the data sits
-    * intact in `._old`. Readers heal it: if the live dir is missing but a
-    * backup exists, roll the backup forward before reading; a leftover
-    * backup NEXT TO a live dir (crash after the second rename) is stale
-    * and is dropped. Called from `read` and `compact`, so no manual
-    * recovery step exists. */
-  /** Single-writer assumption (standard for bare parquet directories —
-    * cross-process atomicity needs a table format's manifest): no reader
-    * heals WHILE a compact is mid-swap in another process. Rename results
-    * are checked — a false return here means the filesystem refused the
-    * heal and silently proceeding could misclassify the backup as stale
-    * on a later pass. */
+  /** Heal a crash inside `compact`'s swap ([[DirSwap.heal]]). Called
+    * from `read`, `append` and `compact`, so no manual recovery step
+    * exists. */
   private def recoverInterruptedSwap(spark: SparkSession, root: String,
       name: String): Unit = {
     val dir = new org.apache.hadoop.fs.Path(path(root, name))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bak = new org.apache.hadoop.fs.Path(path(root, name) + "._old")
-    if (fs.exists(bak)) {
-      if (!fs.exists(dir)) {
-        if (!fs.rename(bak, dir))
-          throw new java.io.IOException(
-            s"failed to heal interrupted swap: rename $bak -> $dir")
-      } else fs.delete(bak, true)
-    }
+    DirSwap.heal(dir.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      dir)
   }
 
   def read(spark: SparkSession, root: String, name: String): DataFrame = {
@@ -109,21 +93,6 @@ object VectorCollection {
 
   def count(spark: SparkSession, root: String, name: String): Long =
     read(spark, root, name).count()
-
-  /** Dense sequential ids continuing from `offset` in partition order —
-    * zipWithIndex semantics: one count pass + one emit pass, no
-    * single-partition funnel (W2 scale form). */
-  def assignIds(points: DataFrame, offset: Long): DataFrame = {
-    val spark = points.sparkSession
-    val schema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType, nullable = false) +:
-        points.schema.fields)
-    val rdd = points.rdd.zipWithIndex().map { case (row, i) =>
-      org.apache.spark.sql.Row.fromSeq((i + offset) +: row.toSeq)
-    }
-    spark.createDataFrame(rdd, schema)
-  }
 
   /** Ordered, deterministic id assignment: global sort then dense ids.
     * Matches the reference's enumeration order semantics exactly; the
@@ -202,7 +171,7 @@ object VectorCollection {
     * only after success, so a crashed compaction never loses the
     * collection: a failure before the swap leaves the live dir untouched,
     * and a failure INSIDE the swap (live renamed away, tmp not yet renamed
-    * in) is healed by `recoverInterruptedSwap` on the next read/compact —
+    * in) is healed by [[DirSwap.heal]] on the next read/append/compact —
     * the data is never absent AND unrecoverable. Returns
     * (filesBefore, filesAfter). */
   def compact(spark: SparkSession, root: String, name: String,
@@ -223,15 +192,7 @@ object VectorCollection {
     read(spark, root, name).repartition(nFiles)
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     val after = partFiles(tmp)
-    val bak = new org.apache.hadoop.fs.Path(path(root, name) + "._old")
-    fs.delete(bak, true)
-    def renameOrThrow(a: org.apache.hadoop.fs.Path,
-        b: org.apache.hadoop.fs.Path): Unit =
-      if (!fs.rename(a, b))
-        throw new java.io.IOException(s"compact swap: rename $a -> $b failed")
-    renameOrThrow(dir, bak)
-    renameOrThrow(tmp, dir)
-    fs.delete(bak, true)
+    DirSwap.replace(fs, dir, tmp)
     (before, after)
   }
 

@@ -14,10 +14,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object DocIngest {
 
-  /** Stream parquet document batches from `inDir`, hash-embed, append to
-    * the collection dir. Each file is processed once per the checkpoint,
-    * but the blind append leaves an at-least-once window on crash-replay —
-    * `startIdempotent` is the exactly-once form. */
+  /** Stream parquet document batches from `inDir`, hash-embed, and
+    * commit each micro-batch to the collection dir exactly once through
+    * [[commitBatch]]. */
   def start(spark: SparkSession, inDir: String, schema: String,
       collectionPath: String, checkpoint: String, dim: Int = 64,
       pollInterval: String = "1 second"): StreamingQuery =
@@ -29,7 +28,7 @@ object DocIngest {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime(pollInterval))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("append").parquet(collectionPath)
+        commitBatch(batch, batchId, collectionPath); ()
       }
       .start()
 
@@ -119,10 +118,9 @@ object DocIngest {
     * per-subject totals maintained in explicit keyed state with
     * mapGroupsWithState, emitting the updated running total once per
     * subject per micro-batch. State is one long per key — bounded by the
-    * subject domain, no watermark needed. Sink is a blind append —
-    * AT-LEAST-ONCE under crash replay (a replayed batch re-emits the
-    * same rows); production routes through [[commitBatch]] like
-    * [[startWatermarkDedup]]. */
+    * subject domain, no watermark needed. Each micro-batch commits once
+    * through [[commitBatchStateful]], so a replayed batch re-emits
+    * nothing. */
   def runningCounts(spark: SparkSession, inDir: String, schema: String,
       outDir: String, checkpoint: String): StreamingQuery = {
     import spark.implicits._
@@ -145,9 +143,8 @@ object DocIngest {
       .option("checkpointLocation", checkpoint)
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id",
-            org.apache.spark.sql.functions.lit(batchId))
-          .write.mode("append").parquet(outDir)
+        commitBatchStateful(batch.withColumn("batch_id", lit(batchId)),
+          batchId, outDir); ()
       }
       .start()
   }
@@ -162,8 +159,8 @@ object DocIngest {
     * unbounded stream; the default (no timeout) keeps the query testable
     * with `processAllAvailable`, which never settles once wall-clock
     * timeouts keep scheduling no-data batches. Emitted rows match the
-    * batch rollup's columns. Sink is a blind append — at-least-once
-    * under crash replay; production routes through [[commitBatch]]. */
+    * batch rollup's columns. Each micro-batch commits once through
+    * [[commitBatchStateful]]. */
   def sessionize(spark: SparkSession, inDir: String, schema: String,
       outDir: String, checkpoint: String, gapSeconds: Long = 1800L,
       idleTimeout: Option[String] = None): StreamingQuery = {
@@ -218,7 +215,7 @@ object DocIngest {
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("append").parquet(outDir)
+        commitBatchStateful(batch, batchId, outDir); ()
       }
       .start()
   }
@@ -228,8 +225,8 @@ object DocIngest {
     * already exists. Returns true if this call wrote the batch, false if a
     * previous attempt already had.
     *
-    * This closes the at-least-once window of a blind `mode("append")`
-    * foreachBatch sink: if the job dies between the sink write and the
+    * This closes the at-least-once window of a blind-append foreachBatch
+    * sink: if the job dies between the sink write and the
     * checkpoint commit, Structured Streaming replays the batch with the
     * SAME batchId — the replay finds the directory and writes nothing, so
     * the sink is exactly-once end-to-end. Readers see the collection as
@@ -275,23 +272,6 @@ object DocIngest {
     if (!wrote) batch.write.format("noop").mode("overwrite").save()
     wrote
   }
-
-  /** `start` with the exactly-once sink — the form a production ingest
-    * runs (the plain append in `start` documents the basic shape). */
-  def startIdempotent(spark: SparkSession, inDir: String, schema: String,
-      collectionPath: String, checkpoint: String, dim: Int = 64,
-      pollInterval: String = "1 second"): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(inDir)
-      .withColumn("vector", Fingerprints.hashEmbed(col("text"), dim))
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(pollInterval))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitBatch(batch, batchId, collectionPath); ()
-      }
-      .start()
 
   /** Stream-static enrichment: join each micro-batch against a static
     * dimension (broadcast — the dim is read once per batch from its
@@ -586,55 +566,8 @@ object DocIngest {
       }
       .start()
 
-  /** Streaming curation gate: score every arriving document with a
-    * pre-trained quality classifier (over the same hash-embedding the
-    * batch pipeline uses) AND a DSIR importance weight, then route it —
-    * accepted docs append to `acceptDir`, rejected to `rejectDir`, BOTH
-    * carrying the (score, weight_micro) audit columns so the decision
-    * is replayable. Both sinks are blind appends — at-least-once under
-    * crash replay ([[startCurationGatedIdempotent]] is the
-    * exactly-once form, routing both sinks through [[commitBatch]]).
-    * The streaming form of the batch curation pipeline:
-    * the models are frozen driver-side artifacts (dim+1 doubles, B
-    * longs) that ride the task closure, the per-batch work is two
-    * stateless one-pass kernels (`Classifier.scoreFrame`,
-    * `Dsir.importanceWeights`) plus a broadcast-sized join on id — no
-    * state store, no shuffle of text beyond the id join, so the gate's
-    * per-batch cost is O(batch) at any corpus size. Deterministic:
-    * replaying a batch reproduces byte-identical decisions (hash
-    * embedding, frozen models, no RNG).
-    *
-    * NULL-text rows are routed to `rejectDir` with NULL (score,
-    * weight_micro) audit columns BEFORE scoring: letting them reach
-    * `Classifier.scoreFrame`'s dim require (or Dsir's tokenizer) would
-    * fail the batch, and a streaming restart replays the same batch —
-    * a poison pill that wedges the query forever. A NULL audit column
-    * is the replayable record that the signal FAILED to compute, which
-    * is itself a rejection reason. */
-  def startCurationGated(spark: SparkSession, inDir: String, schema: String,
-      acceptDir: String, rejectDir: String, checkpoint: String,
-      model: graft.operators.Classifier.Model, ratioMicro: Array[Long],
-      minScore: Double, minWeightMicro: Long, idCol: String = "doc_id",
-      dim: Int = 64, pollInterval: String = "1 second"): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(pollInterval))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val (accepted, rejected) = curationDecide(batch, model,
-            ratioMicro, minScore, minWeightMicro, idCol, dim)
-          accepted.write.mode("append").parquet(acceptDir)
-          rejected.write.mode("append").parquet(rejectDir)
-        }
-        ()
-      }
-      .start()
-
-  /** One micro-batch's curation decision — the kernel both gate forms
-    * share: score clean rows (frozen classifier over the hash
+  /** One micro-batch's curation decision — the gate's kernel: score
+    * clean rows (frozen classifier over the hash
     * embedding + DSIR importance weight), route NULL-text rows
     * straight to reject with NULL audit columns (they cannot be
     * scored; failing the batch would poison-pill the stream — see
@@ -673,17 +606,35 @@ object DocIngest {
         .unionByName(invalid))
   }
 
-  /** [[startCurationGated]] with the exactly-once sink composition —
-    * the form a production gate runs (the blind-append demo above
-    * documents the basic shape and stays layout-stable for its specs).
-    * Each micro-batch commits ONCE per sink via [[commitBatch]]'s
-    * `batch=<id>` rename protocol, so a crash between the sink writes
-    * and the checkpoint commit cannot double-append on replay: the
-    * replayed batch recomputes the SAME deterministic decisions, finds
-    * whichever `batch=<id>` directories already exist, and writes only
-    * the missing one(s). Readers see each sink as ordinary partitioned
-    * parquet. */
-  def startCurationGatedIdempotent(spark: SparkSession, inDir: String,
+  /** Streaming curation gate: score every arriving document with a
+    * pre-trained quality classifier (over the same hash-embedding the
+    * batch pipeline uses) AND a DSIR importance weight, then route it —
+    * accepted docs append to `acceptDir`, rejected to `rejectDir`, BOTH
+    * carrying the (score, weight_micro) audit columns so the decision
+    * is replayable. Each micro-batch commits ONCE per sink via
+    * [[commitBatch]]'s `batch=<id>` rename protocol, so a crash between
+    * the sink writes and the checkpoint commit cannot double-append on
+    * replay: the replayed batch recomputes the SAME deterministic
+    * decisions, finds whichever `batch=<id>` directories already exist,
+    * and writes only the missing one(s).
+    * The streaming form of the batch curation pipeline:
+    * the models are frozen driver-side artifacts (dim+1 doubles, B
+    * longs) that ride the task closure, the per-batch work is two
+    * stateless one-pass kernels (`Classifier.scoreFrame`,
+    * `Dsir.importanceWeights`) plus a broadcast-sized join on id — no
+    * state store, no shuffle of text beyond the id join, so the gate's
+    * per-batch cost is O(batch) at any corpus size. Deterministic:
+    * replaying a batch reproduces byte-identical decisions (hash
+    * embedding, frozen models, no RNG).
+    *
+    * NULL-text rows are routed to `rejectDir` with NULL (score,
+    * weight_micro) audit columns BEFORE scoring: letting them reach
+    * `Classifier.scoreFrame`'s dim require (or Dsir's tokenizer) would
+    * fail the batch, and a streaming restart replays the same batch —
+    * a poison pill that wedges the query forever. A NULL audit column
+    * is the replayable record that the signal FAILED to compute, which
+    * is itself a rejection reason. */
+  def startCurationGated(spark: SparkSession, inDir: String,
       schema: String, acceptDir: String, rejectDir: String,
       checkpoint: String, model: graft.operators.Classifier.Model,
       ratioMicro: Array[Long], minScore: Double, minWeightMicro: Long,
@@ -710,7 +661,8 @@ object DocIngest {
     * is PSI-compared against a FROZEN reference histogram (the
     * `Drift.projectionHistogram` of the corpus the thresholds were
     * tuned on), and one (batch_id, n_vectors, psi_micro, top_bin,
-    * top_bin_psi_micro) report row is appended per batch — the alarm
+    * top_bin_psi_micro) report row is committed once per batch through
+    * [[commitBatch]] — the alarm
     * feed a continuously-ingesting pipeline tails to notice a crawl or
     * embedder change BEFORE it pollutes the index. Per batch: one
     * kernel pass over the batch (sign row in the closure), a ≤-bins
@@ -744,11 +696,11 @@ object DocIngest {
           val total = contribs.map(_._2).sum
           val (topBin, topPsi) =
             if (contribs.isEmpty) (0, 0L) else contribs.maxBy(_._2)
-          Seq((batchId, hist.values.sum, total, topBin, topPsi))
+          val report = Seq((batchId, hist.values.sum, total, topBin, topPsi))
             .toDF("batch_id", "n_vectors", "psi_micro", "top_bin",
               "top_bin_psi_micro")
             .coalesce(1)
-            .write.mode("append").parquet(reportDir)
+          commitBatch(report, batchId, reportDir)
         }
         ()
       }
@@ -756,34 +708,14 @@ object DocIngest {
   }
 
   /** Stateful variant: drop exact duplicates across the whole stream by
-    * content fingerprint (dropDuplicates with state). Blind-append sink —
-    * at-least-once under crash replay; [[startDedupedIdempotent]] is the
-    * exactly-once form (the demo shape here stays layout-stable for its
-    * specs). */
-  def startDeduped(spark: SparkSession, inDir: String, schema: String,
-      collectionPath: String, checkpoint: String, dim: Int = 64): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(inDir)
-      .withColumn("fp", Fingerprints.md5Fingerprint(col("text")))
-      .dropDuplicates("fp")
-      .withColumn("vector", Fingerprints.hashEmbed(col("text"), dim))
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("append").parquet(collectionPath)
-      }
-      .start()
-
-  /** [[startDeduped]] with the exactly-once sink composition (VERDICT
-    * r15 #6, continuing the curation-gate precedent): the stream-wide
-    * exact-dedup gate commits each micro-batch ONCE via [[commitBatch]]'s
-    * `batch=<id>` rename protocol. A crash between the sink write and
+    * content fingerprint (dropDuplicates with state), committing each
+    * micro-batch ONCE via [[commitBatchStateful]]'s `batch=<id>` rename
+    * protocol. A crash between the sink write and
     * the checkpoint commit replays the batch against the SAME state-store
     * version (the dropDuplicates state rolls back with the checkpoint),
     * so the replay recomputes identical survivors and the rename
     * protocol fills only what the sink is missing — no double-append. */
-  def startDedupedIdempotent(spark: SparkSession, inDir: String,
+  def startDeduped(spark: SparkSession, inDir: String,
       schema: String, collectionPath: String, checkpoint: String,
       dim: Int = 64): StreamingQuery =
     spark.readStream
@@ -848,7 +780,7 @@ object DocIngest {
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("append").parquet(outDir)
+        commitBatchStateful(batch, batchId, outDir); ()
       }
       .start()
   }

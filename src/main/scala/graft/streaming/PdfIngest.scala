@@ -1,7 +1,7 @@
 package graft.streaming
 
-import graft.functions.{PdfCodec, TextFunctions => TF}
-import graft.operators.{AnswerKey, ExtractPipeline, Pairing}
+import graft.operators.{ExtractPipeline, Pairing}
+import graft.sources.PdfSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -59,23 +59,10 @@ object PdfIngest {
   /** The batch kernel, shared with tests: (path, content) rows → the
     * question-record DataFrame of `ExtractPipeline.extract`. */
   private[streaming] def extractBatch(files: DataFrame): DataFrame = {
-    val spark = files.sparkSession
-    import spark.implicits._
-    val pages = files.as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        PdfCodec.extractPages(bytes).map(p =>
-          (name, p.pageIdx, p.text, p.hasImages, p.imageNames))
-      }
-      .toDF("file_name", "page_idx", "page_text", "has_images",
-        "image_names")
+    val pages = PdfSource.decodePages(files)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val pv = pages.filter(TF.kindOf(col("file_name")) === "PV")
-      val keyTexts = pages
-        .filter(TF.kindOf(col("file_name")) === "GB" &&
-          col("page_idx") === 0)
-        .select(col("file_name"), col("page_text").as("key_text"))
+      val (pv, keyTexts) = PdfSource.bookletsAndKeys(pages)
       val inventory = pv.select(col("file_name"))
         .union(keyTexts.select(col("file_name"))).distinct()
       // continuous form: unpaired booklets drop out of THIS batch

@@ -43,4 +43,22 @@ class OverlapSpec extends SparkSpec {
         System.nanoTime() < deadline) Thread.sleep(50)
     assert(sc.statusTracker.getActiveJobIds().isEmpty)
   }
+
+  test("primary fails while the sibling sleeps in plain driver code: the " +
+      "join is bounded, the sibling is interrupted, and the failure " +
+      "carries a suppressed TimeoutException") {
+    spark
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException] {
+      Overlap.inParallel[Unit, Unit](
+        throw new IllegalStateException("primary"),
+        Thread.sleep(180000L)) // no Spark job: the group cancel cannot reach it
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(e.getMessage === "primary")
+    // the bound is 30 s; the sibling's 180 s would blow well past this
+    assert(secs < 60.0, s"primary failure took $secs s to surface")
+    assert(e.getSuppressed.toSeq.exists(
+      _.isInstanceOf[java.util.concurrent.TimeoutException]))
+  }
 }

@@ -378,7 +378,7 @@ class StreamingSpec extends SparkSpec {
 
     Seq((0L, "doc zero"), (1L, "doc one"))
       .toDF("doc_id", "text").write.mode("append").parquet(in)
-    val q = DocIngest.startIdempotent(spark, in, schema, out, ckpt, dim = 16,
+    val q = DocIngest.start(spark, in, schema, out, ckpt, dim = 16,
       pollInterval = "200 milliseconds")
     try q.processAllAvailable() finally q.stop()
     assert(spark.read.parquet(out).count() === 2)
@@ -418,7 +418,7 @@ class StreamingSpec extends SparkSpec {
 
     def runOnce(): Unit = {
       val ckpt = Files.createTempDirectory("graft_curidem_ck").toString
-      val q = DocIngest.startCurationGatedIdempotent(spark, in, schema,
+      val q = DocIngest.startCurationGated(spark, in, schema,
         acc, rej, ckpt, model, ratio, minScore = 0.5, minWeightMicro = 1L,
         dim = dim, pollInterval = "200 milliseconds")
       try q.processAllAvailable() finally q.stop()
@@ -460,7 +460,7 @@ class StreamingSpec extends SparkSpec {
 
     def runOnce(): Unit = {
       val ckpt = Files.createTempDirectory("graft_dedidem_ck").toString
-      val q = DocIngest.startDedupedIdempotent(spark, in, schema, out,
+      val q = DocIngest.startDeduped(spark, in, schema, out,
         ckpt, dim = 16)
       try q.processAllAvailable() finally q.stop()
     }
@@ -1287,5 +1287,66 @@ class StreamingSpec extends SparkSpec {
     try q2.processAllAvailable() finally q2.stop()
     assert(spark.read.parquet(out)
       .filter(col("subject") === "math").count() === 35L)
+  }
+
+  test("runningCounts, sessionize, scd2Stream and the drift monitor " +
+      "commit each batch once: a restart on a fresh checkpoint over the " +
+      "same input leaves their output unchanged") {
+    import graft.operators.Drift
+    import org.apache.spark.sql.streaming.StreamingQuery
+    import spark.implicits._
+    def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
+    // rows as sorted strings, so a duplicated row shows (a set would not)
+    val changed = Seq.newBuilder[String]
+    def replayUnchanged(name: String, in: String,
+        start: (String, String) => StreamingQuery): Unit = {
+      val out = tmp("graft_replay_out") + "/sink"
+      def runOnce(): Seq[String] = {
+        val q = start(out, tmp("graft_replay_ck"))
+        try q.processAllAvailable() finally q.stop()
+        spark.read.parquet(out).collect().map(_.mkString("|")).toSeq.sorted
+      }
+      val first = runOnce()
+      assert(first.nonEmpty, s"$name emitted nothing")
+      if (runOnce() != first) changed += name
+    }
+
+    val counts = tmp("graft_replay_rc")
+    Seq("math", "math", "natu").toDF("subject").coalesce(1)
+      .write.mode("append").parquet(counts)
+    replayUnchanged("runningCounts", counts, (out, ck) =>
+      DocIngest.runningCounts(spark, counts, "subject STRING", out, ck))
+
+    // user 1's gap closes one session inside the single batch
+    val events = tmp("graft_replay_sess")
+    Seq((1L, 1000L, 1.0), (1L, 1600L, 2.0), (1L, 9000L, 3.0),
+        (2L, 5000L, 5.0))
+      .toDF("user_id", "ts", "value").coalesce(1).write.mode("append").parquet(events)
+    replayUnchanged("sessionize", events, (out, ck) =>
+      DocIngest.sessionize(spark, events,
+        "user_id LONG, ts LONG, value DOUBLE", out, ck, gapSeconds = 1800L))
+
+    // the B row closes version 1 (A)
+    val attrs = tmp("graft_replay_scd")
+    Seq((1L, new java.sql.Timestamp(100000L), "A"),
+        (1L, new java.sql.Timestamp(300000L), "B"))
+      .toDF("user_id", "ts", "event_type").coalesce(1).write.mode("append").parquet(attrs)
+    replayUnchanged("scd2Stream", attrs, (out, ck) =>
+      DocIngest.scd2Stream(spark, attrs,
+        "user_id LONG, ts TIMESTAMP, event_type STRING", out, ck))
+
+    val vecs = tmp("graft_replay_drift")
+    val mk = (0 until 50).map(i => (i.toLong,
+        Seq(i % 7 / 7.0, 1.0, -0.5, 0.25)))
+      .toDF("vec_id", "embedding")
+    mk.coalesce(1).write.mode("append").parquet(vecs)
+    val refHist = Drift.projectionHistogram(mk, "embedding", 4,
+        probe = 0, invWidth = 4)
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    replayUnchanged("startDriftMonitored", vecs, (out, ck) =>
+      DocIngest.startDriftMonitored(spark, vecs,
+        "vec_id LONG, embedding ARRAY<DOUBLE>", out, ck, refHist,
+        "embedding", 4))
+    assert(changed.result() === Nil, "sinks whose output changed on replay")
   }
 }
