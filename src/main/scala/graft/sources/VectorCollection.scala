@@ -1,8 +1,12 @@
 package graft.sources
 
 import graft.functions.VectorFunctions
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Parquet-backed vector collection — the engine's Qdrant
   * (qdrant_text_loader.py S8-S10, W2, K1): create/recreate, id-offset
@@ -19,22 +23,28 @@ import org.apache.spark.sql.functions._
   *    loop.
   *  - append is idempotent per batch directory; `count()` after write is
   *    the reference's status-check reconciliation (:222, :306).
+  *  - every file is read with the declared [[Schema]], so planning a read
+  *    launches no schema-inference job.
+  *  - `search` scores a persisted snapshot of the collection (see
+  *    [[search]]); `read` and `count` never use it.
   */
 object VectorCollection {
+
+  /** The collection's row type, declared once: `create` writes it and
+    * every read of the collection's files uses it. */
+  val Schema: StructType = StructType(Seq(
+    StructField("id", LongType, nullable = false),
+    StructField("vector", ArrayType(DoubleType, containsNull = false)),
+    StructField("page_content", StringType),
+    StructField("materia", StringType),
+    StructField("ano", IntegerType)))
 
   def path(root: String, name: String): String = s"$root/$name"
 
   def create(spark: SparkSession, root: String, name: String,
       dim: Int): Unit = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("vector", ArrayType(DoubleType, containsNull = false)),
-      StructField("page_content", StringType),
-      StructField("materia", StringType),
-      StructField("ano", IntegerType)))
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        schema)
+        Schema)
       .write.mode(SaveMode.ErrorIfExists).parquet(path(root, name))
     // record the declared dimensionality in a SIBLING sidecar (inside
     // the dir it would not survive compact's directory swap); append
@@ -44,6 +54,7 @@ object VectorCollection {
     val fs = sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(sidecar, true)
     try out.write(dim.toString.getBytes("UTF-8")) finally out.close()
+    dropSnapshot(spark, root, name)
   }
 
   /** The collection's declared dim from the create-time sidecar; None
@@ -88,7 +99,7 @@ object VectorCollection {
 
   def read(spark: SparkSession, root: String, name: String): DataFrame = {
     recoverInterruptedSwap(spark, root, name)
-    spark.read.parquet(path(root, name))
+    spark.read.schema(Schema).parquet(path(root, name))
   }
 
   def count(spark: SparkSession, root: String, name: String): Long =
@@ -154,12 +165,13 @@ object VectorCollection {
     checked.observe(obs, org.apache.spark.sql.functions
         .count(org.apache.spark.sql.functions.lit(1)).as("attempted"))
       .write.mode(SaveMode.Append).parquet(path(root, name))
+    dropSnapshot(spark, root, name)
     val attempted = obs.get("attempted").asInstanceOf[Long]
     val newFiles = (partFiles() -- before).toSeq.sorted
       .map(n => s"${path(root, name)}/$n")
     val added =
       if (newFiles.isEmpty) 0L
-      else spark.read.parquet(newFiles: _*).count()
+      else spark.read.schema(Schema).parquet(newFiles: _*).count()
     (attempted, added)
   }
 
@@ -193,17 +205,85 @@ object VectorCollection {
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     val after = partFiles(tmp)
     DirSwap.replace(fs, dir, tmp)
+    dropSnapshot(spark, root, name)
     (before, after)
   }
 
+  /** A persisted `(id, vector, page_content, materia, ano, norm)` frame
+    * of one collection, valid while the directory listing it was built
+    * from — (file name, length, mtime) per entry — is unchanged. */
+  private final case class Snapshot(sc: SparkContext,
+      listing: Seq[(String, Long, Long)], frame: DataFrame)
+
+  /** One snapshot per qualified collection path. Concurrent: `Overlap`
+    * runs searches from two driver threads. */
+  private val snapshots =
+    new java.util.concurrent.ConcurrentHashMap[String, Snapshot]()
+
+  private def qualifiedDir(spark: SparkSession, root: String,
+      name: String): (FileSystem, Path) = {
+    val dir = new Path(path(root, name))
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (fs, fs.makeQualified(dir))
+  }
+
+  private def release(s: Snapshot): Unit =
+    if (!s.sc.isStopped) s.frame.unpersist()
+
+  /** Release the collection's snapshot; every write through this object
+    * calls it after writing. A writer outside it is caught by the
+    * listing check in [[snapshot]]. */
+  private def dropSnapshot(spark: SparkSession, root: String,
+      name: String): Unit =
+    Option(snapshots.remove(qualifiedDir(spark, root, name)._2.toString))
+      .foreach(release)
+
+  /** The collection's scoring frame: the held snapshot when its listing
+    * and SparkContext still match, else a fresh one. A fresh snapshot is
+    * persisted lazily, so the search that builds it also fills it. The
+    * listing is taken BEFORE the frame is planned: a write in between
+    * leaves the key older than the data, so the next search rebuilds
+    * instead of serving stale rows. The `norm` column keeps the cached
+    * plan from matching a plain [[read]], which Spark's cache manager
+    * would otherwise answer from the snapshot. */
+  private def snapshot(spark: SparkSession, root: String,
+      name: String): DataFrame = {
+    recoverInterruptedSwap(spark, root, name)
+    val (fs, dir) = qualifiedDir(spark, root, name)
+    val listing = fs.listStatus(dir).toSeq
+      .map(s => (s.getPath.getName, s.getLen, s.getModificationTime)).sorted
+    snapshots.compute(dir.toString, (_, old) =>
+      if (old != null && (old.sc eq spark.sparkContext) &&
+          old.listing == listing) old
+      else {
+        // release first: persisting a plan the cache manager already
+        // holds would keep serving the superseded data
+        if (old != null) release(old)
+        Snapshot(spark.sparkContext, listing,
+          spark.read.schema(Schema).parquet(dir.toString)
+            .withColumn("norm", VectorFunctions.l2Norm(col("vector")))
+            .persist(StorageLevel.MEMORY_AND_DISK))
+      }).frame
+  }
+
   /** K1: cosine top-k search with the reference's dimension guard
-    * (qdrant_text_loader.py:134-135). */
+    * (qdrant_text_loader.py:134-135), ordered by (score desc, id asc).
+    *
+    * Scores the collection's snapshot: `dot(v, q) / (norm · |q|)`, with
+    * `norm` stored per point and `|q|` summed here in
+    * `CosineSimilarity`'s order, so every score is bit-identical to
+    * `cosineSimilarity(vector, q)` over [[read]]. A zero norm on either
+    * side scores NULL, as there; so does a norm product that underflows
+    * to 0, which needs norms below ~1e-154. */
   def search(spark: SparkSession, root: String, name: String,
       query: Seq[Double], k: Int = 1): DataFrame = {
-    val coll = read(spark, root, name)
     require(query.nonEmpty, "empty query vector")
+    val coll = snapshot(spark, root, name)
+    val qNorm = math.sqrt(query.foldLeft(0.0)((s, y) => s + y * y))
+    val denom = col("norm") * lit(qNorm)
     coll.select(col("id"), col("page_content"), col("materia"), col("ano"),
-        VectorFunctions.cosineSimilarity(col("vector"), typedLit(query))
+        when(denom =!= 0.0,
+          VectorFunctions.vectorDot(col("vector"), typedLit(query)) / denom)
           .as("score"))
       .filter(size(col("vector")) === query.length)
       .orderBy(desc("score"), col("id").asc)

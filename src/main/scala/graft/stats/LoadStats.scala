@@ -2,6 +2,7 @@ package graft.stats
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** A4/S7 — the pivoted extraction-stats table
   * (qdrant_text_loader.py:78-120; golden shape
@@ -13,6 +14,11 @@ import org.apache.spark.sql.functions._
 object LoadStats {
 
   val Subjects = Seq("eng", "lang", "spani", "natu", "math", "huma")
+
+  /** The stats CSV's columns as `writeCsv` writes them: `row_key` then
+    * one count per subject. */
+  val CsvSchema: StructType = StructType(
+    StructField("row_key", StringType) +: Subjects.map(StructField(_, LongType)))
 
   /** counts: (year INT, subject STRING, kind STRING ∈ {todas questoes,
     * questoes add}, n LONG) → pivoted stats frame. Inputs are guarded
@@ -56,10 +62,11 @@ object LoadStats {
     }
     existingCsv match {
       case Some(p) if existsFs(p) =>
-        val old = spark.read.option("header", "true")
-          .option("inferSchema", "true").csv(p)
-          .select(newPivot.columns.toIndexedSeq.map(c =>
-            if (c == "row_key") col(c) else col(c).cast("long").as(c)): _*)
+        // declared, not inferred (inference costs two jobs); with
+        // enforceSchema off, a header that differs from CsvSchema fails
+        // the read instead of binding columns by position
+        val old = spark.read.schema(CsvSchema).option("header", "true")
+          .option("enforceSchema", "false").csv(p)
         val newKeys = newPivot.select("row_key")
         old.join(newKeys, Seq("row_key"), "left_anti")
           .unionByName(newPivot)

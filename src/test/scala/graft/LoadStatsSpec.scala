@@ -60,4 +60,31 @@ class LoadStatsSpec extends SparkSpec {
       ("2022 todas questoes", 40L, 0L),
       ("2023 todas questoes", 0L, 31L)))
   }
+
+  test("mergeWithExisting: an existing CSV whose header differs from the " +
+      "declared stats columns fails loudly instead of misaligning counts") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_stats_hdr").toString
+    val csv = s"$dir/stats.csv"
+    // same column count, two subjects swapped: read by position, the
+    // math counts would land under lang
+    val swapped = "row_key" +: LoadStats.Subjects.map {
+      case "math" => "lang"
+      case "lang" => "math"
+      case s => s
+    }
+    LoadStats.pivot(Seq((2022, "math", "todas questoes", 37L))
+        .toDF("year", "subject", "kind", "n"))
+      .toDF(swapped: _*)
+      .coalesce(1).write.option("header", "true").csv(csv)
+    val counts = Seq((2023, "lang", "todas questoes", 31L))
+      .toDF("year", "subject", "kind", "n")
+    val e = intercept[Exception] {
+      LoadStats.mergeWithExisting(spark, Some(csv), counts).collect()
+    }
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    assert(msgs(e).exists(m => m.contains("header") || m.contains("CSV")),
+      s"not the header check: $e")
+  }
 }

@@ -40,6 +40,13 @@ class PipelineSpec extends SparkSpec {
     val ids2 = VectorCollection.read(spark, root, "enem")
       .select("id").collect().map(_.getLong(0)).sorted
     assert(ids2 === (0L until 26L).toArray)
+    // the search above held a snapshot of the first load; the append
+    // must invalidate it, so both copies of the probe are found now
+    val both = VectorCollection.search(spark, root, "enem",
+      probe.getSeq[Double](probe.fieldIndex("vector")), k = 2).collect()
+    val probeId = probe.getAs[Long]("id")
+    assert(both.map(_.getAs[Long]("id")).toSeq === Seq(probeId, probeId + 13))
+    both.foreach(r => assert(math.abs(r.getAs[Double]("score") - 1.0) < 1e-9))
   }
 
   test("E1 from RAW PDF FILES on disk: processPdfFolder renders the same " +

@@ -1,9 +1,15 @@
 package graft
 
+import graft.functions.VectorFunctions
 import graft.sources.VectorCollection
 import graft.stats.LoadStats
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 class VectorCollectionSpec extends SparkSpec {
 
@@ -163,6 +169,171 @@ class VectorCollectionSpec extends SparkSpec {
       .collect().map(_.getLong(0)).sorted
     assert(ids === (0L until 15L).toArray)
     assert(!bak.exists())
+  }
+
+  // ── the search snapshot ────────────────────────────────────────────
+
+  /** Points `(id, vector)` in the collection's row type. */
+  private def points(rows: (Long, Seq[Double])*): DataFrame = {
+    import spark.implicits._
+    rows.map { case (id, v) => (id, v, s"doc $id", "math", 2023) }
+      .toDF("id", "vector", "page_content", "materia", "ano")
+  }
+
+  private def hits(root: String, name: String, q: Seq[Double]): Seq[Long] =
+    VectorCollection.search(spark, root, name, q, k = 1000).collect()
+      .map(_.getAs[Long]("id")).toSeq
+
+  private def persistedRdds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def partFiles(root: String, name: String): Set[String] =
+    Option(new java.io.File(VectorCollection.path(root, name)).listFiles())
+      .toSet.flatten.map(_.getName).filter(_.startsWith("part-"))
+
+  private val unit = Seq(1.0, 0.0, 0.0, 0.0)
+
+  /** A 10-point collection, searched once: returns the RDDs the search's
+    * snapshot persisted. */
+  private def searchedCollection(root: String, name: String): Set[Int] = {
+    VectorCollection.recreate(spark, root, name, dim = 4)
+    VectorCollection.append(spark, root, name,
+      points((0L until 10L).map(i => i -> unit): _*))
+    val before = persistedRdds
+    assert(hits(root, name, unit) === (0L until 10L))
+    val snap = persistedRdds -- before
+    assert(snap.nonEmpty, "the search persisted no snapshot")
+    snap
+  }
+
+  test("a search after append, compact or recreate sees the write, and " +
+      "the superseded snapshot's RDD is released") {
+    val root = Files.createTempDirectory("graft_snap").toString
+    val s1 = searchedCollection(root, "a")
+    VectorCollection.append(spark, root, "a", points(10L -> unit))
+    assert((persistedRdds & s1).isEmpty, "append left the old snapshot")
+    assert(hits(root, "a", unit) === (0L to 10L))
+
+    val s2 = persistedRdds
+    VectorCollection.compact(spark, root, "a", targetRowsPerFile = 4)
+    assert(hits(root, "a", unit) === (0L to 10L))
+    assert(persistedRdds != s2, "compact's rewrite served the old snapshot")
+
+    VectorCollection.recreate(spark, root, "a", dim = 4)
+    assert(hits(root, "a", unit).isEmpty)
+  }
+
+  test("a search sees writes made outside VectorCollection: a part file " +
+      "added by a plain DataFrameWriter, then that file deleted through " +
+      "the FS, then a crash-window rename of the live dir") {
+    val root = Files.createTempDirectory("graft_snap_ext").toString
+    searchedCollection(root, "e")
+    val before = partFiles(root, "e")
+    points(20L -> unit).write.mode("append")
+      .parquet(VectorCollection.path(root, "e"))
+    assert(hits(root, "e", unit) === (0L until 10L) :+ 20L)
+
+    val added = partFiles(root, "e") -- before
+    assert(added.size === 1)
+    Files.delete(java.nio.file.Paths.get(
+      VectorCollection.path(root, "e"), added.head))
+    assert(hits(root, "e", unit) === (0L until 10L))
+
+    val live = new java.io.File(VectorCollection.path(root, "e"))
+    assert(live.renameTo(new java.io.File(live.getPath + "._old")))
+    assert(hits(root, "e", unit) === (0L until 10L))
+    assert(live.exists())
+  }
+
+  test("search scores are bit-identical to a cosineSimilarity top-k over " +
+      "read: a zero vector scores NULL and ranks last, a wrong-dim vector " +
+      "is filtered out, exact ties order by id") {
+    val root = Files.createTempDirectory("graft_snap_bits").toString
+    VectorCollection.recreate(spark, root, "b", dim = 8)
+    val rnd = new scala.util.Random(42)
+    // magnitudes spread over six decades, so summation order shows
+    def vec(): Seq[Double] =
+      Seq.fill(8)(rnd.nextGaussian() * math.pow(10, rnd.nextInt(7) - 3))
+    val random = (0L until 200L).map(_ -> vec())
+    val tie = random(17)._2
+    val zero = Seq.fill(8)(0.0)
+    VectorCollection.append(spark, root, "b",
+      points(random ++ Seq(300L -> tie, 5000L -> tie, 400L -> zero): _*))
+    // a plain writer bypasses append's dim guard
+    points(500L -> Seq.fill(5)(1.0)).write.mode("append")
+      .parquet(VectorCollection.path(root, "b"))
+
+    def reference(q: Seq[Double], k: Int): DataFrame =
+      VectorCollection.read(spark, root, "b")
+        .select(col("id"), col("page_content"), col("materia"), col("ano"),
+          VectorFunctions.cosineSimilarity(col("vector"), typedLit(q))
+            .as("score"))
+        .filter(size(col("vector")) === q.length)
+        .orderBy(desc("score"), col("id").asc)
+        .limit(k)
+    def bits(df: DataFrame) = df.collect().toSeq.map(r =>
+      (r.getLong(0), r.getString(1), r.getString(2), r.getInt(3),
+        if (r.isNullAt(4)) None
+        else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(4)))))
+    for (q <- Seq.fill(12)(vec()) ++ Seq(tie, zero); k <- Seq(1, 10, 1000))
+      assert(bits(VectorCollection.search(spark, root, "b", q, k)) ===
+        bits(reference(q, k)))
+
+    val all = VectorCollection.search(spark, root, "b", random(3)._2,
+      k = 1000).collect()
+    assert(all.length === 203) // every 8-dim point; id 500 filtered
+    assert(all.last.getLong(0) === 400L && all.last.isNullAt(4))
+    val top = VectorCollection.search(spark, root, "b", tie, k = 3)
+      .collect()
+    assert(top.map(_.getLong(0)) === Array(17L, 300L, 5000L))
+    assert(top.map(_.getDouble(4)).distinct.length === 1)
+  }
+
+  test("read is never answered from the search snapshot") {
+    val root = Files.createTempDirectory("graft_snap_read").toString
+    searchedCollection(root, "r")
+    def cached(df: DataFrame): Seq[InMemoryRelation] =
+      df.queryExecution.withCachedData.collect { case m: InMemoryRelation => m }
+    val read = VectorCollection.read(spark, root, "r")
+    assert(cached(read).isEmpty)
+    assert(cached(read.select("id", "vector")).isEmpty)
+    assert(cached(read.filter(col("id") >= 5L)).isEmpty)
+  }
+
+  /** Jobs `body` starts on this thread, seen by a listener. A marker job
+    * run afterwards flushes the listener queue: events arrive in order,
+    * so once the marker's start is seen, so is every earlier one. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID}"
+    val started = new AtomicInteger()
+    val marker = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(g) if g == group => started.incrementAndGet()
+          case Some(g) if g == s"$group-marker" => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(marker.await(60, TimeUnit.SECONDS), "listener queue never drained")
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("job counts: planning read launches no job; a search on a warm " +
+      "snapshot launches exactly one") {
+    val root = Files.createTempDirectory("graft_snap_jobs").toString
+    searchedCollection(root, "j")
+    assert(jobsOf(VectorCollection.read(spark, root, "j")) === 0)
+    assert(jobsOf(VectorCollection.search(spark, root, "j",
+      Seq(0.0, 1.0, 0.0, 0.0), k = 3).collect()) === 1)
   }
 
   test("A4: stats pivot merge matches the golden CSV shape") {
