@@ -273,8 +273,8 @@ object VectorCollection {
     * `norm` stored per point and `|q|` summed here in
     * `CosineSimilarity`'s order, so every score is bit-identical to
     * `cosineSimilarity(vector, q)` over [[read]]. A zero norm on either
-    * side scores NULL, as there; so does a norm product that underflows
-    * to 0, which needs norms below ~1e-154. */
+    * side scores NULL, as there; so does a norm product too small to
+    * represent (below ~4.9e-324), where that expression divides by 0. */
   def search(spark: SparkSession, root: String, name: String,
       query: Seq[Double], k: Int = 1): DataFrame = {
     require(query.nonEmpty, "empty query vector")

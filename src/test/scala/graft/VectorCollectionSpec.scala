@@ -7,6 +7,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
@@ -206,20 +207,38 @@ class VectorCollectionSpec extends SparkSpec {
     snap
   }
 
+  /** Whether Spark's cache manager holds the collection's snapshot plan
+    * (the qualified-path read plus `norm`, as `search` persists it). A
+    * DataFrameWriter write re-caches the plans over its output path, so a
+    * released RDD alone does not show that a write released the
+    * snapshot. */
+  private def snapshotHeld(root: String, name: String): Boolean = {
+    val dir = new org.apache.hadoop.fs.Path(VectorCollection.path(root, name))
+    val qualified = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(dir)
+    spark.read.schema(VectorCollection.Schema).parquet(qualified.toString)
+      .withColumn("norm", VectorFunctions.l2Norm(col("vector")))
+      .storageLevel != StorageLevel.NONE
+  }
+
   test("a search after append, compact or recreate sees the write, and " +
-      "the superseded snapshot's RDD is released") {
+      "the write releases the snapshot") {
     val root = Files.createTempDirectory("graft_snap").toString
     val s1 = searchedCollection(root, "a")
+    assert(snapshotHeld(root, "a"))
     VectorCollection.append(spark, root, "a", points(10L -> unit))
     assert((persistedRdds & s1).isEmpty, "append left the old snapshot")
+    assert(!snapshotHeld(root, "a"), "append did not release the snapshot")
     assert(hits(root, "a", unit) === (0L to 10L))
 
     val s2 = persistedRdds
     VectorCollection.compact(spark, root, "a", targetRowsPerFile = 4)
+    assert(!snapshotHeld(root, "a"), "compact did not release the snapshot")
     assert(hits(root, "a", unit) === (0L to 10L))
     assert(persistedRdds != s2, "compact's rewrite served the old snapshot")
 
     VectorCollection.recreate(spark, root, "a", dim = 4)
+    assert(!snapshotHeld(root, "a"), "recreate did not release the snapshot")
     assert(hits(root, "a", unit).isEmpty)
   }
 
