@@ -132,6 +132,77 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** cosine(v, q) for one query vector fixed at planning time, against `v`
+  * and its stored norm `|v|`: `dot(v, q) / (|v| * |q|)`; a zero or null
+  * norm product or a length mismatch → null. With `|v|` from
+  * [[VectorFunctions.l2Norm]] and `|q|` summed in the same order, every
+  * score is bit-identical to [[CosineSimilarity]]`(v, q)`.
+  *
+  * The query and `|q|` reach the generated code as reference objects,
+  * not inlined literals, so every query compiles to the same class and
+  * hits the codegen cache: an inlined `|q|` would compile new classes
+  * for every distinct norm, and the norms of unit vectors differ in
+  * their last bits. */
+case class CosineToQuery(left: Expression, right: Expression,
+    query: Array[Double], queryNorm: Double) extends BinaryExpression {
+  override def prettyName: String = "cosine_to_query"
+  override def dataType: DataType = DoubleType
+  override def nullIntolerant: Boolean = true
+  override def nullable: Boolean = true // see VectorFold
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(DoubleType, _), DoubleType) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case (l, r) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"$prettyName requires ARRAY<DOUBLE> and DOUBLE, got ${l.sql} and ${r.sql}")
+    }
+
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val x = a.asInstanceOf[ArrayData]
+    val n = x.numElements()
+    if (n != query.length) null
+    else {
+      var s = 0.0
+      var i = 0
+      while (i < n) { s += x.getDouble(i) * query(i); i += 1 }
+      val denom = b.asInstanceOf[Double] * queryNorm
+      if (denom == 0.0) null else java.lang.Double.valueOf(s / denom)
+    }
+  }
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val q = ctx.addReferenceObj("query", query, "double[]")
+    val qNorm = ctx.addReferenceObj("queryNorm", queryNorm, "java.lang.Double")
+    nullSafeCodeGen(ctx, ev, (x, norm) => {
+      val i = ctx.freshName("i")
+      val n = ctx.freshName("n")
+      val s = ctx.freshName("s")
+      val qa = ctx.freshName("q")
+      val denom = ctx.freshName("denom")
+      s"""
+         |final double[] $qa = $q;
+         |final int $n = $x.numElements();
+         |if ($n != $qa.length) { ${ev.isNull} = true; }
+         |else {
+         |  double $s = 0.0;
+         |  for (int $i = 0; $i < $n; $i++) {
+         |    $s += $x.getDouble($i) * $qa[$i];
+         |  }
+         |  final double $denom = $norm * $qNorm.doubleValue();
+         |  if ($denom == 0.0) { ${ev.isNull} = true; }
+         |  else { ${ev.value} = $s / $denom; }
+         |}
+       """.stripMargin
+    })
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
 /** Array-in, array-out preprocessing kernels. A `transform(e, x -> x /
   * l2_norm(e))` lambda form would re-evaluate the norm subtree once PER
   * ELEMENT (codegen does not hoist loop-invariant subtrees out of higher-
@@ -284,6 +355,14 @@ object VectorFunctions {
     column(CosineSimilarity(expression(asDouble(a)), expression(asDouble(b))))
 
   def l2Norm(c: Column): Column = sqrt(vectorDot(c, c))
+
+  /** [[CosineToQuery]] of `vector` (with its stored `l2Norm`, `norm`)
+    * against `query`, whose norm is summed here in `l2Norm`'s order. */
+  def cosineToQuery(vector: Column, norm: Column, query: Seq[Double]): Column = {
+    val q = query.toArray
+    column(CosineToQuery(expression(asDouble(vector)), expression(norm), q,
+      math.sqrt(q.foldLeft(0.0)((s, y) => s + y * y))))
+  }
 
   /** Unit-normalize an array<double> column (null-safe: zero vectors → null).
     * Native single-pass expression — see the VectorMap scaladoc for why this

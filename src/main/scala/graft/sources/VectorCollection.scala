@@ -269,21 +269,19 @@ object VectorCollection {
   /** K1: cosine top-k search with the reference's dimension guard
     * (qdrant_text_loader.py:134-135), ordered by (score desc, id asc).
     *
-    * Scores the collection's snapshot: `dot(v, q) / (norm · |q|)`, with
-    * `norm` stored per point and `|q|` summed here in
-    * `CosineSimilarity`'s order, so every score is bit-identical to
-    * `cosineSimilarity(vector, q)` over [[read]]. A zero norm on either
-    * side scores NULL, as there; so does a norm product too small to
-    * represent (below ~4.9e-324), where that expression divides by 0. */
+    * Scores the collection's snapshot with `CosineToQuery`:
+    * `dot(v, q) / (norm · |q|)`, with `norm` stored per point, so every
+    * score is bit-identical to `cosineSimilarity(vector, q)` over
+    * [[read]]. A zero norm on either side scores NULL, as there; so does
+    * a norm product too small to represent (below ~4.9e-324), where that
+    * expression divides by 0. Every query plans the same generated code,
+    * so a search compiles nothing once the first has run. */
   def search(spark: SparkSession, root: String, name: String,
       query: Seq[Double], k: Int = 1): DataFrame = {
     require(query.nonEmpty, "empty query vector")
     val coll = snapshot(spark, root, name)
-    val qNorm = math.sqrt(query.foldLeft(0.0)((s, y) => s + y * y))
-    val denom = col("norm") * lit(qNorm)
     coll.select(col("id"), col("page_content"), col("materia"), col("ano"),
-        when(denom =!= 0.0,
-          VectorFunctions.vectorDot(col("vector"), typedLit(query)) / denom)
+        VectorFunctions.cosineToQuery(col("vector"), col("norm"), query)
           .as("score"))
       .filter(size(col("vector")) === query.length)
       .orderBy(desc("score"), col("id").asc)

@@ -28,6 +28,28 @@ class SimilaritySpec extends SparkSpec {
       .first().isNullAt(0))
   }
 
+  test("cosine_to_query eval is bit-identical to cosine_similarity eval " +
+      "(VectorCollectionSpec pins the generated path)") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import graft.functions.{CosineSimilarity, CosineToQuery}
+    def norm(v: Seq[Double]) = math.sqrt(v.foldLeft(0.0)((s, y) => s + y * y))
+    def bits(x: Any) =
+      Option(x).map(d => java.lang.Double.doubleToRawLongBits(
+        d.asInstanceOf[Double]))
+    val rnd = new scala.util.Random(7)
+    def vec(n: Int) =
+      Seq.fill(n)(rnd.nextGaussian() * math.pow(10, rnd.nextInt(7) - 3))
+    val q = vec(6)
+    for (v <- Seq.fill(50)(vec(6)) ++ Seq(Seq.fill(6)(0.0), vec(5), q);
+        query <- Seq(q, Seq.fill(6)(0.0))) {
+      val got = CosineToQuery(Literal.create(v), Literal(norm(v)),
+        query.toArray, norm(query)).eval()
+      val want = CosineSimilarity(Literal.create(v), Literal.create(query))
+        .eval()
+      assert(bits(got) === bits(want), s"v=$v query=$query")
+    }
+  }
+
   test("vector expressions declare nullable even over non-null " +
       "children — otherwise NullPropagation folds isnull() to false " +
       "and the null row silently escapes every filter") {

@@ -355,6 +355,25 @@ class VectorCollectionSpec extends SparkSpec {
       Seq(0.0, 1.0, 0.0, 0.0), k = 3).collect()) === 1)
   }
 
+  test("every search plans the same generated code, whatever the query " +
+      "and its norm") {
+    val root = Files.createTempDirectory("graft_snap_code").toString
+    searchedCollection(root, "g")
+    def code(q: Seq[Double]): Seq[String] =
+      VectorCollection.search(spark, root, "g", q, k = 3)
+        .queryExecution.executedPlan.collect {
+          case w: org.apache.spark.sql.execution.WholeStageCodegenExec =>
+            w.doCodeGen()._2.body
+        }
+    val first = code(Seq(0.0, 1.0, 0.0, 0.0))
+    assert(first.nonEmpty)
+    // norms 3, sqrt(2), and (1, 2, 3, 4) normalized, whose norm sums to
+    // one ulp below 1
+    val offOne = Seq(1.0, 2.0, 3.0, 4.0).map(_ / math.sqrt(30.0))
+    for (q <- Seq(Seq(3.0, 0.0, 0.0, 0.0), Seq(1.0, 1.0, 0.0, 0.0), offOne))
+      assert(code(q) === first)
+  }
+
   test("A4: stats pivot merge matches the golden CSV shape") {
     import spark.implicits._
     val counts = Seq(
