@@ -9,61 +9,64 @@ import org.apache.spark.sql.functions._
 
 /** E1 — the full ETL "query" (pdf_to_qdrant_etl.py:107-159): pair
   * booklets↔keys, extract questions, embed, load into the vector
-  * collection, reconcile counts, merge stats. One logical plan per stage,
-  * Catalyst-optimized; external I/O only at the sinks.
-  *
-  * The reference loops file-pairs in Python and crosses the network once
-  * per question for embeddings; here the whole folder is one lineage and
-  * embedding is either the deterministic in-plan expression (default) or
-  * any [[Embedder]] implementation driven through the batched
-  * `mapPartitions` client (`Embedder.embedColumn`) — pass `embedder =
-  * Some(...)` to use a real model.
+  * collection, reconcile counts, merge stats. Pairing and the stats merge
+  * run on the driver, over file names and a dozen stats rows, as in the
+  * reference; the per-question stages are one lineage, and embedding is
+  * either the deterministic in-plan expression (default) or any
+  * [[Embedder]] driven through the batched `mapPartitions` client
+  * (`Embedder.embedColumn`) — pass `embedder = Some(...)` for a real model.
   */
 object Pipeline {
 
   final case class LoadReport(pairs: Long, unpaired: Long,
       attempted: Long, added: Long)
 
-  /** E1 from RAW PDF BYTES on disk: scan `pdfDir` with
-    * [[graft.sources.PdfSource]] (pure-JVM PdfCodec), split the
-    * inventory into test booklets and answer keys
-    * (`PdfSource.bookletsAndKeys`), and run [[processFolder]]. The
-    * whole reference flow — directory to vector collection — in one
-    * call with no fixture boundary, for the PdfCodec-decodable subset. */
+  /** E1 from RAW PDF BYTES on disk: pair the `*.pdf` names the driver lists
+    * in `pdfDir` (`PdfSource.listPdfs`), aborting on an unpaired test before
+    * any PDF is decoded; then decode the PDFs (pure-JVM PdfCodec), split
+    * booklets from keys and load as [[processFolder]] does. */
   def processPdfFolder(spark: SparkSession, pdfDir: String,
       collectionRoot: String, collection: String, dim: Int = 64,
       statsCsv: Option[String] = None, imagesMode: Boolean = false,
       embedder: Option[Embedder] = None,
       embedBatchSize: Int = 64): LoadReport = {
+    val names = PdfSource.listPdfs(spark.sparkContext.hadoopConfiguration,
+      pdfDir).map(_.getName)
     val all = PdfSource.pages(spark, pdfDir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (pages, keyTexts) = PdfSource.bookletsAndKeys(all)
-    try processFolder(spark, pages, keyTexts, collectionRoot, collection,
+    try load(spark, pages, keyTexts, names, collectionRoot, collection,
       dim, statsCsv, imagesMode, embedder, embedBatchSize)
     finally { all.unpersist(); () }
   }
 
   /** pages: (file_name, page_idx, page_text, has_images);
-    * keyTexts: (file_name, key_text). */
+    * keyTexts: (file_name, key_text). J1 pairs their distinct file names,
+    * aborting on an unpaired test. */
   def processFolder(spark: SparkSession, pages: DataFrame,
       keyTexts: DataFrame, collectionRoot: String, collection: String,
       dim: Int = 64, statsCsv: Option[String] = None,
       imagesMode: Boolean = false,
       embedder: Option[Embedder] = None,
       embedBatchSize: Int = 64): LoadReport = {
+    val names = pages.select(col("file_name"))
+      .union(keyTexts.select(col("file_name"))).distinct().collect()
+    load(spark, pages, keyTexts, names.map(_.getString(0)), collectionRoot,
+      collection, dim, statsCsv, imagesMode, embedder, embedBatchSize)
+  }
 
-    // J1 pairing over the distinct file inventory; abort on unpaired.
-    val files = pages.select(col("file_name"))
-      .union(keyTexts.select(col("file_name"))).distinct()
-    val unpaired = Pairing.unpairedTests(files).count()
-    if (unpaired > 0)
-      throw new java.io.IOException(
-        s"$unpaired test PDFs have no matching answer key")
-    val pairs = Pairing.pair(files)
-
+  /** Pairs `names` first, so an unpaired test aborts before any job. */
+  private def load(spark: SparkSession, pages: DataFrame, keyTexts: DataFrame,
+      names: Seq[String], collectionRoot: String, collection: String, dim: Int,
+      statsCsv: Option[String], imagesMode: Boolean, embedder: Option[Embedder],
+      embedBatchSize: Int): LoadReport = {
+    import spark.implicits._
+    val (pairs, unpaired) = Pairing.pairNames(names)
+    if (unpaired.nonEmpty) throw new java.io.IOException(
+      s"${unpaired.size} test PDFs have no matching answer key")
     // E2 extract → questions.
-    val questions = ExtractPipeline
-      .extract(pages, keyTexts, pairs, imagesMode)
+    val questions = ExtractPipeline.extract(pages, keyTexts,
+        pairs.toDF("file_name", "answer_file"), imagesMode)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // T15 embed + point assembly (payload = reference's
@@ -73,13 +76,10 @@ object Pipeline {
         .as("page_content"),
       col("subject").as("materia"), col("year").as("ano"),
       col("id").as("qid"))
-    // Two embedding paths behind one seam: an external client goes through
-    // the batched mapPartitions driver (one embedBatch call per batch, with
-    // retries); the deterministic default stays an in-plan codegen'd
-    // expression. Both produce the same `vector` column contract.
-    // The client path is PERSISTED: the load below takes several actions
-    // (id-offset count, reconcile count, write), and without a cache each
-    // one would re-drive the external API over the whole corpus.
+    // Two embedding paths, one `vector` column contract: an external client
+    // through the batched mapPartitions driver (with retries), PERSISTED so
+    // the load's actions do not re-drive the API; or the deterministic
+    // in-plan codegen'd expression.
     val embedded = embedder match {
       case Some(e) =>
         Embedder.embedColumn(chunks, "page_content", e,
@@ -103,33 +103,23 @@ object Pipeline {
         .select(col("id"), col("vector"), col("page_content"), col("materia"),
           col("ano").cast("int").as("ano"))
 
-      // S8 load + A3 reconcile.
-      val (attempted, added) =
-        VectorCollection.append(spark, collectionRoot, collection, points)
+      // S8 load + A3 reconcile, with this append's rows per (ano, materia)
+      val (attempted, added) = VectorCollection.appendCounted(spark,
+        collectionRoot, collection, points)
 
-      // A4 stats merge (todas questoes = attempted per (year, subject);
-      // questoes add = rows inserted THIS run — ids continue from the
-      // pre-append offset, so `id >= existing` selects exactly this batch;
-      // re-counting the whole collection would record cumulative totals on
-      // a second run into a non-empty collection (the reference writes the
-      // per-run added_questions, qdrant_text_loader.__etl_metadata_saving).
+      // A4 stats: todas questoes = attempted per (year, subject), questoes
+      // add = rows added THIS run (qdrant_text_loader.__etl_metadata_saving)
       statsCsv.foreach { csv =>
-        val attemptedCounts = questions.groupBy(col("year"), col("subject"))
-          .agg(count(lit(1)).as("n"))
-          .withColumn("kind", lit("todas questoes"))
-        val addedCounts = VectorCollection
-          .read(spark, collectionRoot, collection)
-          .filter(col("id") >= existing)
-          .groupBy(col("ano").as("year"), col("materia").as("subject"))
-          .agg(count(lit(1)).as("n"))
-          .withColumn("kind", lit("questoes add"))
-        val stats = LoadStats.mergeWithExisting(spark, Some(csv),
-          attemptedCounts.unionByName(addedCounts)
-            .select(col("year"), col("subject"), col("kind"), col("n")))
-        LoadStats.writeCsv(stats, csv + ".out")
+        val all = questions.groupBy(col("year"), col("subject")).count()
+          .collect().map(r => LoadStats.Count(Option(r.get(0)).map(_.toString),
+            r.getString(1), "todas questoes", r.getLong(2)))
+        val add = added.map { case ((y, s), n) =>
+          LoadStats.Count(y.map(_.toString), s, "questoes add", n) }
+        LoadStats.writeCsv(LoadStats.merged(spark, Some(csv), all ++ add),
+          csv + ".out")
       }
 
-      LoadReport(pairs.count(), 0L, attempted, added)
+      LoadReport(pairs.size.toLong, 0L, attempted, added.values.sum)
     } finally { embedded.unpersist(); questions.unpersist(); () }
   }
 

@@ -101,8 +101,8 @@ object TextFunctions {
 
   /** T8 — filename field extraction (enem_pdf_extractor.py:40-49, :979-980;
     * qdrant_text_loader.py:26-27; pdf_to_qdrant_etl.py:50-51). */
-  def yearOf(fileName: Column): Column =
-    regexp_extract(fileName, "(20\\d{2})", 1).cast("int")
+  def yearOf(fileName: Column): Column = // NULL, not a failed cast, if absent
+    nullif(regexp_extract(fileName, "(20\\d{2})", 1), lit("")).cast("int")
   def dayOf(fileName: Column): Column =
     regexp_extract(fileName, "(D[12])", 1)
   def colorOf(fileName: Column): Column =
@@ -111,8 +111,6 @@ object TextFunctions {
     when(fileName.contains("GB"), lit("GB"))
       .when(fileName.contains("PV"), lit("PV"))
       .otherwise(lit(null).cast("string"))
-  def baseName(path: Column): Column =
-    element_at(split(path, "/"), -1)
 
   /** T10 — displayed-question renumbering: D1 subtracts the 5-question
     * English/Spanish overlap for n>5; D2 prints n+90

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -132,19 +132,15 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** cosine(v, q) for one query vector fixed at planning time, against `v`
-  * and its stored norm `|v|`: `dot(v, q) / (|v| * |q|)`; a zero or null
-  * norm product or a length mismatch → null. With `|v|` from
-  * [[VectorFunctions.l2Norm]] and `|q|` summed in the same order, every
-  * score is bit-identical to [[CosineSimilarity]]`(v, q)`.
-  *
-  * The query and `|q|` reach the generated code as reference objects,
-  * not inlined literals, so every query compiles to the same class and
-  * hits the codegen cache: an inlined `|q|` would compile new classes
-  * for every distinct norm, and the norms of unit vectors differ in
-  * their last bits. */
+/** cosine(v, q) for one query vector, against `v` and its stored norm
+  * `|v|`: `dot(v, q) / (|v| * |q|)`; a zero or null norm product or a
+  * length mismatch → null. With `|v|` from [[VectorFunctions.l2Norm]] and
+  * `|q|` summed in the same order, every score is bit-identical to
+  * [[CosineSimilarity]]`(v, q)`. `VectorCollection.search` calls `eval`
+  * per row of a prepared RDD, so the expression is never compiled. */
 case class CosineToQuery(left: Expression, right: Expression,
-    query: Array[Double], queryNorm: Double) extends BinaryExpression {
+    query: Array[Double], queryNorm: Double) extends BinaryExpression
+    with CodegenFallback {
   override def prettyName: String = "cosine_to_query"
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
@@ -172,35 +168,17 @@ case class CosineToQuery(left: Expression, right: Expression,
     }
   }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val q = ctx.addReferenceObj("query", query, "double[]")
-    val qNorm = ctx.addReferenceObj("queryNorm", queryNorm, "java.lang.Double")
-    nullSafeCodeGen(ctx, ev, (x, norm) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val qa = ctx.freshName("q")
-      val denom = ctx.freshName("denom")
-      s"""
-         |final double[] $qa = $q;
-         |final int $n = $x.numElements();
-         |if ($n != $qa.length) { ${ev.isNull} = true; }
-         |else {
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $s += $x.getDouble($i) * $qa[$i];
-         |  }
-         |  final double $denom = $norm * $qNorm.doubleValue();
-         |  if ($denom == 0.0) { ${ev.isNull} = true; }
-         |  else { ${ev.value} = $s / $denom; }
-         |}
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object CosineToQuery {
+  /** Against `query`, whose norm is summed here in `l2Norm`'s order. */
+  def apply(vector: Expression, norm: Expression,
+      query: Array[Double]): CosineToQuery =
+    CosineToQuery(vector, norm, query,
+      math.sqrt(query.foldLeft(0.0)((s, y) => s + y * y)))
 }
 
 /** Array-in, array-out preprocessing kernels. A `transform(e, x -> x /
@@ -355,14 +333,6 @@ object VectorFunctions {
     column(CosineSimilarity(expression(asDouble(a)), expression(asDouble(b))))
 
   def l2Norm(c: Column): Column = sqrt(vectorDot(c, c))
-
-  /** [[CosineToQuery]] of `vector` (with its stored `l2Norm`, `norm`)
-    * against `query`, whose norm is summed here in `l2Norm`'s order. */
-  def cosineToQuery(vector: Column, norm: Column, query: Seq[Double]): Column = {
-    val q = query.toArray
-    column(CosineToQuery(expression(asDouble(vector)), expression(norm), q,
-      math.sqrt(q.foldLeft(0.0)((s, y) => s + y * y))))
-  }
 
   /** Unit-normalize an array<double> column (null-safe: zero vectors → null).
     * Native single-pass expression — see the VectorMap scaladoc for why this

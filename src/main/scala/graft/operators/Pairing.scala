@@ -1,55 +1,61 @@
 package graft.operators
 
-import graft.functions.{TextFunctions => TF}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import graft.functions.Utf8Order
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** J1 — test↔answer-key PDF pairing.
   *
   * The reference classifies files by `PV` (test) / `GB` (answer key)
   * markers then nested-loop matches on (day, color) substrings, aborting
   * the whole folder if any test lacks a key (pdf_to_qdrant_etl.py:44-73).
-  * Re-expressed as a broadcast inner equi-join on (day, color), with the
-  * abort condition as an anti-join count (SURVEY.md op J1).
+  * File names are metadata, so this runs on the driver: no Spark job.
   */
 object Pairing {
 
-  /** (file_name, kind, year, day, color) from each file name. */
-  private def classify(files: DataFrame): DataFrame =
-    files.select(col("file_name"),
-      TF.kindOf(col("file_name")).as("kind"),
-      TF.yearOf(col("file_name")).as("year"),
-      TF.dayOf(col("file_name")).as("day"),
-      TF.colorOf(col("file_name")).as("color"))
+  /** A file name's fields as the `TextFunctions` Column forms read them:
+    * `kindOf` (`GB` wins over `PV`), then the first match of `yearOf`,
+    * `dayOf` and `colorOf` — None, "" and "" when absent. */
+  final case class FileClass(kind: Option[String], year: Option[Int],
+      day: String, color: String)
 
-  /** files: one column `file_name`. Returns (file_name, answer_file).
-    *
-    * The join key includes the year: a folder carrying the same (day,
-    * color) across several years must not cross-pair tests with another
-    * year's key. The reference pairs each test with exactly one key (first
-    * match then break), so output multiplicity is 1:1; `min` over the
-    * matched keys pins that determinism even if a folder ships duplicate
-    * keys for one (year, day, color). */
-  def pair(files: DataFrame): DataFrame = {
-    val classified = classify(files)
-    val tests = classified.filter(col("kind") === "PV")
-      .select(col("file_name"), col("year"), col("day"), col("color"))
-    val keys = classified.filter(col("kind") === "GB")
-      .select(col("file_name").as("answer_file"), col("year"), col("day"),
-        col("color"))
-    tests.join(broadcast(keys), Seq("year", "day", "color"))
-      .groupBy(col("file_name"))
-      .agg(min(col("answer_file")).as("answer_file"))
+  private val (year, day, color) = ("20\\d{2}".r, "D[12]".r, "CD[1-9]".r)
+
+  def classify(name: String): FileClass =
+    FileClass(Seq("GB", "PV").find(name.contains),
+      year.findFirstIn(name).map(_.toInt), day.findFirstIn(name).getOrElse(""),
+      color.findFirstIn(name).getOrElse(""))
+
+  /** (test → key pairs, unpaired tests), sorted by test in Spark's string
+    * order. The key (year, day, color) includes the year, so years never
+    * cross-pair and a name without one never pairs; of duplicate keys the
+    * minimum name wins, as the reference takes one (first match, break). */
+  def pairNames(names: Iterable[String])
+      : (Seq[(String, String)], Seq[String]) = {
+    val classified = names.iterator.filter(_ != null).toSeq.distinct
+      .sorted(Utf8Order.ordering).map(n => n -> classify(n))
+    val keys = classified.collect {
+      case (n, FileClass(Some("GB"), Some(y), d, c)) => (y, d, c) -> n }
+      .groupMapReduce(_._1)(_._2)(Utf8Order.ordering.min)
+    val tests = classified.collect { case (n, FileClass(Some("PV"), y, d, c)) =>
+      n -> y.flatMap(y => keys.get((y, d, c))) }
+    (tests.collect { case (n, Some(key)) => n -> key },
+      tests.collect { case (n, None) => n })
   }
 
-  /** The reference's abort semantics: any unpaired test ⇒ empty result.
-    * Returns the unpaired tests (caller raises if non-empty). */
-  def unpairedTests(files: DataFrame): DataFrame = {
-    val classified = classify(files)
-    val tests = classified.filter(col("kind") === "PV")
-    val keys = classified.filter(col("kind") === "GB")
-      .select(col("year"), col("day"), col("color"))
-    tests.join(keys, Seq("year", "day", "color"), "left_anti")
-      .select(col("file_name"))
-  }
+  private def local(files: DataFrame, rows: Seq[Row], cols: String*) =
+    files.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(cols.map(StructField(_, StringType))))
+
+  private def names(files: DataFrame): Seq[String] =
+    files.select("file_name").distinct().collect().toSeq.map(_.getString(0))
+
+  /** files: one column `file_name`. Returns (file_name, answer_file). */
+  def pair(files: DataFrame): DataFrame = local(files,
+    pairNames(names(files))._1.map(p => Row(p._1, p._2)),
+    "file_name", "answer_file")
+
+  /** The unpaired tests of `files`; the caller raises if non-empty. */
+  def unpairedTests(files: DataFrame): DataFrame =
+    local(files, pairNames(names(files))._2.map(Row(_)), "file_name")
 }

@@ -171,14 +171,6 @@ object TextAnalysis {
       }.as("quality"))
   }
 
-  /** Content fingerprints: exact (md5 — oracle-verifiable) and shift-robust
-    * (min-hash over char 8-grams). */
-  def fingerprintColumns(text: Column): Seq[Column] = Seq(
-    Fingerprints.md5Fingerprint(text).as("fp_md5"),
-    sha2(text, 256).as("fp_sha256"),
-    Fingerprints.rollingFingerprint(text).as("fp_rolling")
-  )
-
   // ── typed kernel forms ──────────────────────────────────────────────────
   // The Column forms above are the SQL surface; for corpus-wide passes the
   // queries route through these mapPartitions kernels instead. Rationale

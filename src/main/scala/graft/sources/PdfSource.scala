@@ -26,6 +26,25 @@ object PdfSource {
       .load(dir)
       .select(col("path"), col("content"))
 
+  /** Driver-side listing through the Hadoop FS, metadata only: the `*.pdf`
+    * files directly in `dir`, sorted, or `dir` itself when it is a file.
+    * Like `binaryFile` it reads no subdirectory and skips the names Spark's
+    * file listing treats as hidden — a `.` prefix, or a `_` prefix without
+    * `=` — so a macOS `._x.pdf` AppleDouble file is never read as a PDF.
+    * The one listing rule of `graft-pdf` and `Pipeline.processPdfFolder`'s
+    * pairing. */
+  def listPdfs(conf: org.apache.hadoop.conf.Configuration,
+      dir: String): Seq[org.apache.hadoop.fs.Path] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(conf)
+    def visiblePdf(n: String) = n.endsWith(".pdf") && !n.startsWith(".") &&
+      !(n.startsWith("_") && !n.contains("="))
+    if (fs.getFileStatus(p).isFile) Seq(p)
+    else fs.listStatus(p).toSeq
+      .filter(s => s.isFile && visiblePdf(s.getPath.getName))
+      .map(_.getPath).sortBy(_.toString)
+  }
+
   private def fileName(path: String): String =
     path.substring(path.lastIndexOf('/') + 1)
 

@@ -1,9 +1,13 @@
 package graft.sources
 
-import graft.functions.VectorFunctions
+import graft.functions.{CosineToQuery, VectorFunctions}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -123,17 +127,23 @@ object VectorCollection {
   }
 
   /** S8: batched upsert-append; returns (attempted, added) — the
-    * reference's per-file reconciliation pair (A3).
+    * reference's per-file reconciliation pair (A3). */
+  def append(spark: SparkSession, root: String, name: String,
+      points: DataFrame): (Long, Long) = {
+    val (attempted, added) = appendCounted(spark, root, name, points)
+    (attempted, added.values.sum)
+  }
+
+  /** [[append]], with `added` per (ano, materia).
     *
-    * `added` is derived from the part files THIS write created (snapshot
+    * `added` is read from the part files THIS write created (snapshot
     * the directory listing before/after, count only the delta), so the
     * reconcile cost is O(batch), not two O(collection) scans per load —
     * at 100 TB a full-collection count per append is the difference
-    * between a metadata read and re-listing the world. Parquet `count()`
-    * over the new files reads only footers. A full-collection audit is
-    * still available as `count(...)` for callers that want it. */
-  def append(spark: SparkSession, root: String, name: String,
-      points: DataFrame): (Long, Long) = {
+    * between a metadata read and re-listing the world. A full-collection
+    * audit is still available as `count(...)` for callers that want it. */
+  private[graft] def appendCounted(spark: SparkSession, root: String,
+      name: String, points: DataFrame): (Long, Map[(Option[Int], String), Long]) = {
     // heal BEFORE appending: if a crashed compact left the live dir
     // absent, SaveMode.Append would quietly recreate it with only this
     // batch, and the next read would then drop the '._old' backup holding
@@ -170,8 +180,11 @@ object VectorCollection {
     val newFiles = (partFiles() -- before).toSeq.sorted
       .map(n => s"${path(root, name)}/$n")
     val added =
-      if (newFiles.isEmpty) 0L
-      else spark.read.schema(Schema).parquet(newFiles: _*).count()
+      if (newFiles.isEmpty) Map.empty[(Option[Int], String), Long]
+      else spark.read.schema(Schema).parquet(newFiles: _*)
+        .groupBy(col("ano"), col("materia")).count().collect()
+        .map(r => (Option(r.get(0)).map(_.asInstanceOf[Int]), r.getString(1)) ->
+          r.getLong(2)).toMap
     (attempted, added)
   }
 
@@ -211,9 +224,18 @@ object VectorCollection {
 
   /** A persisted `(id, vector, page_content, materia, ano, norm)` frame
     * of one collection, valid while the directory listing it was built
-    * from — (file name, length, mtime) per entry — is unchanged. */
-  private final case class Snapshot(sc: SparkContext,
-      listing: Seq[(String, Long, Long)], frame: DataFrame)
+    * from — (file name, length, mtime) per entry — is unchanged. `rows` is
+    * the cached plan's row RDD over [[Scored]]'s columns, planned once per
+    * snapshot by its first search. */
+  private final class Snapshot(val sc: SparkContext,
+      val listing: Seq[(String, Long, Long)], val frame: DataFrame) {
+    lazy val rows: RDD[InternalRow] =
+      frame.select(Scored.map(col): _*).queryExecution.toRdd
+  }
+
+  /** The snapshot columns a search reads, in `rows` order. */
+  private val Scored =
+    Seq("id", "page_content", "materia", "ano", "vector", "norm")
 
   /** One snapshot per qualified collection path. Concurrent: `Overlap`
     * runs searches from two driver threads. */
@@ -238,8 +260,8 @@ object VectorCollection {
     Option(snapshots.remove(qualifiedDir(spark, root, name)._2.toString))
       .foreach(release)
 
-  /** The collection's scoring frame: the held snapshot when its listing
-    * and SparkContext still match, else a fresh one. A fresh snapshot is
+  /** The collection's snapshot: the held one when its listing and
+    * SparkContext still match, else a fresh one. A fresh snapshot is
     * persisted lazily, so the search that builds it also fills it. The
     * listing is taken BEFORE the frame is planned: a write in between
     * leaves the key older than the data, so the next search rebuilds
@@ -247,7 +269,7 @@ object VectorCollection {
     * plan from matching a plain [[read]], which Spark's cache manager
     * would otherwise answer from the snapshot. */
   private def snapshot(spark: SparkSession, root: String,
-      name: String): DataFrame = {
+      name: String): Snapshot = {
     recoverInterruptedSwap(spark, root, name)
     val (fs, dir) = qualifiedDir(spark, root, name)
     val listing = fs.listStatus(dir).toSeq
@@ -259,32 +281,85 @@ object VectorCollection {
         // release first: persisting a plan the cache manager already
         // holds would keep serving the superseded data
         if (old != null) release(old)
-        Snapshot(spark.sparkContext, listing,
+        new Snapshot(spark.sparkContext, listing,
           spark.read.schema(Schema).parquet(dir.toString)
             .withColumn("norm", VectorFunctions.l2Norm(col("vector")))
             .persist(StorageLevel.MEMORY_AND_DISK))
-      }).frame
+      })
   }
 
+  /** One scored point of a search; None stands for NULL. */
+  private[graft] final case class Hit(score: Option[Double], id: Option[Long],
+      pageContent: String, materia: String, ano: Option[Int])
+
+  /** The SQL order `score DESC NULLS LAST, id ASC NULLS FIRST`, with
+    * doubles compared as Spark compares them (`-0.0` ties `0.0`, NaN is
+    * largest). */
+  private[graft] val SearchOrder: Ordering[Hit] = (a: Hit, b: Hit) => {
+    val byScore = (a.score, b.score) match {
+      case (Some(x), Some(y)) => SQLOrderingUtil.compareDoubles(y, x)
+      case (None, None) => 0
+      case (None, _) => 1
+      case _ => -1
+    }
+    if (byScore != 0) byScore else Ordering[Option[Long]].compare(a.id, b.id)
+  }
+
+  private val ResultSchema = StructType(Seq(
+    StructField("id", LongType), StructField("page_content", StringType),
+    StructField("materia", StringType), StructField("ano", IntegerType),
+    StructField("score", DoubleType)))
+
   /** K1: cosine top-k search with the reference's dimension guard
-    * (qdrant_text_loader.py:134-135), ordered by (score desc, id asc).
+    * (qdrant_text_loader.py:134-135): the `(id, page_content, materia,
+    * ano, score)` rows of the `k` best points by (score desc, id asc), as
+    * a local frame.
     *
-    * Scores the collection's snapshot with `CosineToQuery`:
-    * `dot(v, q) / (norm · |q|)`, with `norm` stored per point, so every
-    * score is bit-identical to `cosineSimilarity(vector, q)` over
-    * [[read]]. A zero norm on either side scores NULL, as there; so does
-    * a norm product too small to represent (below ~4.9e-324), where that
-    * expression divides by 0. Every query plans the same generated code,
-    * so a search compiles nothing once the first has run. */
+    * One job over the snapshot's prepared rows, with no per-query SQL
+    * planning: each partition skips null and wrong-dimension vectors,
+    * scores with [[CosineToQuery]] — `dot(v, q) / (norm · |q|)`, with
+    * `norm` stored per point, so every score is bit-identical to
+    * `cosineSimilarity(vector, q)` over [[read]] — and keeps its bounded
+    * top-k; the driver merges at most partitions · k rows, as Spark's
+    * `TakeOrderedAndProject` does. A zero norm on either side scores
+    * NULL, as there; so does a norm product too small to represent
+    * (below ~4.9e-324), where that expression divides by 0. */
   def search(spark: SparkSession, root: String, name: String,
       query: Seq[Double], k: Int = 1): DataFrame = {
     require(query.nonEmpty, "empty query vector")
-    val coll = snapshot(spark, root, name)
-    coll.select(col("id"), col("page_content"), col("materia"), col("ano"),
-        VectorFunctions.cosineToQuery(col("vector"), col("norm"), query)
-          .as("score"))
-      .filter(size(col("vector")) === query.length)
-      .orderBy(desc("score"), col("id").asc)
-      .limit(k)
+    require(k >= 0, s"k must be >= 0, got $k")
+    val rows = snapshot(spark, root, name).rows
+    val score = CosineToQuery(
+      BoundReference(4, ArrayType(DoubleType, containsNull = false), true),
+      BoundReference(5, DoubleType, true), query.toArray)
+    val dim = query.length
+    val order = SearchOrder
+    val hits =
+      if (k == 0) Seq.empty[Hit]
+      else rows.mapPartitions { it =>
+        // worst kept hit at the head
+        val top = new java.util.PriorityQueue[Hit](order.reverse)
+        it.foreach { r =>
+          if (!r.isNullAt(4) && r.getArray(4).numElements() == dim) {
+            val s = Option(score.eval(r)).map(_.asInstanceOf[Double])
+            val id = if (r.isNullAt(0)) None else Some(r.getLong(0))
+            // rows are reused: copy out only what a kept hit needs
+            def str(i: Int) =
+              if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+            def hit() = Hit(s, id, str(1), str(2),
+              if (r.isNullAt(3)) None else Some(r.getInt(3)))
+            if (top.size < k) top.add(hit())
+            else if (order.lt(Hit(s, id, null, null, None), top.peek)) {
+              top.poll()
+              top.add(hit())
+            }
+          }
+        }
+        Iterator.single(top.toArray(Array.empty[Hit]))
+      }.collect().toSeq.flatten.sorted(order).take(k)
+    spark.createDataFrame(java.util.Arrays.asList(hits.map(h =>
+        Row(h.id.map(Long.box).orNull, h.pageContent, h.materia, h.ano.map(Int.box).orNull,
+          h.score.map(Double.box).orNull)): _*),
+      ResultSchema)
   }
 }

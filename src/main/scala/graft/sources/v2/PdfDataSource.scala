@@ -58,20 +58,6 @@ object PdfDataSource {
     StructField("has_images", BooleanType, nullable = false),
     StructField("image_names", ArrayType(StringType, containsNull = false),
       nullable = false)))
-
-  /** Driver-side listing: `*.pdf` under `dir` (or `dir` itself when it is
-    * a file) through the Hadoop FS — metadata only, never content. */
-  private[v2] def listPdfs(dir: String,
-      conf: org.apache.hadoop.conf.Configuration): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(conf)
-    val stat = fs.getFileStatus(p)
-    if (stat.isFile) Seq(p.toString)
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".pdf"))
-      .map(_.getPath.toString)
-      .sorted
-  }
 }
 
 private[v2] class PdfTable(tablePath: Option[String])
@@ -149,10 +135,9 @@ private[v2] case class PdfScan(path: String, required: StructType,
       .newHadoopConfWithOptions(opts)
 
   override def planInputPartitions(): Array[InputPartition] = {
-    PdfDataSource.listPdfs(path, hadoopConf())
-      .filter(f => nameMatches(
-        f.substring(f.lastIndexOf('/') + 1)))
-      .map(PdfFilePartition(_): InputPartition).toArray
+    graft.sources.PdfSource.listPdfs(hadoopConf(), path)
+      .filter(f => nameMatches(f.getName))
+      .map(f => PdfFilePartition(f.toString): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -87,3 +87,88 @@ class LoadStatsSpec extends SparkSpec {
     assert(msgs(e).exists(_.contains("header")), s"not the header check: $e")
   }
 }
+
+/** The stats CSV's exact bytes, written by `writeCsv`, for the cases the
+  * pipeline meets: a fresh file, a merge where the newest rows win, a
+  * null-year key, and an empty batch merged into an existing file. */
+class LoadStatsBytesSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def counts(rows: (Option[Int], String, String, Long)*) =
+    rows.map { case (y, s, k, n) => (y.map(Int.box).orNull, s, k, n) }
+      .toDF("year", "subject", "kind", "n")
+
+  /** Writes `stats` as the pipeline does and returns the one part file. */
+  private def bytes(stats: org.apache.spark.sql.DataFrame): String = {
+    val out = Files.createTempDirectory("graft_stats_bytes").resolve("s.csv")
+    LoadStats.writeCsv(stats, out.toString)
+    val parts = out.toFile.listFiles().filter(_.getName.startsWith("part-"))
+    assert(parts.length === 1)
+    new String(Files.readAllBytes(parts.head.toPath), "UTF-8")
+  }
+
+  private val header = "row_key,eng,lang,spani,natu,math,huma\n"
+
+  test("golden bytes: a fresh file") {
+    assert(bytes(LoadStats.pivot(counts(
+        (Some(2023), "math", "todas questoes", 45L),
+        (Some(2023), "eng", "todas questoes", 5L),
+        (Some(2023), "math", "questoes add", 44L),
+        (Some(2022), "huma", "questoes add", 1L)))) ===
+      header +
+        "2022 questoes add,0,0,0,0,0,1\n" +
+        "2023 questoes add,0,0,0,0,44,0\n" +
+        "2023 todas questoes,5,0,0,0,45,0\n")
+  }
+
+  test("golden bytes: a merge keeps old rows, newest rows win, a null " +
+      "year keys by kind alone") {
+    val dir = Files.createTempDirectory("graft_stats_merge")
+    val old = dir.resolve("old.csv").toString
+    LoadStats.writeCsv(LoadStats.pivot(counts(
+      (Some(2022), "math", "todas questoes", 37L),
+      (Some(2021), "natu", "questoes add", 2L))), old)
+    val merged = LoadStats.mergeWithExisting(spark, Some(old), counts(
+      (Some(2022), "math", "todas questoes", 40L),
+      (None, "lang", "todas questoes", 3L),
+      (Some(2023), "spani", "questoes add", 7L)))
+    assert(bytes(merged) ===
+      header +
+        "2021 questoes add,0,0,0,2,0,0\n" +
+        "2022 todas questoes,0,0,0,0,40,0\n" +
+        "2023 questoes add,0,0,7,0,0,0\n" +
+        "todas questoes,0,3,0,0,0,0\n")
+  }
+
+  test("golden bytes: an empty batch merged into an existing file " +
+      "rewrites it unchanged") {
+    val dir = Files.createTempDirectory("graft_stats_empty")
+    val old = dir.resolve("old.csv").toString
+    LoadStats.writeCsv(LoadStats.pivot(counts(
+      (Some(2022), "math", "todas questoes", 37L),
+      (Some(2022), "eng", "questoes add", 5L))), old)
+    val want = bytes(LoadStats.mergeWithExisting(spark, None, counts(
+      (Some(2022), "math", "todas questoes", 37L),
+      (Some(2022), "eng", "questoes add", 5L))))
+    assert(bytes(LoadStats.mergeWithExisting(spark, Some(old), counts())) ===
+      want)
+    assert(want === header + "2022 questoes add,5,0,0,0,0,0\n" +
+      "2022 todas questoes,0,0,0,0,37,0\n")
+  }
+
+  test("the guards' messages") {
+    val e1 = intercept[IllegalArgumentException] {
+      LoadStats.pivot(counts((Some(2022), "physics", "todas questoes", 5L)))
+    }
+    assert(e1.getMessage === "requirement failed: subject 'physics' is not " +
+      "in eng/lang/spani/natu/math/huma — the pivot whitelist would " +
+      "silently drop its counts")
+    val e2 = intercept[IllegalArgumentException] {
+      LoadStats.pivot(counts((Some(2022), "math", "todas questoes", 5L),
+        (Some(2022), "math", "todas questoes", 7L)))
+    }
+    assert(e2.getMessage === "requirement failed: duplicate (year, subject, " +
+      "kind) = [2022,math,todas questoes,2] in counts — first(n) has no " +
+      "well-defined winner")
+  }
+}

@@ -99,4 +99,25 @@ class PdfV2SourceSpec extends SparkSpec {
     assert(rows.exists(_.getString(2).nonEmpty),
       "no text decoded from the real answer-key PDF")
   }
+
+  test("both batch readers list one way: a macOS AppleDouble `._a.pdf` " +
+      "beside a real PDF is skipped, and so is a subdirectory") {
+    val dir = writeFixtures()
+    val real = java.nio.file.Paths.get(dir, "a.pdf")
+    def copy(to: String*): Unit = {
+      val p = java.nio.file.Paths.get(dir, to: _*)
+      java.nio.file.Files.createDirectories(p.getParent)
+      java.nio.file.Files.copy(real, p)
+      ()
+    }
+    copy("._a.pdf"); copy("_a.pdf"); copy("sub", "d.pdf")
+    def names(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select("file_name").distinct().collect().map(_.getString(0))
+        .toSeq.sorted
+    val want = Seq("a.pdf", "b.pdf")
+    assert(names(PdfSource.pages(spark, dir)) === want)
+    assert(names(spark.read.format("graft-pdf").load(dir)) === want)
+    assert(PdfSource.listPdfs(spark.sparkContext.hadoopConfiguration, dir)
+      .map(_.getName).sorted === want)
+  }
 }

@@ -49,8 +49,11 @@ class PipelineSpec extends SparkSpec {
     both.foreach(r => assert(math.abs(r.getAs[Double]("score") - 1.0) < 1e-9))
   }
 
-  test("E1 from RAW PDF FILES on disk: processPdfFolder renders the same " +
-      "13 points as the fixture path") {
+  /** The TestBooklet exam as raw PDFs in a fresh folder: one page per
+    * TestBooklet row, real content streams; D1 page 2 carries an embedded
+    * image XObject (drives has_images); the GB PDFs' page 0 carries the
+    * key grid. */
+  private def pdfFolder(withKeys: Boolean = true): String = {
     val dir = Files.createTempDirectory("graft_pdfetl").toString
     def writePdf(name: String, pages: Seq[Seq[String]],
         images: Set[Int]): Unit = {
@@ -58,20 +61,24 @@ class PipelineSpec extends SparkSpec {
         PdfFixture.build(pages, images))
       ()
     }
-    // booklets: one page per TestBooklet row, real content streams;
-    // D1 page 2 carries an embedded image XObject (drives has_images)
     writePdf(TestBooklet.d1File,
       TestBooklet.d1Pages.sortBy(_._2).map(_._3.split("\n").toSeq),
       images = Set(2))
     writePdf(TestBooklet.d2File,
       TestBooklet.d2Pages.sortBy(_._2).map(_._3.split("\n").toSeq),
       images = Set.empty)
-    // answer keys: GB PDFs whose page 0 carries the key grid
-    writePdf(TestBooklet.d1KeyFile,
-      Seq(TestBooklet.d1KeyText.split("\n").toSeq), Set.empty)
-    writePdf(TestBooklet.d2KeyFile,
-      Seq(TestBooklet.d2KeyText.split("\n").toSeq), Set.empty)
+    if (withKeys) {
+      writePdf(TestBooklet.d1KeyFile,
+        Seq(TestBooklet.d1KeyText.split("\n").toSeq), Set.empty)
+      writePdf(TestBooklet.d2KeyFile,
+        Seq(TestBooklet.d2KeyText.split("\n").toSeq), Set.empty)
+    }
+    dir
+  }
 
+  test("E1 from RAW PDF FILES on disk: processPdfFolder renders the same " +
+      "13 points as the fixture path") {
+    val dir = pdfFolder()
     val root = Files.createTempDirectory("graft_pdfetl_coll").toString
     VectorCollection.recreate(spark, root, "enem", dim = 64)
     val report = Pipeline.processPdfFolder(spark, dir, root, "enem",
@@ -150,5 +157,51 @@ class PipelineSpec extends SparkSpec {
       assert(leaked.isEmpty,
         s"client=$client: the failed load left persisted RDDs $leaked")
     }
+  }
+
+  test("an unpaired PDF folder aborts before any Spark job: pairing runs " +
+      "on the driver's listing, before a page is decoded") {
+    val dir = pdfFolder(withKeys = false)
+    // a hidden AppleDouble key beside the booklets pairs nothing
+    Files.copy(java.nio.file.Paths.get(dir, TestBooklet.d1File),
+      java.nio.file.Paths.get(dir, "._" + TestBooklet.d1KeyFile))
+    val root = Files.createTempDirectory("graft_pdfetl_unpaired").toString
+    VectorCollection.recreate(spark, root, "enem", dim = 64)
+    var error: Option[Throwable] = None
+    val jobs = JobCount.of(spark) {
+      error = scala.util.Try(Pipeline.processPdfFolder(spark, dir, root,
+        "enem", dim = 64)).failed.toOption
+    }
+    assert(error.map(_.getMessage) ===
+      Some("2 test PDFs have no matching answer key"))
+    assert(error.exists(_.isInstanceOf[java.io.IOException]))
+    assert(jobs === 0)
+  }
+
+  test("job budget: processPdfFolder into a non-empty collection with an " +
+      "existing stats CSV launches at most 22 jobs, and merges the stats") {
+    val dir = pdfFolder()
+    val root = Files.createTempDirectory("graft_pdfetl_budget").toString
+    val stats = Files.createTempDirectory("graft_pdfetl_stats")
+    VectorCollection.recreate(spark, root, "enem", dim = 64)
+    Pipeline.processPdfFolder(spark, dir, root, "enem", dim = 64,
+      statsCsv = Some(stats.resolve("s.csv").toString))
+    var report: Pipeline.LoadReport = null
+    val jobs = JobCount.of(spark) {
+      report = Pipeline.processPdfFolder(spark, dir, root, "enem", dim = 64,
+        statsCsv = Some(stats.resolve("s.csv.out").toString))
+    }
+    assert(report === Pipeline.LoadReport(2L, 0L, 13L, 13L))
+    info(s"$jobs jobs")
+    val part = stats.resolve("s.csv.out.out").toFile.listFiles()
+      .filter(_.getName.startsWith("part-"))
+    assert(part.length === 1)
+    assert(new String(Files.readAllBytes(part.head.toPath), "UTF-8") ===
+      "row_key,eng,lang,spani,natu,math,huma\n" +
+      "2023 questoes add,5,1,3,4,0,0\n" +
+      "2023 todas questoes,5,1,3,4,0,0\n")
+    assert(VectorCollection.read(spark, root, "enem").select("id").collect()
+      .map(_.getLong(0)).sorted.toSeq === (0L until 26L))
+    assert(jobs <= 22, s"$jobs jobs")
   }
 }

@@ -3,14 +3,13 @@ package graft
 import graft.functions.VectorFunctions
 import graft.sources.VectorCollection
 import graft.stats.LoadStats
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
 
 class VectorCollectionSpec extends SparkSpec {
 
@@ -282,21 +281,9 @@ class VectorCollectionSpec extends SparkSpec {
     points(500L -> Seq.fill(5)(1.0)).write.mode("append")
       .parquet(VectorCollection.path(root, "b"))
 
-    def reference(q: Seq[Double], k: Int): DataFrame =
-      VectorCollection.read(spark, root, "b")
-        .select(col("id"), col("page_content"), col("materia"), col("ano"),
-          VectorFunctions.cosineSimilarity(col("vector"), typedLit(q))
-            .as("score"))
-        .filter(size(col("vector")) === q.length)
-        .orderBy(desc("score"), col("id").asc)
-        .limit(k)
-    def bits(df: DataFrame) = df.collect().toSeq.map(r =>
-      (r.getLong(0), r.getString(1), r.getString(2), r.getInt(3),
-        if (r.isNullAt(4)) None
-        else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(4)))))
     for (q <- Seq.fill(12)(vec()) ++ Seq(tie, zero); k <- Seq(1, 10, 1000))
       assert(bits(VectorCollection.search(spark, root, "b", q, k)) ===
-        bits(reference(q, k)))
+        bits(sqlTopK(root, "b", q, k)))
 
     val all = VectorCollection.search(spark, root, "b", random(3)._2,
       k = 1000).collect()
@@ -319,59 +306,126 @@ class VectorCollectionSpec extends SparkSpec {
     assert(cached(read.filter(col("id") >= 5L)).isEmpty)
   }
 
-  /** Jobs `body` starts on this thread, seen by a listener. A marker job
-    * run afterwards flushes the listener queue: events arrive in order,
-    * so once the marker's start is seen, so is every earlier one. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"counted-${java.util.UUID.randomUUID}"
-    val started = new AtomicInteger()
-    val marker = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(g) if g == group => started.incrementAndGet()
-          case Some(g) if g == s"$group-marker" => marker.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(marker.await(60, TimeUnit.SECONDS), "listener queue never drained")
-      started.get
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("job counts: planning read launches no job; a search on a warm " +
       "snapshot launches exactly one") {
     val root = Files.createTempDirectory("graft_snap_jobs").toString
     searchedCollection(root, "j")
-    assert(jobsOf(VectorCollection.read(spark, root, "j")) === 0)
-    assert(jobsOf(VectorCollection.search(spark, root, "j",
+    assert(JobCount.of(spark)(VectorCollection.read(spark, root, "j")) === 0)
+    assert(JobCount.of(spark)(VectorCollection.search(spark, root, "j",
       Seq(0.0, 1.0, 0.0, 0.0), k = 3).collect()) === 1)
   }
 
-  test("every search plans the same generated code, whatever the query " +
-      "and its norm") {
+  test("a warm search compiles no class, whatever the query and its norm") {
+    import org.apache.spark.metrics.source.CodegenMetrics
     val root = Files.createTempDirectory("graft_snap_code").toString
     searchedCollection(root, "g")
-    def code(q: Seq[Double]): Seq[String] =
-      VectorCollection.search(spark, root, "g", q, k = 3)
-        .queryExecution.executedPlan.collect {
-          case w: org.apache.spark.sql.execution.WholeStageCodegenExec =>
-            w.doCodeGen()._2.body
-        }
-    val first = code(Seq(0.0, 1.0, 0.0, 0.0))
-    assert(first.nonEmpty)
+    def compiles(q: Seq[Double]): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      VectorCollection.search(spark, root, "g", q, k = 3).collect()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    compiles(Seq(0.0, 1.0, 0.0, 0.0))
     // norms 3, sqrt(2), and (1, 2, 3, 4) normalized, whose norm sums to
     // one ulp below 1
     val offOne = Seq(1.0, 2.0, 3.0, 4.0).map(_ / math.sqrt(30.0))
     for (q <- Seq(Seq(3.0, 0.0, 0.0, 0.0), Seq(1.0, 1.0, 0.0, 0.0), offOne))
-      assert(code(q) === first)
+      assert(compiles(q) === 0L, s"query $q")
+  }
+
+  /** The SQL top-k a search must equal: `cosineSimilarity` over [[read]],
+    * ordered by (score desc, id asc). */
+  private def sqlTopK(root: String, name: String, q: Seq[Double],
+      k: Int): DataFrame =
+    VectorCollection.read(spark, root, name)
+      .select(col("id"), col("page_content"), col("materia"), col("ano"),
+        VectorFunctions.cosineSimilarity(col("vector"), typedLit(q))
+          .as("score"))
+      .filter(size(col("vector")) === q.length)
+      .orderBy(desc("score"), col("id").asc)
+      .limit(k)
+
+  private def bits(df: DataFrame) = df.collect().toSeq.map(r =>
+    (r.get(0), r.getString(1), r.getString(2), r.getInt(3),
+      if (r.isNullAt(4)) None
+      else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(4)))))
+
+  test("search edge cases across partitions: equal scores order by id, " +
+      "NULL scores rank last, a NULL id first among equal scores, null " +
+      "and wrong-dimension vectors are skipped, k beyond the collection " +
+      "returns every point") {
+    val root = Files.createTempDirectory("graft_snap_edges").toString
+    VectorCollection.recreate(spark, root, "t", dim = 4)
+    val zero = Seq.fill(4)(0.0)
+    // one append per batch: one part file, so one partition, each
+    val batches = Seq(
+      Seq(9L -> unit, 2L -> zero, 14L -> Seq(0.0, 1.0, 0.0, 0.0)),
+      Seq(7L -> unit, 1L -> Seq(-1.0, 0.0, 0.0, 0.0)),
+      Seq(3L -> unit, 12L -> unit),
+      Seq(5L -> Seq(2.0, 0.0, 0.0, 0.0), 0L -> zero))
+    batches.foreach(b => VectorCollection.append(spark, root, "t", points(b: _*)))
+    // a plain writer bypasses append's dim guard
+    points(4L -> Seq(1.0, 0.0)).write.mode("append")
+      .parquet(VectorCollection.path(root, "t"))
+    points(6L -> null).write.mode("append")
+      .parquet(VectorCollection.path(root, "t"))
+    points(8L -> unit).withColumn("id", lit(null).cast("long")).write
+      .mode("append").parquet(VectorCollection.path(root, "t"))
+    assert(VectorCollection.read(spark, root, "t").rdd.getNumPartitions > 1)
+
+    for (q <- Seq(unit, Seq(0.0, 1.0, 0.0, 0.0), Seq(0.0, 0.0, 1.0, 0.0));
+        k <- Seq(1, 2, 3, 5, 9, 10, 100))
+      assert(bits(VectorCollection.search(spark, root, "t", q, k)) ===
+        bits(sqlTopK(root, "t", q, k)), s"q=$q k=$k")
+    val all = VectorCollection.search(spark, root, "t", unit, k = 100)
+      .collect()
+    assert(all.map(r => Option(r.get(0))).toSeq === (None +:
+      Seq(3L, 5L, 7L, 9L, 12L, 14L, 1L, 0L, 2L).map(Some(_))))
+    assert(all.takeRight(2).forall(_.isNullAt(4)))
+    assert(VectorCollection.search(spark, root, "t", unit, k = 0).isEmpty)
+  }
+
+  test("the search order is Spark's: score desc NULLS LAST with -0.0 " +
+      "tying 0.0 and NaN largest, then id asc NULLS FIRST") {
+    import spark.implicits._
+    import VectorCollection.Hit
+    val scores = Seq(Some(0.0), Some(-0.0), None, Some(Double.NaN),
+      Some(1.0), Some(-1.0), Some(Double.PositiveInfinity),
+      Some(Double.NegativeInfinity), Some(Double.MinPositiveValue))
+    val ids = Seq(None, Some(3L), Some(-2L), Some(3L), Some(7L))
+    val hits = for ((s, i) <- (scores ++ scores).zipWithIndex)
+      yield Hit(s, ids(i % ids.size), null, null, None)
+    val want = hits.map(h =>
+        (h.score.map(Double.box).orNull, h.id.map(Long.box).orNull))
+      .toDF("score", "id").orderBy(desc("score"), col("id").asc).collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Double]),
+        Option(r.get(1)).map(_.asInstanceOf[Long])))
+    val got = hits.sorted(VectorCollection.SearchOrder).map(h => (h.score, h.id))
+    def key(x: (Option[Double], Option[Long])) =
+      (x._1.map(java.lang.Double.doubleToRawLongBits), x._2)
+    assert(got.map(key) === want.toSeq.map(key))
+    // the -0.0/0.0 tie is broken by id, whichever zero it carries
+    assert(VectorCollection.SearchOrder.lt(
+      Hit(Some(-0.0), Some(1L), null, null, None),
+      Hit(Some(0.0), Some(2L), null, null, None)))
+  }
+
+  test("concurrent searches return what serial ones do") {
+    val root = Files.createTempDirectory("graft_snap_conc").toString
+    VectorCollection.recreate(spark, root, "c", dim = 4)
+    val rnd = new scala.util.Random(3)
+    VectorCollection.append(spark, root, "c",
+      points((0L until 64L).map(_ -> Seq.fill(4)(rnd.nextGaussian())): _*))
+    val queries = Seq.fill(8)(Seq.fill(4)(rnd.nextGaussian()))
+    val serial = queries.map(q =>
+      bits(VectorCollection.search(spark, root, "c", q, k = 5)))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      implicit val ec: ExecutionContext =
+        ExecutionContext.fromExecutorService(pool)
+      val concurrent = (0 until 2).map(_ => Future(queries.map(q =>
+        bits(VectorCollection.search(spark, root, "c", q, k = 5)))))
+      concurrent.foreach(f => assert(Await.result(f, 120.seconds) === serial))
+    } finally pool.shutdown()
   }
 
   test("A4: stats pivot merge matches the golden CSV shape") {

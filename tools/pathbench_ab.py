@@ -14,7 +14,11 @@ ones, so a drift in host load hits both sides alike.
 
 Prints, per workload and end-to-end metric, each side's median and
 quartiles, the change's wins (a tie counts for neither side) and the
-relative move of the medians. A metric is flagged WORSE when the change's
+relative move of the medians. Under every `*_tail_*` metric it prints each
+side's sample count and tail percentile (from the runs' own notes), and
+says when the two sides' counts differ: a tail is the highest sample with
+ten beyond it, so a side that fits more samples in the window reports a
+deeper percentile (24 samples give p58, 40 give p75). A metric is flagged WORSE when the change's
 median is worse than the parent's by more than its BENCHMARK.json bound, and
 GAIN when the change wins at least 9 of 10 pairs and the medians differ by
 more than the parent's interquartile range. Bounds and directions come from
@@ -23,6 +27,7 @@ or when a metric is flagged WORSE.
 """
 import argparse
 import json
+import re
 import shutil
 import statistics
 import subprocess
@@ -44,18 +49,38 @@ def clone(sha, dest):
     git("checkout", "--quiet", sha, cwd=dest)
 
 
+# A metric line of a run's stdout: name, value, unit, then its note,
+# "n=<samples>" and, for a tail, "p<percentile>".
+NOTE = re.compile(r"^\s+(\S+)\s+\S+\s+\S+\s+n=(\d+)(?: p(\d+))?")
+
+
+def sample_notes(stdout):
+    """{metric: (sample count, tail percentile or None)} from a run's
+    metric lines."""
+    out = {}
+    for line in stdout.splitlines():
+        m = NOTE.match(line)
+        if m:
+            out[m.group(1)] = (int(m.group(2)),
+                               int(m.group(3)) if m.group(3) else None)
+    return out
+
+
 def run_once(bench, checkout, workload, seed):
-    """One benchmark run; returns its last stdout line as JSON, or None."""
+    """One benchmark run; returns its last stdout line as JSON, with the
+    metric notes under "samples", or None."""
     cmd = bench["command"] + ["--workload", workload, "--seed", str(seed),
                               "--seconds", str(bench["run_seconds"]),
                               "--trace", "0"]
     p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     lines = p.stdout.strip().splitlines()
     try:
-        return json.loads(lines[-1])
+        res = json.loads(lines[-1])
     except (IndexError, ValueError):
         sys.stderr.write(f"run failed (exit {p.returncode}):\n{p.stderr[-2000:]}\n")
         return None
+    res["samples"] = sample_notes(p.stdout)
+    return res
 
 
 def quartiles(xs):
@@ -67,6 +92,31 @@ def quartiles(xs):
 
 def cell(median, q):
     return f"{median:.4g} [{q[0]:.4g}, {q[1]:.4g}]"
+
+
+def span(xs):
+    lo, hi = min(xs), max(xs)
+    return f"{lo}" if lo == hi else f"{lo}-{hi}"
+
+
+def samples_line(name, pairs):
+    """Each side's sample counts and tail percentiles for one metric, and
+    whether the two sides' counts differ; None without notes."""
+    sides = {}
+    for i, side in enumerate(("parent", "change")):
+        notes = [r[i].get("samples", {}).get(name) for r in pairs]
+        notes = [n for n in notes if n]
+        if not notes:
+            return None
+        ns, ps = [n[0] for n in notes], [n[1] for n in notes if n[1]]
+        sides[side] = (sorted(ns), f"n={span(ns)}" +
+                       (f" p{span(ps)}" if ps else ""))
+    line = (f"  {'':22} samples: parent {sides['parent'][1]}, "
+            f"change {sides['change'][1]}")
+    if sides["parent"][0] != sides["change"][0]:
+        line += ("; counts differ, so the tails sit at different "
+                 "percentiles (the side with more samples reads deeper)")
+    return line
 
 
 def report(bench, workload, pairs):
@@ -96,6 +146,10 @@ def report(bench, workload, pairs):
             flag = "GAIN"
         print(f"{name:24} {cell(pm, pq):>30} {cell(cm, cq):>30} "
               f"{wins:>3}/{len(got):<2} {move:+8.1%}  {flag}")
+        if "_tail_" in name:
+            line = samples_line(name, pairs)
+            if line:
+                print(line)
     return worse
 
 
