@@ -81,7 +81,7 @@ object StreamBench {
       // first batch must exist before the stream starts (schema infer)
       batchArchives(0).write.mode("append").parquet(in)
       DocIngest.startCrawlPipeline(spark, in, train, idx, ckpt,
-        minQualityMicro = minQ, pollInterval = "100 milliseconds")
+        minQualityMicro = minQ)
     }
     try {
       var committed = 0L

@@ -271,13 +271,11 @@ object Dedup {
     * which removes exactly the ubiquitous-shingle explosion that makes
     * the naive shared-shingle join quadratic.
     *
-    * Scale shape: one df count keyed by shingle, one doc-keyed rank
-    * window, a self-join that only prefix rows enter, then the standard
-    * candidate-verify joins (ids only on every shuffle). */
+    * Scale shape: one df count keyed by shingle, one doc-keyed prefix
+    * aggregation, a self-join that only prefix rows enter, then the
+    * standard candidate-verify joins (ids only on every shuffle). */
   def prefixFilterJaccardPairs(docs: DataFrame, idCol: String,
       textCol: String, n: Int = 3, threshold: Double = 0.8): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold must be in (0, 1], got $threshold")
     // The shingle frame feeds four consumers (df counts, prefix build,
     // both verify sides): localCheckpoint it so the corpus scan +
     // shingling kernel runs ONCE. Measured at sf0.1 (r9): checkpoint
@@ -285,9 +283,40 @@ object Dedup {
     // and the gap only widens when the corpus scan is expensive (the
     // 100 TB case). The r8 note that recompute won predates the
     // observe-based CC (fewer competing jobs changed the balance).
-    val base = shingleFrame(docs, idCol, textCol, n, k = 0)
+    val (base, cand) = jaccardCandidates(docs, idCol, textCol, n, threshold,
+      checkpoint = true)
+    // exact verify WITHOUT shingle-grain shuffles: the candidate set is
+    // prefix-bounded (orders of magnitude below the shingle table), so
+    // join each side's doc-level shingle SET back (doc-grain rows) and
+    // intersect in-row — `shs` is distinct per doc, so
+    // size(array_intersect) IS the common-shingle count. Replaces two
+    // full-shingle-table exchanges + a pair-grain aggregation from the
+    // r7-profiled form (dedup_apply's dominant cost).
+    val sets = base.select($"id", $"shs", $"n_sh")
+    cand
+      .join(sets.select($"id".as("id_a"), $"shs".as("_sa"),
+        $"n_sh".as("na")), "id_a")
+      .join(sets.select($"id".as("id_b"), $"shs".as("_sb"),
+        $"n_sh".as("nb")), "id_b")
+      .withColumn("_c", size(array_intersect($"_sa", $"_sb")))
+      .select($"id_a", $"id_b",
+        ($"_c" / ($"na" + $"nb" - $"_c")).as("jaccard"))
+      .filter($"jaccard" >= threshold)
+  }
+
+  /** ONE candidate builder for [[prefixFilterJaccardPairs]] and its
+    * pruning audit [[prefixFilterCandidateCount]] (as
+    * [[containmentCandidates]] serves the containment pair): the prefix
+    * length and shingle order live here only, so the audit measures the
+    * filter that ships. Returns (base, candidate (id_a < id_b) pairs). */
+  private def jaccardCandidates(docs: DataFrame, idCol: String,
+      textCol: String, n: Int, threshold: Double,
+      checkpoint: Boolean): (DataFrame, DataFrame) = {
+    require(threshold > 0.0 && threshold <= 1.0,
+      s"threshold must be in (0, 1], got $threshold")
+    val raw = shingleFrame(docs, idCol, textCol, n, k = 0)
       .withColumn("n_sh", size($"shs"))
-      .localCheckpoint()
+    val base = if (checkpoint) raw.localCheckpoint() else raw
     val sh = base.select($"id", $"n_sh", explode($"shs").as("sg"))
     val dfreq = sh.groupBy($"sg").agg(count(lit(1)).as("_df"))
     // Per-doc prefix via ONE aggregation (r16): the row_number form
@@ -310,45 +339,17 @@ object Dedup {
         col("a.sg") === col("b.sg") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
-    // exact verify WITHOUT shingle-grain shuffles: the candidate set is
-    // prefix-bounded (orders of magnitude below the shingle table), so
-    // join each side's doc-level shingle SET back (doc-grain rows) and
-    // intersect in-row — `shs` is distinct per doc, so
-    // size(array_intersect) IS the common-shingle count. Replaces two
-    // full-shingle-table exchanges + a pair-grain aggregation from the
-    // r7-profiled form (dedup_apply's dominant cost).
-    val sets = base.select($"id", $"shs", $"n_sh")
-    cand
-      .join(sets.select($"id".as("id_a"), $"shs".as("_sa"),
-        $"n_sh".as("na")), "id_a")
-      .join(sets.select($"id".as("id_b"), $"shs".as("_sb"),
-        $"n_sh".as("nb")), "id_b")
-      .withColumn("_c", size(array_intersect($"_sa", $"_sb")))
-      .select($"id_a", $"id_b",
-        ($"_c" / ($"na" + $"nb" - $"_c")).as("jaccard"))
-      .filter($"jaccard" >= threshold)
+    (base, cand)
   }
 
   /** Candidate-pair count under prefix filtering vs the naive shared-
     * shingle join — the pruning-effectiveness audit backing the
-    * [[prefixFilterJaccardPairs]] scaladoc's claim. */
+    * [[prefixFilterJaccardPairs]] scaladoc's claim; shares the candidate
+    * builder with the operator, by construction. */
   private[graft] def prefixFilterCandidateCount(docs: DataFrame,
-      idCol: String, textCol: String, n: Int, threshold: Double): Long = {
-    val base = shingleFrame(docs, idCol, textCol, n, k = 0)
-      .withColumn("n_sh", size($"shs"))
-    val sh = base.select($"id", $"n_sh", explode($"shs").as("sg"))
-    val dfreq = sh.groupBy($"sg").agg(count(lit(1)).as("_df"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"id").orderBy($"_df", $"sg")
-    val prefix = sh.join(dfreq, "sg")
-      .withColumn("_pos", row_number().over(w))
-      .filter($"_pos" <= $"n_sh" - ceil($"n_sh" * lit(threshold)) + lit(1))
-      .select($"id", $"sg")
-    prefix.as("a").join(prefix.as("b"),
-        col("a.sg") === col("b.sg") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b").count()
-  }
+      idCol: String, textCol: String, n: Int, threshold: Double): Long =
+    jaccardCandidates(docs, idCol, textCol, n, threshold,
+      checkpoint = false)._2.count()
 
   /** (id, bucket) band keys from a signature table: bucket = hash of
     * (band index, the band's signature slice). Content-derived and

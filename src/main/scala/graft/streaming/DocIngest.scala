@@ -1,6 +1,8 @@
 package graft.streaming
 
 import graft.functions.Fingerprints
+import graft.operators.{Dedup, LshIndex}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -11,26 +13,46 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * appended to the collection via foreachBatch, i.e. the same batch plan
   * run incrementally. No watermarks/session state are required by the
   * reference semantics; dedup-on-ingest shows the stateful form.
+  *
+  * Every form runs one way: a source transform over a file stream and a
+  * per-batch body started by [[eachBatch]], on the one [[Cadence]],
+  * committing through the one sink [[commitBatch]].
   */
 object DocIngest {
+
+  /** The trigger of every stream in this package: a micro-batch starts
+    * at most once a second, so files that land within the same second
+    * share a batch and an idle stream lists its source once a second
+    * (Spark's default trigger relists it every
+    * `spark.sql.streaming.pollingDelay`, 10 ms). */
+  private val Cadence = Trigger.ProcessingTime("1 second")
+
+  /** Start `stream`, checkpointed at `checkpoint`, running `body` on every
+    * micro-batch with its batch id: the one wiring of every
+    * `foreachBatch` stream in this package. Whether an empty batch is
+    * skipped is the body's call: `isEmpty` on a stateful plan executes
+    * it. */
+  private[streaming] def eachBatch(stream: DataFrame, checkpoint: String,
+      outputMode: String = "append")(body: (DataFrame, Long) => Unit)
+      : StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .outputMode(outputMode)
+      .trigger(Cadence)
+      .foreachBatch(body)
+      .start()
 
   /** Stream parquet document batches from `inDir`, hash-embed, and
     * commit each micro-batch to the collection dir exactly once through
     * [[commitBatch]]. */
   def start(spark: SparkSession, inDir: String, schema: String,
-      collectionPath: String, checkpoint: String, dim: Int = 64,
-      pollInterval: String = "1 second"): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(inDir)
-      .withColumn("vector", Fingerprints.hashEmbed(col("text"), dim))
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(pollInterval))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitBatch(batch, batchId, collectionPath); ()
-      }
-      .start()
+      collectionPath: String, checkpoint: String,
+      dim: Int = 64): StreamingQuery =
+    eachBatch(spark.readStream.schema(schema).parquet(inDir)
+        .withColumn("vector", Fingerprints.hashEmbed(col("text"), dim)),
+      checkpoint) { (batch, batchId) =>
+      commitBatch(batch, batchId, collectionPath)
+    }
 
   /** Spark-NATIVE streaming dedup: `dropDuplicatesWithinWatermark` keyed
     * on `idCol`. Unlike the custom hash-index gates (which remember the
@@ -46,20 +68,11 @@ object DocIngest {
   def startWatermarkDedup(spark: SparkSession, inDir: String,
       schema: String, outDir: String, checkpoint: String,
       idCol: String = "doc_id", tsCol: String = "ts",
-      delay: String = "1 hour",
-      pollInterval: String = "1 second"): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(inDir)
-      .withWatermark(tsCol, delay)
-      .dropDuplicatesWithinWatermark(idCol)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(pollInterval))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitBatchStateful(batch, batchId, outDir); ()
-      }
-      .start()
+      delay: String = "1 hour"): StreamingQuery =
+    eachBatch(spark.readStream.schema(schema).parquet(inDir)
+        .withWatermark(tsCol, delay)
+        .dropDuplicatesWithinWatermark(idCol),
+      checkpoint) { (batch, batchId) => commitBatch(batch, batchId, outDir) }
 
   /** Event-time windowed ingest statistics with a watermark: per
     * (window, subject) document counts — the streaming form of the A3/A4
@@ -70,9 +83,7 @@ object DocIngest {
   def windowedCounts(spark: SparkSession, inDir: String, schema: String,
       outDir: String, checkpoint: String, window: String = "1 hour",
       watermark: String = "2 hours"): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(inDir)
+    spark.readStream.schema(schema).parquet(inDir)
       .withWatermark("event_time", watermark)
       .groupBy(org.apache.spark.sql.functions.window(col("event_time"),
         window).as("win"), col("subject"))
@@ -82,6 +93,7 @@ object DocIngest {
       .writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
+      .trigger(Cadence)
       .format("parquet")
       .option("path", outDir)
       .start()
@@ -96,9 +108,7 @@ object DocIngest {
   def sessionWindows(spark: SparkSession, inDir: String, schema: String,
       outDir: String, checkpoint: String, gap: String = "30 minutes",
       watermark: String = "1 hour"): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(inDir)
+    spark.readStream.schema(schema).parquet(inDir)
       .withWatermark("event_time", watermark)
       .groupBy(col("subject"),
         org.apache.spark.sql.functions.session_window(col("event_time"),
@@ -109,6 +119,7 @@ object DocIngest {
       .writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
+      .trigger(Cadence)
       .format("parquet")
       .option("path", outDir)
       .start()
@@ -119,15 +130,12 @@ object DocIngest {
     * mapGroupsWithState, emitting the updated running total once per
     * subject per micro-batch. State is one long per key — bounded by the
     * subject domain, no watermark needed. Each micro-batch commits once
-    * through [[commitBatchStateful]], so a replayed batch re-emits
-    * nothing. */
+    * through [[commitBatch]], so a replayed batch re-emits nothing. */
   def runningCounts(spark: SparkSession, inDir: String, schema: String,
       outDir: String, checkpoint: String): StreamingQuery = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.GroupState
-    spark.readStream
-      .schema(schema)
-      .parquet(inDir)
+    val totals = spark.readStream.schema(schema).parquet(inDir)
       .selectExpr("subject")
       .as[String]
       .groupByKey(identity)
@@ -139,14 +147,9 @@ object DocIngest {
           (subject, total)
       }
       .toDF("subject", "running_total")
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitBatchStateful(batch.withColumn("batch_id", lit(batchId)),
-          batchId, outDir); ()
-      }
-      .start()
+    eachBatch(totals, checkpoint, "update") { (batch, batchId) =>
+      commitBatch(batch.withColumn("batch_id", lit(batchId)), batchId, outDir)
+    }
   }
 
   /** Streaming sessionization — the streaming form of the batch
@@ -160,7 +163,7 @@ object DocIngest {
     * with `processAllAvailable`, which never settles once wall-clock
     * timeouts keep scheduling no-data batches. Emitted rows match the
     * batch rollup's columns. Each micro-batch commits once through
-    * [[commitBatchStateful]]. */
+    * [[commitBatch]]. */
   def sessionize(spark: SparkSession, inDir: String, schema: String,
       outDir: String, checkpoint: String, gapSeconds: Long = 1800L,
       idleTimeout: Option[String] = None): StreamingQuery = {
@@ -171,9 +174,7 @@ object DocIngest {
       if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
       else GroupStateTimeout.NoTimeout()
     // state: (sessionStartEpoch, lastEpoch, nEvents, valueSum)
-    spark.readStream
-      .schema(schema)
-      .parquet(inDir)
+    val sessions = spark.readStream.schema(schema).parquet(inDir)
       .selectExpr("user_id", "CAST(ts AS LONG) AS epoch", "value")
       .as[(Long, Long, Double)]
       .groupByKey(_._1)
@@ -211,13 +212,9 @@ object DocIngest {
       }
       .toDF("user_id", "session_start", "session_end", "n_events",
         "session_value")
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitBatchStateful(batch, batchId, outDir); ()
-      }
-      .start()
+    eachBatch(sessions, checkpoint) { (batch, batchId) =>
+      commitBatch(batch, batchId, outDir)
+    }
   }
 
   /** Commit one micro-batch into its own `batch=<id>` directory: write to
@@ -230,14 +227,25 @@ object DocIngest {
     * checkpoint commit, Structured Streaming replays the batch with the
     * SAME batchId — the replay finds the directory and writes nothing, so
     * the sink is exactly-once end-to-end. Readers see the collection as
-    * ordinary partitioned parquet (`batch` becomes a partition column). */
+    * ordinary partitioned parquet (`batch` becomes a partition column).
+    *
+    * The one sink of every stream here. A batch that is already committed
+    * still EXECUTES its plan, through the `noop` sink: a plan holding
+    * stateful operators (stream dedup, watermarked joins, keyed or
+    * `transformWithState` state) must commit every state-store partition
+    * for the trigger, or Spark fails the batch with
+    * STATE_STORE_COMMIT_VALIDATION_FAILED and the stream is stuck. A
+    * stateless plan pays one extra run into `noop`, only on the crash
+    * replay of an already-committed batch. */
   def commitBatch(batch: DataFrame, batchId: Long, outDir: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(outDir)
+    val fs = new Path(outDir)
       .getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(s"$outDir/batch=$batchId")
-    if (fs.exists(live)) false
-    else {
-      val tmp = new org.apache.hadoop.fs.Path(s"$outDir/_tmp_batch=$batchId")
+    val live = new Path(s"$outDir/batch=$batchId")
+    if (fs.exists(live)) {
+      batch.write.format("noop").mode("overwrite").save()
+      false
+    } else {
+      val tmp = new Path(s"$outDir/_tmp_batch=$batchId")
       fs.delete(tmp, true)
       batch.write.mode("overwrite").parquet(tmp.toString)
       if (fs.exists(live)) { fs.delete(tmp, true); false }
@@ -256,23 +264,6 @@ object DocIngest {
     }
   }
 
-  /** [[commitBatch]] for micro-batches whose plan holds STATEFUL
-    * operators (stream dedup, watermarked joins/aggregations): when the
-    * batch is already committed the sink write is skipped, but the plan
-    * must STILL execute — Spark validates that every stateful operator
-    * partition committed its state store for the trigger
-    * (STATE_STORE_COMMIT_VALIDATION_FAILED otherwise), and the state
-    * version must advance with the checkpoint even on a sink-skip
-    * replay. The skip path materializes the plan through the noop sink:
-    * full execution and state commit, zero bytes written — paid only on
-    * the rare crash-replay of an already-committed batch. */
-  def commitBatchStateful(batch: DataFrame, batchId: Long,
-      outDir: String): Boolean = {
-    val wrote = commitBatch(batch, batchId, outDir)
-    if (!wrote) batch.write.format("noop").mode("overwrite").save()
-    wrote
-  }
-
   /** Stream-static enrichment: join each micro-batch against a static
     * dimension (broadcast — the dim is read once per batch from its
     * source, never shuffled against the stream). The streaming analogue of
@@ -281,16 +272,9 @@ object DocIngest {
   def enriched(spark: SparkSession, inDir: String, schema: String,
       dim: DataFrame, joinCol: String, outDir: String,
       checkpoint: String): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(inDir)
-      .join(broadcast(dim), Seq(joinCol), "left")
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitBatch(batch, batchId, outDir); ()
-      }
-      .start()
+    eachBatch(spark.readStream.schema(schema).parquet(inDir)
+        .join(broadcast(dim), Seq(joinCol), "left"),
+      checkpoint) { (batch, batchId) => commitBatch(batch, batchId, outDir) }
 
   /** Stream-stream interval join: pair each right-stream event with
     * left-stream events for the same key whose timestamps lie within
@@ -310,18 +294,14 @@ object DocIngest {
     val right = spark.readStream.schema(schema).parquet(rightDir)
       .withWatermark(tsCol, watermark)
       .select(col(keyCol).as("r_key"), col(tsCol).as("r_ts"))
-    left.join(right,
+    val pairs = left.join(right,
         col(keyCol) === col("r_key") &&
           col("l_ts") <= col("r_ts") &&
           col("l_ts") >= col("r_ts") - expr(s"INTERVAL $intervalSeconds SECONDS"))
       .select(col(keyCol), col("l_ts"), col("r_ts"))
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitBatchStateful(batch, batchId, outDir); ()
-      }
-      .start()
+    eachBatch(pairs, checkpoint) { (batch, batchId) =>
+      commitBatch(batch, batchId, outDir)
+    }
   }
 
   /** Streaming upsert ingestion: each micro-batch merges into a
@@ -334,23 +314,15 @@ object DocIngest {
     * collection. */
   def startUpsert(spark: SparkSession, inDir: String, schema: String,
       collectionPath: String, checkpoint: String, idCol: String,
-      nBuckets: Int, dim: Int = 64,
-      pollInterval: String = "1 second"): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(inDir)
-      .withColumn("vector", Fingerprints.hashEmbed(col("text"), dim))
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(pollInterval))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.dropDuplicates(idCol) // a batch may re-send an id
-        if (!b.isEmpty)
-          graft.sources.BucketedCollection.upsert(
-            batch.sparkSession, collectionPath, b, idCol, nBuckets)
-        ()
-      }
-      .start()
+      nBuckets: Int, dim: Int = 64): StreamingQuery =
+    eachBatch(spark.readStream.schema(schema).parquet(inDir)
+        .withColumn("vector", Fingerprints.hashEmbed(col("text"), dim)),
+      checkpoint) { (batch, _) =>
+      val b = batch.dropDuplicates(idCol) // a batch may re-send an id
+      if (!b.isEmpty)
+        graft.sources.BucketedCollection.upsert(
+          batch.sparkSession, collectionPath, b, idCol, nBuckets)
+    }
 
   /** NEAR-dup-gated ingest: each micro-batch is deduplicated against the
     * ALREADY-ACCEPTED corpus with MinHash-LSH (`Dedup.incrementalLshPairs`)
@@ -370,31 +342,16 @@ object DocIngest {
     * independent of corpus size. */
   def startNearDupGated(spark: SparkSession, inDir: String, schema: String,
       collectionPath: String, checkpoint: String, idCol: String,
-      threshold: Double = 0.8,
-      pollInterval: String = "1 second"): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(pollInterval))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.Dedup
+      threshold: Double = 0.8): StreamingQuery =
+    eachBatch(spark.readStream.schema(schema).parquet(inDir), checkpoint) {
+      (batch, batchId) =>
         val ss = batch.sparkSession
         if (!batch.isEmpty) {
-          // keep-first within the batch itself: exact dups deterministically
-          // by LOWEST id (dropDuplicates would keep a partition-order-
-          // dependent survivor — not retry-reproducible), then near-dups
-          // by LSH. The exact pass also covers sub-shingle-width docs.
-          val exactClean = Dedup.dropExactDuplicates(batch, idCol, "text")
-          val innerPairs = Dedup.minhashLshPairs(exactClean, idCol, "text",
-            threshold = threshold)
-          val batchClean = Dedup.dropNearDuplicates(exactClean, idCol,
-            innerPairs)
+          val batchClean = dedupWithinBatch(batch, idCol, threshold)
           // driver-local File.exists would silently disable the gate on
           // hdfs://, s3a://, file:/ URIs — resolve through the Hadoop FS
           // of the path, like commitBatch.
-          val collDir = new org.apache.hadoop.fs.Path(collectionPath)
+          val collDir = new Path(collectionPath)
           val fs = collDir
             .getFileSystem(ss.sparkContext.hadoopConfiguration)
           val accepted =
@@ -419,9 +376,7 @@ object DocIngest {
           // batch=<id> rename protocol makes the replay a no-op.
           commitBatch(accepted, batchId, collectionPath)
         }
-        ()
-      }
-      .start()
+    }
 
   /** [[startNearDupGated]] with the PERSISTED index — the production
     * form its scaladoc promises: the corpus is never re-signed; each
@@ -437,44 +392,39 @@ object DocIngest {
     * never change. */
   def startIndexedNearDupGated(spark: SparkSession, inDir: String,
       schema: String, collectionPath: String, indexPath: String,
-      checkpoint: String, idCol: String, threshold: Double = 0.8,
-      pollInterval: String = "1 second"): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(pollInterval))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.LshIndex
-        val ss = batch.sparkSession
+      checkpoint: String, idCol: String,
+      threshold: Double = 0.8): StreamingQuery =
+    eachBatch(spark.readStream.schema(schema).parquet(inDir), checkpoint) {
+      (batch, batchId) =>
         if (!batch.isEmpty) {
           val accepted = indexGate(batch, idCol, indexPath, threshold)
           commitBatch(accepted, batchId, collectionPath)
-          if (LshIndex.exists(ss, indexPath))
-            LshIndex.append(accepted, idCol, "text", indexPath)
-          else LshIndex.build(accepted, idCol, "text", indexPath)
-          probeIndexRedundancy(ss, indexPath)
+          foldIntoIndex(accepted, idCol, indexPath)
         }
-        ()
-      }
-      .start()
+    }
 
-  /** The indexed near-dup admission decision, shared by
-    * [[startIndexedNearDupGated]] and [[startCrawlPipeline]]: in-batch
-    * exact dedup → in-batch LSH near-dup keep-first → against the
-    * persisted index, exact-md5 hits (covers sub-shingle-width docs via
-    * the fps table) + bucket-keyed probe hits reject. Returns the
-    * admitted rows of `batch` unchanged in schema. */
-  private def indexGate(batch: DataFrame, idCol: String,
-      indexPath: String, threshold: Double): DataFrame = {
-    import graft.operators.{Dedup, LshIndex}
-    val ss = batch.sparkSession
+  /** The in-batch admission of every text gate: exact duplicates keep
+    * the LOWEST id (dropDuplicates would keep a partition-order-dependent
+    * survivor — not retry-reproducible), then MinHash-LSH near-dups keep
+    * the first. The exact pass also covers sub-shingle-width docs. */
+  private def dedupWithinBatch(batch: DataFrame, idCol: String,
+      threshold: Double): DataFrame = {
     val exactClean = Dedup.dropExactDuplicates(batch, idCol, "text")
     val innerPairs = Dedup.minhashLshPairs(exactClean, idCol,
       "text", threshold = threshold)
-    val batchClean = Dedup.dropNearDuplicates(exactClean, idCol,
-      innerPairs)
+    Dedup.dropNearDuplicates(exactClean, idCol, innerPairs)
+  }
+
+  /** The indexed near-dup admission decision, shared by
+    * [[startIndexedNearDupGated]] and [[startCrawlPipeline]]:
+    * [[dedupWithinBatch]], then against the persisted index, exact-md5
+    * hits (covers sub-shingle-width docs via the fps table) +
+    * bucket-keyed probe hits reject. Returns the admitted rows of
+    * `batch` unchanged in schema. */
+  private def indexGate(batch: DataFrame, idCol: String,
+      indexPath: String, threshold: Double): DataFrame = {
+    val ss = batch.sparkSession
+    val batchClean = dedupWithinBatch(batch, idCol, threshold)
     if (!LshIndex.exists(ss, indexPath)) batchClean
     else {
       val exact = LshIndex.exactHits(ss, indexPath, batchClean,
@@ -487,17 +437,21 @@ object DocIngest {
     }
   }
 
-  /** Post-fold-in compaction-policy probe, shared by the indexed ingest
-    * hooks: logs a recommendation when the index's replay redundancy
-    * crosses [[graft.operators.LshIndex.CompactTriggerRatio]]. Probe
-    * ONLY — auto-compacting inside foreachBatch would race
+  /** Fold a batch's admitted rows into the persisted index (built on the
+    * first batch), then probe the compaction policy: log a
+    * recommendation when the index's replay redundancy crosses
+    * [[graft.operators.LshIndex.CompactTriggerRatio]]. Probe ONLY —
+    * auto-compacting inside foreachBatch would race
     * [[graft.operators.LshIndex.compact]]'s single-writer swap
     * discipline against the next batch's probe reads, so compaction
     * stays a manual quiet-window action. */
-  private def probeIndexRedundancy(spark: SparkSession,
+  private def foldIntoIndex(accepted: DataFrame, idCol: String,
       indexPath: String): Unit = {
-    import graft.operators.LshIndex
-    val ratio = LshIndex.redundancyRatio(spark, indexPath)
+    val ss = accepted.sparkSession
+    if (LshIndex.exists(ss, indexPath))
+      LshIndex.append(accepted, idCol, "text", indexPath)
+    else LshIndex.build(accepted, idCol, "text", indexPath)
+    val ratio = LshIndex.redundancyRatio(ss, indexPath)
     if (ratio >= LshIndex.CompactTriggerRatio)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         f"LSH index at $indexPath carries $ratio%.2fx replay " +
@@ -520,15 +474,9 @@ object DocIngest {
     * reproduces byte-identical decisions. */
   def startImageDedupGated(spark: SparkSession, inDir: String,
       schema: String, collectionPath: String, checkpoint: String,
-      idCol: String, maxHamming: Int = 3,
-      pollInterval: String = "1 second"): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(pollInterval))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      idCol: String, maxHamming: Int = 3): StreamingQuery =
+    eachBatch(spark.readStream.schema(schema).parquet(inDir), checkpoint) {
+      (batch, batchId) =>
         import graft.operators.Multimodal
         import org.apache.spark.sql.expressions.Window
         val ss = batch.sparkSession
@@ -543,9 +491,9 @@ object DocIngest {
             .unionByName(hashed.filter(col("phash").isNull))
           val innerPairs = Multimodal.phashNearDupPairs(
             exactClean.select(col(idCol), col("phash")), idCol, maxHamming)
-          val batchClean = graft.operators.Dedup.dropNearDuplicates(
+          val batchClean = Dedup.dropNearDuplicates(
             exactClean, idCol, innerPairs.select(col("id_a"), col("id_b")))
-          val collDir = new org.apache.hadoop.fs.Path(collectionPath)
+          val collDir = new Path(collectionPath)
           val fs = collDir
             .getFileSystem(ss.sparkContext.hadoopConfiguration)
           val accepted =
@@ -562,9 +510,7 @@ object DocIngest {
           // gate above) — crash replay must not re-append survivors.
           commitBatch(accepted, batchId, collectionPath)
         }
-        ()
-      }
-      .start()
+    }
 
   /** One micro-batch's curation decision — the gate's kernel: score
     * clean rows (frozen classifier over the hash
@@ -638,24 +584,16 @@ object DocIngest {
       schema: String, acceptDir: String, rejectDir: String,
       checkpoint: String, model: graft.operators.Classifier.Model,
       ratioMicro: Array[Long], minScore: Double, minWeightMicro: Long,
-      idCol: String = "doc_id", dim: Int = 64,
-      pollInterval: String = "1 second"): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(pollInterval))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      idCol: String = "doc_id", dim: Int = 64): StreamingQuery =
+    eachBatch(spark.readStream.schema(schema).parquet(inDir), checkpoint) {
+      (batch, batchId) =>
         if (!batch.isEmpty) {
           val (accepted, rejected) = curationDecide(batch, model,
             ratioMicro, minScore, minWeightMicro, idCol, dim)
           commitBatch(accepted, batchId, acceptDir)
           commitBatch(rejected, batchId, rejectDir)
         }
-        ()
-      }
-      .start()
+    }
 
   /** Streaming drift monitor: every arriving micro-batch of embeddings
     * is PSI-compared against a FROZEN reference histogram (the
@@ -671,16 +609,10 @@ object DocIngest {
   def startDriftMonitored(spark: SparkSession, inDir: String,
       schema: String, reportDir: String, checkpoint: String,
       referenceHist: Map[Int, Long], vecCol: String, dim: Int,
-      probe: Int = 0, invWidth: Int = 4,
-      pollInterval: String = "1 second"): StreamingQuery = {
+      probe: Int = 0, invWidth: Int = 4): StreamingQuery = {
     require(referenceHist.nonEmpty, "reference histogram is empty")
-    spark.readStream
-      .schema(schema)
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(pollInterval))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    eachBatch(spark.readStream.schema(schema).parquet(inDir), checkpoint) {
+      (batch, batchId) =>
         import graft.operators.Drift
         val ss = batch.sparkSession
         import ss.implicits._
@@ -702,14 +634,12 @@ object DocIngest {
             .coalesce(1)
           commitBatch(report, batchId, reportDir)
         }
-        ()
-      }
-      .start()
+    }
   }
 
   /** Stateful variant: drop exact duplicates across the whole stream by
     * content fingerprint (dropDuplicates with state), committing each
-    * micro-batch ONCE via [[commitBatchStateful]]'s `batch=<id>` rename
+    * micro-batch ONCE via [[commitBatch]]'s `batch=<id>` rename
     * protocol. A crash between the sink write and
     * the checkpoint commit replays the batch against the SAME state-store
     * version (the dropDuplicates state rolls back with the checkpoint),
@@ -718,18 +648,13 @@ object DocIngest {
   def startDeduped(spark: SparkSession, inDir: String,
       schema: String, collectionPath: String, checkpoint: String,
       dim: Int = 64): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(inDir)
-      .withColumn("fp", Fingerprints.md5Fingerprint(col("text")))
-      .dropDuplicates("fp")
-      .withColumn("vector", Fingerprints.hashEmbed(col("text"), dim))
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitBatchStateful(batch, batchId, collectionPath); ()
-      }
-      .start()
+    eachBatch(spark.readStream.schema(schema).parquet(inDir)
+        .withColumn("fp", Fingerprints.md5Fingerprint(col("text")))
+        .dropDuplicates("fp")
+        .withColumn("vector", Fingerprints.hashEmbed(col("text"), dim)),
+      checkpoint) { (batch, batchId) =>
+      commitBatch(batch, batchId, collectionPath)
+    }
 
   /** Streaming SCD2 — the incremental form of the batch
     * `EventAnalytics.scd2History`: each key's OPEN version (attr, its
@@ -748,9 +673,7 @@ object DocIngest {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
       OutputMode}
-    spark.readStream
-      .schema(schema)
-      .parquet(inDir)
+    val versions = spark.readStream.schema(schema).parquet(inDir)
       .selectExpr("user_id", "CAST(ts AS LONG) AS epoch", "event_type")
       .as[(Long, Long, String)]
       .groupByKey(_._1)
@@ -776,26 +699,27 @@ object DocIngest {
           closed.result().iterator
       }
       .toDF("user_id", "version", "attr", "valid_from", "valid_to")
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitBatchStateful(batch, batchId, outDir); ()
-      }
-      .start()
+    eachBatch(versions, checkpoint) { (batch, batchId) =>
+      commitBatch(batch, batchId, outDir)
+    }
   }
 
   /** Resolve the published sketch-table version: reads the `CURRENT`
     * pointer file and returns the versioned directory it names, or None
     * before the first publish. Works on any Hadoop filesystem (the
-    * normal Spark deployment), not just the driver's local disk. */
+    * normal Spark deployment), not just the driver's local disk.
+    *
+    * A crash inside [[publishVersioned]] between retiring `CURRENT` and
+    * renaming its replacement into place leaves only the pending
+    * `CURRENT.tmp-<id>`, which names a fully written version. The newest
+    * pending pointer then stands for `CURRENT` (the
+    * [[graft.sources.DirSwap.heal]] rule: a lone replacement rolls
+    * forward), for readers and for the replaying writer alike. */
   def currentSketchPath(spark: SparkSession,
       sketchDir: String): Option[String] = {
-    val dir = new org.apache.hadoop.fs.Path(sketchDir)
+    val dir = new Path(sketchDir)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val ptr = new org.apache.hadoop.fs.Path(dir, "CURRENT")
-    if (!fs.exists(ptr)) None
-    else {
+    pointerFile(fs, dir).flatMap { ptr =>
       val in = fs.open(ptr)
       try {
         val v = scala.io.Source.fromInputStream(in, "UTF-8")
@@ -803,6 +727,18 @@ object DocIngest {
         if (v.isEmpty) None else Some(s"$sketchDir/$v")
       } finally in.close()
     }
+  }
+
+  /** `CURRENT`, else the newest pending `CURRENT.tmp-<id>`. `CURRENT` is
+    * looked up again last: a publish whose rename lands between the first
+    * two lookups has moved the pending pointer into place. */
+  private def pointerFile(fs: FileSystem, dir: Path): Option[Path] = {
+    val ptr = new Path(dir, "CURRENT")
+    def live = Some(ptr).filter(fs.exists)
+    def pending = Option(fs.globStatus(new Path(dir, "CURRENT.tmp-*")))
+      .toSeq.flatten.map(_.getPath)
+      .maxByOption(_.getName.stripPrefix("CURRENT.tmp-").toLong)
+    live.orElse(pending).orElse(live)
   }
 
   /** The published sketch table (day, hll), or an error if none yet. */
@@ -822,26 +758,26 @@ object DocIngest {
     * ADVICE r7 #1): each batch writes an immutable versioned directory
     * `v-<batchId>`, then atomically republishes the `CURRENT` pointer
     * file naming it (tmp file + rename — a single-FILE rename, atomic
-    * on HDFS and on local disk; there is never a moment without a
-    * readable published version, readers resolve via
-    * [[currentSketchPath]]). Every filesystem call goes through
-    * `org.apache.hadoop.fs.FileSystem` with CHECKED return values — a
-    * failed rename fails the batch loudly instead of silently dropping
-    * the merge. Register-max is idempotent, so crash-replayed batches
-    * re-merge harmlessly (the at-least-once window that breaks counters
-    * is safe for sketches). */
+    * on HDFS and on local disk; readers resolve via
+    * [[currentSketchPath]], which also covers the moment between
+    * retiring the old pointer and renaming the new one). Every
+    * filesystem call goes through `org.apache.hadoop.fs.FileSystem`
+    * with CHECKED return values — a failed rename fails the batch
+    * loudly instead of silently dropping the merge. A crash-replayed
+    * batch whose version is already published only completes the
+    * pointer swap, so each batch id merges into the table once. */
   def startHllDaily(spark: SparkSession, inDir: String, schema: String,
       sketchDir: String, checkpoint: String,
-      p: Int = 11, pollInterval: String = "1 second"): StreamingQuery =
-    startDaily(spark, inDir, schema, sketchDir, checkpoint, pollInterval,
+      p: Int = 11): StreamingQuery =
+    startDaily(spark, inDir, schema, sketchDir, checkpoint,
       sketchCol = "hll",
       freshOf = byDay => graft.operators.Hll.groupSketches(
         byDay, col("user_id"), Seq("day"), p),
       mergeUdaf = org.apache.spark.sql.functions.udaf(
         new graft.operators.Hll.MergeAgg))
 
-  /** ONE maintenance loop for the three daily sketch families
-    * (HLL / KMV / Misra-Gries): read the event stream, build the
+  /** ONE maintenance loop for the daily sketch families (HLL / KMV /
+    * Misra-Gries / quantiles): read the event stream, build the
     * per-day fresh summaries, fold them into the previous published
     * table with the family's merge aggregator, and republish through
     * [[publishVersioned]]. The protocol (prev-resolve, unionByName
@@ -849,70 +785,72 @@ object DocIngest {
     * or replay-handling fix cannot drift across families. */
   private def startDaily(spark: SparkSession, inDir: String,
       schema: String, sketchDir: String, checkpoint: String,
-      pollInterval: String, sketchCol: String,
-      freshOf: DataFrame => DataFrame,
+      sketchCol: String, freshOf: DataFrame => DataFrame,
       mergeUdaf: org.apache.spark.sql.expressions.UserDefinedFunction)
-      : StreamingQuery = {
-    spark.readStream
-      .schema(schema)
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(pollInterval))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      : StreamingQuery =
+    eachBatch(spark.readStream.schema(schema).parquet(inDir), checkpoint) {
+      (batch, batchId) =>
         if (!batch.isEmpty) {
           val s = batch.sparkSession
-          val fresh = freshOf(batch.withColumn("day",
-            date_format(col("ts"), "yyyy-MM-dd")))
           val prev = currentSketchPath(s, sketchDir)
-          val merged = prev match {
-            case Some(path) =>
-              s.read.parquet(path).unionByName(fresh)
-                .groupBy(col("day"))
-                .agg(mergeUdaf(col(sketchCol)).as(sketchCol))
-            case None => fresh
+          publishVersioned(s, sketchDir, batchId, prev) {
+            val fresh = freshOf(batch.withColumn("day",
+              date_format(col("ts"), "yyyy-MM-dd")))
+            prev match {
+              case Some(path) =>
+                s.read.parquet(path).unionByName(fresh)
+                  .groupBy(col("day"))
+                  .agg(mergeUdaf(col(sketchCol)).as(sketchCol))
+              case None => fresh
+            }
           }
-          publishVersioned(s, merged, sketchDir, batchId, prev)
         }
-        ()
-      }
-      .start()
-  }
+    }
 
   /** The versioned-table publication protocol shared by the sketch
     * maintainers: (1) write an immutable `v-<batchId>` directory,
     * (2) atomically republish the CURRENT pointer (tmp FILE + rename —
-    * atomic on HDFS and local disk; never a moment without a readable
-    * version), (3) retire superseded versions except the immediately
-    * previous one (in-flight readers). Every filesystem call CHECKED —
-    * a failed rename fails the batch loudly. */
-  private def publishVersioned(s: SparkSession, merged: DataFrame,
-      sketchDir: String, batchId: Long, prev: Option[String]): Unit = {
+    * atomic on HDFS and local disk), (3) retire superseded versions
+    * except the immediately previous one (in-flight readers). Every
+    * filesystem call CHECKED — a failed rename fails the batch loudly.
+    *
+    * When `prev` already is this batch's version, the batch is a crash
+    * replay that got as far as its pointer: `merged` is never evaluated
+    * (it would read and overwrite the same directory, and merge the
+    * batch twice), and only a pending pointer is renamed into place.
+    * Version names are batch ids, so a sketch directory belongs to one
+    * checkpoint. */
+  private def publishVersioned(s: SparkSession, sketchDir: String,
+      batchId: Long, prev: Option[String])(merged: => DataFrame): Unit = {
     val version = s"v-$batchId"
-    merged.coalesce(1).write.mode("overwrite")
-      .parquet(s"$sketchDir/$version")
-    val dir = new org.apache.hadoop.fs.Path(sketchDir)
+    val dir = new Path(sketchDir)
     val fs = dir.getFileSystem(s.sessionState.newHadoopConf())
-    val tmpPtr = new org.apache.hadoop.fs.Path(dir,
-      s"CURRENT.tmp-$batchId")
-    val out = fs.create(tmpPtr, true)
-    try out.write(version.getBytes("UTF-8")) finally out.close()
-    val ptr = new org.apache.hadoop.fs.Path(dir, "CURRENT")
-    if (fs.exists(ptr) && !fs.delete(ptr, false))
-      throw new java.io.IOException(
-        s"failed to retire old CURRENT pointer in $sketchDir")
-    if (!fs.rename(tmpPtr, ptr))
+    val tmpPtr = new Path(dir, s"CURRENT.tmp-$batchId")
+    val ptr = new Path(dir, "CURRENT")
+    val published = prev.contains(s"$sketchDir/$version")
+    if (!published) {
+      merged.coalesce(1).write.mode("overwrite")
+        .parquet(s"$sketchDir/$version")
+      val out = fs.create(tmpPtr, true)
+      try out.write(version.getBytes("UTF-8")) finally out.close()
+      if (fs.exists(ptr) && !fs.delete(ptr, false))
+        throw new java.io.IOException(
+          s"failed to retire old CURRENT pointer in $sketchDir")
+    }
+    if (!fs.exists(ptr) && !fs.rename(tmpPtr, ptr))
       throw new java.io.IOException(
         s"failed to publish CURRENT pointer in $sketchDir")
-    val keep = Set(version) ++ prev.map(p0 =>
-      p0.substring(p0.lastIndexOf('/') + 1))
-    fs.listStatus(dir).foreach { st =>
-      val name = st.getPath.getName
-      if (st.isDirectory && name.startsWith("v-") &&
-          !keep.contains(name)) {
-        if (!fs.delete(st.getPath, true))
-          throw new java.io.IOException(
-            s"failed to retire $name in $sketchDir")
+    if (!published) {
+      val keep = Set(version) ++ prev.map(p0 =>
+        p0.substring(p0.lastIndexOf('/') + 1))
+      fs.listStatus(dir).foreach { st =>
+        val name = st.getPath.getName
+        if (st.isDirectory && name.startsWith("v-") &&
+            !keep.contains(name)) {
+          if (!fs.delete(st.getPath, true))
+            throw new java.io.IOException(
+              s"failed to retire $name in $sketchDir")
+        }
       }
     }
   }
@@ -923,13 +861,13 @@ object DocIngest {
     * "users active on BOTH day X and day Y" (returning users) or
     * "active on X but not Y" (churn) from k-long sidecars, no event
     * rescan. Same immutable-version + atomic-CURRENT publication;
-    * k-smallest folding is idempotent, so crash-replayed batches
+    * k-smallest folding is idempotent, so re-delivered events
     * re-merge harmlessly (the at-least-once window that breaks
     * counters is safe for sketches). */
   def startKmvDaily(spark: SparkSession, inDir: String, schema: String,
       sketchDir: String, checkpoint: String,
-      k: Int = 1024, pollInterval: String = "1 second"): StreamingQuery =
-    startDaily(spark, inDir, schema, sketchDir, checkpoint, pollInterval,
+      k: Int = 1024): StreamingQuery =
+    startDaily(spark, inDir, schema, sketchDir, checkpoint,
       sketchCol = "kmv",
       freshOf = byDay => graft.operators.KmvSketch.groupSketches(
         byDay, col("user_id"), Seq("day"), k),
@@ -943,17 +881,18 @@ object DocIngest {
     * answers "who dominated day X" from a k-entry sidecar with no event
     * rescan, with the MG guarantee (every user above n/(k+1) of the
     * day's DELIVERED events IS present). Batch merge goes through
-    * [[graft.operators.HeavyHitters.MergeAgg]] — NOT replay-idempotent:
-    * a crash-replayed batch inflates counts AND the n in the guarantee
+    * [[graft.operators.HeavyHitters.MergeAgg]] — NOT idempotent: a
+    * crash-replayed batch merges once (see [[publishVersioned]]), but
+    * re-delivered events inflate counts AND the n in the guarantee
     * bound, so a user heavy against the true stream but near the
-    * threshold can lose the guarantee under replay (worked example in
+    * threshold can lose the guarantee (worked example in
     * MergeAgg's scaladoc). Size k against worst-case delivered volume;
     * sources needing replay-exact counters use the exactly-once
     * commitBatch sinks instead. */
   def startMgDaily(spark: SparkSession, inDir: String, schema: String,
       sketchDir: String, checkpoint: String,
-      k: Int = 64, pollInterval: String = "1 second"): StreamingQuery =
-    startDaily(spark, inDir, schema, sketchDir, checkpoint, pollInterval,
+      k: Int = 64): StreamingQuery =
+    startDaily(spark, inDir, schema, sketchDir, checkpoint,
       sketchCol = "mg",
       freshOf = byDay => byDay
         .select(col("day"), col("user_id").cast("string").as("item"))
@@ -969,15 +908,15 @@ object DocIngest {
     * ("p95 latency per day last quarter") from a k-entry sidecar, no
     * event rescan, and days roll up to weeks/months through
     * [[graft.operators.QuantileSketch.MergeAgg]]. `keyCol` must be
-    * row-unique (retention hashes it). Crash-replayed batches cannot
+    * row-unique (retention hashes it). Re-delivered events cannot
     * move any RETAINED ENTRY — exact duplicates dedupe on insert — so
     * every estimate is replay-stable; only the sketch's advisory row
-    * total inflates under replay (documented, like the MG n bound). */
+    * total inflates under re-delivery (documented, like the MG n bound). */
   def startQuantileDaily(spark: SparkSession, inDir: String,
       schema: String, sketchDir: String, checkpoint: String,
       keyCol: String = "event_id", valueCol: String = "value",
-      k: Int = 1024, pollInterval: String = "1 second"): StreamingQuery =
-    startDaily(spark, inDir, schema, sketchDir, checkpoint, pollInterval,
+      k: Int = 1024): StreamingQuery =
+    startDaily(spark, inDir, schema, sketchDir, checkpoint,
       sketchCol = "qs",
       freshOf = byDay => byDay
         .groupBy(col("day"))
@@ -997,19 +936,12 @@ object DocIngest {
     * independently) — an unbounded crawl stream runs in O(batch). */
   def startWetExtraction(spark: SparkSession, inDir: String,
       outDir: String, checkpoint: String, idCol: String = "warc_id",
-      bytesCol: String = "bytes",
-      pollInterval: String = "1 second"): StreamingQuery =
-    spark.readStream
-      .schema(s"$idCol LONG, $bytesCol BINARY")
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(pollInterval))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitBatch(graft.operators.WebArchive
-          .wetConversion(batch, idCol, bytesCol), batchId, outDir); ()
-      }
-      .start()
+      bytesCol: String = "bytes"): StreamingQuery =
+    eachBatch(spark.readStream.schema(s"$idCol LONG, $bytesCol BINARY")
+        .parquet(inDir), checkpoint) { (batch, batchId) =>
+      commitBatch(graft.operators.WebArchive
+        .wetConversion(batch, idCol, bytesCol), batchId, outDir)
+    }
 
   /** Records-per-archive bound for [[startCrawlPipeline]]'s composite
     * doc ids (archive_id · 2^20 + rec_idx): real WET products run
@@ -1054,17 +986,11 @@ object DocIngest {
   def startCrawlPipeline(spark: SparkSession, inDir: String,
       trainDir: String, indexPath: String, checkpoint: String,
       minQualityMicro: Long, idCol: String = "warc_id",
-      bytesCol: String = "bytes", threshold: Double = 0.8,
-      pollInterval: String = "1 second"): StreamingQuery =
-    spark.readStream
-      .schema(s"$idCol LONG, $bytesCol BINARY")
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(pollInterval))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.{LshIndex, TextAnalysis, WebArchive}
-        val ss = batch.sparkSession
+      bytesCol: String = "bytes",
+      threshold: Double = 0.8): StreamingQuery =
+    eachBatch(spark.readStream.schema(s"$idCol LONG, $bytesCol BINARY")
+        .parquet(inDir), checkpoint) { (batch, batchId) =>
+        import graft.operators.{TextAnalysis, WebArchive}
         if (!batch.isEmpty) {
           // cache the decoded batch: six consumers read it (the span
           // guard, the quality frame, the survivor join, both sides of
@@ -1108,13 +1034,8 @@ object DocIngest {
             commitBatch(accepted.select(col("doc_id"), col("uri"),
               col("text"), size(Fingerprints.tokens(col("text")))
                 .cast("long").as("n_tokens")), batchId, trainDir)
-            if (LshIndex.exists(ss, indexPath))
-              LshIndex.append(accepted, "doc_id", "text", indexPath)
-            else LshIndex.build(accepted, "doc_id", "text", indexPath)
-            probeIndexRedundancy(ss, indexPath)
+            foldIntoIndex(accepted, "doc_id", indexPath)
           } finally decoded.unpersist()
         }
-        ()
-      }
-      .start()
+    }
 }

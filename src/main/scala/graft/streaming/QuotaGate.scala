@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
-  StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+  StreamingQuery, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Per-source ingest QUOTA on a document stream — "admit at most N docs
   * per source, across all batches" — the domain-cap curation primitive
@@ -50,8 +50,8 @@ object QuotaGate {
   }
 
   def start(spark: SparkSession, inDir: String, schema: String,
-      outDir: String, checkpoint: String, maxPerSource: Long,
-      pollInterval: String = "1 second"): StreamingQuery = {
+      outDir: String, checkpoint: String,
+      maxPerSource: Long): StreamingQuery = {
     val provider = spark.conf.getOption(
       "spark.sql.streaming.stateStore.providerClass").getOrElse("")
     require(provider.contains("RocksDBStateStoreProvider"),
@@ -60,20 +60,13 @@ object QuotaGate {
         "org.apache.spark.sql.execution.streaming.state." +
         "RocksDBStateStoreProvider before starting the quota gate")
     implicit val docEnc = Encoders.product[DocRow]
-    val accepted = spark.readStream
-      .schema(schema)
-      .parquet(inDir)
+    val accepted = spark.readStream.schema(schema).parquet(inDir)
       .as[DocRow]
       .groupByKey(_.source)(Encoders.STRING)
       .transformWithState(new QuotaProcessor(maxPerSource),
         TimeMode.None(), OutputMode.Append(), docEnc)
-    accepted.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(pollInterval))
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[DocRow], batchId: Long) =>
-          DocIngest.commitBatch(batch.toDF(), batchId, outDir); ()
-      }
-      .start()
+    DocIngest.eachBatch(accepted.toDF(), checkpoint) { (batch, batchId) =>
+      DocIngest.commitBatch(batch, batchId, outDir)
+    }
   }
 }

@@ -1,10 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Encoders, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
-  StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger,
-  TTLConfig, ValueState}
+  StatefulProcessor, StreamingQuery, TimeMode, TimerValues, TTLConfig,
+  ValueState}
 
 /** Streaming sessionization with EVENT-TIME TIMERS on Spark 4's
   * `transformWithState` — the timer-driven complement to the native
@@ -75,8 +74,7 @@ object TimerSessionize {
 
   def start(spark: SparkSession, inDir: String, schema: String,
       outDir: String, checkpoint: String, gapSeconds: Long,
-      watermarkDelay: String = "0 seconds",
-      pollInterval: String = "1 second"): StreamingQuery = {
+      watermarkDelay: String = "0 seconds"): StreamingQuery = {
     val provider = spark.conf.getOption(
       "spark.sql.streaming.stateStore.providerClass").getOrElse("")
     require(provider.contains("RocksDBStateStoreProvider"),
@@ -85,21 +83,14 @@ object TimerSessionize {
         "org.apache.spark.sql.execution.streaming.state." +
         "RocksDBStateStoreProvider before starting the sessionizer")
     implicit val sessEnc = Encoders.product[Session]
-    val sessions = spark.readStream
-      .schema(schema)
-      .parquet(inDir)
+    val sessions = spark.readStream.schema(schema).parquet(inDir)
       .withWatermark("ts", watermarkDelay)
       .as[Event](Encoders.product[Event])
       .groupByKey(_.user_id)(Encoders.scalaLong)
       .transformWithState(new SessionProcessor(gapSeconds * 1000L),
         TimeMode.EventTime(), OutputMode.Append(), sessEnc)
-    sessions.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(pollInterval))
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[Session], batchId: Long) =>
-          DocIngest.commitBatch(batch.toDF(), batchId, outDir); ()
-      }
-      .start()
+    DocIngest.eachBatch(sessions.toDF(), checkpoint) { (batch, batchId) =>
+      DocIngest.commitBatch(batch, batchId, outDir)
+    }
   }
 }

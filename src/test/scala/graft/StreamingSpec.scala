@@ -17,8 +17,7 @@ class StreamingSpec extends SparkSpec {
     Seq((0L, "first document about spark"), (1L, "second document about sql"))
       .toDF("doc_id", "text").write.mode("append").parquet(in)
 
-    val q = DocIngest.start(spark, in, schema, out, ckpt, dim = 16,
-      pollInterval = "200 milliseconds")
+    val q = DocIngest.start(spark, in, schema, out, ckpt, dim = 16)
     try {
       q.processAllAvailable()
       // second file lands mid-stream
@@ -339,8 +338,7 @@ class StreamingSpec extends SparkSpec {
       .map(u => (ts(1), u)).toDF("ts", "user_id")
     b1.write.mode("append").parquet(in)
     val q = DocIngest.startMgDaily(spark, in,
-      "ts TIMESTAMP, user_id LONG", out, ckpt, k = 8,
-      pollInterval = "200 milliseconds")
+      "ts TIMESTAMP, user_id LONG", out, ckpt, k = 8)
     try {
       q.processAllAvailable()
       // batch2: more day1 events for user 9 + day2 where user 3 dominates
@@ -378,8 +376,7 @@ class StreamingSpec extends SparkSpec {
 
     Seq((0L, "doc zero"), (1L, "doc one"))
       .toDF("doc_id", "text").write.mode("append").parquet(in)
-    val q = DocIngest.start(spark, in, schema, out, ckpt, dim = 16,
-      pollInterval = "200 milliseconds")
+    val q = DocIngest.start(spark, in, schema, out, ckpt, dim = 16)
     try q.processAllAvailable() finally q.stop()
     assert(spark.read.parquet(out).count() === 2)
 
@@ -420,7 +417,7 @@ class StreamingSpec extends SparkSpec {
       val ckpt = Files.createTempDirectory("graft_curidem_ck").toString
       val q = DocIngest.startCurationGated(spark, in, schema,
         acc, rej, ckpt, model, ratio, minScore = 0.5, minWeightMicro = 1L,
-        dim = dim, pollInterval = "200 milliseconds")
+        dim = dim)
       try q.processAllAvailable() finally q.stop()
     }
     runOnce()
@@ -531,7 +528,7 @@ class StreamingSpec extends SparkSpec {
     Seq((0L, archive(Seq(good, junk))), (1L, archive(Seq(nearDup))))
       .toDF("warc_id", "bytes").write.mode("append").parquet(in)
     val q = DocIngest.startCrawlPipeline(spark, in, train, idx, ckpt,
-      minQualityMicro = minQ, pollInterval = "200 milliseconds")
+      minQualityMicro = minQ)
     try {
       q.processAllAvailable()
       val r1 = spark.read.parquet(train)
@@ -575,7 +572,7 @@ class StreamingSpec extends SparkSpec {
       Seq((badId, archive("the a of the b")))
         .toDF("warc_id", "bytes").write.mode("append").parquet(in)
       val q = DocIngest.startCrawlPipeline(spark, in, train, idx, ckpt,
-        minQualityMicro = 0L, pollInterval = "200 milliseconds")
+        minQualityMicro = 0L)
       val e = intercept[Exception] {
         try q.processAllAvailable() finally q.stop()
       }
@@ -664,7 +661,7 @@ class StreamingSpec extends SparkSpec {
           col("doc_id").cast("long"), col("text")).as("bytes"))
       .localCheckpoint()
     val q = DocIngest.startCrawlPipeline(spark, in, train, idx, ckpt,
-      minQualityMicro = minQ, pollInterval = "200 milliseconds")
+      minQualityMicro = minQ)
     try {
       Seq((0L, 167L), (167L, 334L), (334L, 500L)).foreach {
         case (lo, hi) =>
@@ -700,8 +697,7 @@ class StreamingSpec extends SparkSpec {
           s"<body><p>$text</p></body>").getBytes("ISO-8859-1"))))
     Seq((0L, archive(0L, "doc zero")), (1L, archive(1L, "doc one")))
       .toDF("warc_id", "bytes").write.mode("append").parquet(in)
-    val q = DocIngest.startWetExtraction(spark, in, out, ckpt,
-      pollInterval = "200 milliseconds")
+    val q = DocIngest.startWetExtraction(spark, in, out, ckpt)
     try {
       q.processAllAvailable()
       Seq((2L, archive(2L, "doc two")))
@@ -787,8 +783,7 @@ class StreamingSpec extends SparkSpec {
     Seq((0L, "version one of doc zero"), (1L, "doc one"))
       .toDF("doc_id", "text").write.mode("append").parquet(in)
     val q = DocIngest.startUpsert(spark, in, schema, coll, ckpt,
-      idCol = "doc_id", nBuckets = 8, dim = 16,
-      pollInterval = "200 milliseconds")
+      idCol = "doc_id", nBuckets = 8, dim = 16)
     try {
       q.processAllAvailable()
       // batch 2 re-sends doc 0 with new content + a new doc
@@ -821,7 +816,7 @@ class StreamingSpec extends SparkSpec {
 
     val q = DocIngest.startWatermarkDedup(spark, in,
       "doc_id LONG, ts TIMESTAMP, text STRING", out, ckpt,
-      delay = "1 hour", pollInterval = "200 milliseconds")
+      delay = "1 hour")
     try {
       q.processAllAvailable()
       // batch 2: id 1 re-delivered again (still inside the watermark
@@ -857,7 +852,7 @@ class StreamingSpec extends SparkSpec {
         .toDF("doc_id", "source", "text").write.mode("append").parquet(in)
       val q = graft.streaming.QuotaGate.start(spark, in,
         "doc_id LONG, source STRING, text STRING", out, ckpt,
-        maxPerSource = 2L, pollInterval = "200 milliseconds")
+        maxPerSource = 2L)
       try {
         q.processAllAvailable()
         // batch 2: a is FULL (3 dropped), b admits one more (11) and
@@ -896,8 +891,7 @@ class StreamingSpec extends SparkSpec {
       Seq((1L, ts(0)), (1L, ts(10)), (2L, ts(5)))
         .toDF("user_id", "ts").write.mode("append").parquet(in)
       val q = graft.streaming.TimerSessionize.start(spark, in,
-        "user_id LONG, ts TIMESTAMP", out, ckpt, gapSeconds = 30L,
-        pollInterval = "200 milliseconds")
+        "user_id LONG, ts TIMESTAMP", out, ckpt, gapSeconds = 30L)
       try {
         q.processAllAvailable()
         // nothing closed yet: watermark is only at t0+10
@@ -951,8 +945,7 @@ class StreamingSpec extends SparkSpec {
       .toDF("doc_id", "text").write.mode("append").parquet(in)
 
     val q = DocIngest.startIndexedNearDupGated(spark, in, schema, out,
-      idx, ckpt, "doc_id", threshold = 0.5,
-      pollInterval = "200 milliseconds")
+      idx, ckpt, "doc_id", threshold = 0.5)
     try {
       q.processAllAvailable()
       // batch 2: near-dup of accepted corpus doc (reject via index
@@ -988,7 +981,7 @@ class StreamingSpec extends SparkSpec {
       .toDF("doc_id", "text").write.mode("append").parquet(in)
 
     val q = DocIngest.startNearDupGated(spark, in, schema, out, ckpt,
-      "doc_id", threshold = 0.5, pollInterval = "200 milliseconds")
+      "doc_id", threshold = 0.5)
     try {
       q.processAllAvailable()
       // batch 2: a near-dup of the ACCEPTED corpus doc (rejected), an
@@ -1027,8 +1020,7 @@ class StreamingSpec extends SparkSpec {
       .toDF("doc_id", "bytes").write.mode("append").parquet(in)
 
     val q = DocIngest.startImageDedupGated(spark, in,
-      "doc_id LONG, bytes BINARY", out, ckpt, "doc_id",
-      pollInterval = "200 milliseconds")
+      "doc_id LONG, bytes BINARY", out, ckpt, "doc_id")
     try {
       q.processAllAvailable()
       // batch 2: near-dup of the ACCEPTED base (rejected), exact re-send
@@ -1081,8 +1073,7 @@ class StreamingSpec extends SparkSpec {
     batch1.toDF("doc_id", "text").write.mode("append").parquet(in)
 
     val q = DocIngest.startCurationGated(spark, in, schema, acc, rej, ckpt,
-      model, ratio, minScore = 0.5, minWeightMicro = 1L, dim = dim,
-      pollInterval = "200 milliseconds")
+      model, ratio, minScore = 0.5, minWeightMicro = 1L, dim = dim)
     try {
       q.processAllAvailable()
       batch2.toDF("doc_id", "text").write.mode("append").parquet(in)
@@ -1142,8 +1133,7 @@ class StreamingSpec extends SparkSpec {
       .toDF("doc_id", "text").write.mode("append").parquet(in)
 
     val q = DocIngest.startCurationGated(spark, in, schema, acc, rej, ckpt,
-      model, ratio, minScore = 0.5, minWeightMicro = 1L, dim = dim,
-      pollInterval = "200 milliseconds")
+      model, ratio, minScore = 0.5, minWeightMicro = 1L, dim = dim)
     try q.processAllAvailable() finally q.stop()
 
     val accDf = spark.read.parquet(acc)
@@ -1199,7 +1189,7 @@ class StreamingSpec extends SparkSpec {
 
     mkVecs(1000 until 1100, 0.0).write.mode("append").parquet(in)
     val q = DocIngest.startDriftMonitored(spark, in, vecSchema, rep, ckpt,
-      refHist, "embedding", dim, pollInterval = "200 milliseconds")
+      refHist, "embedding", dim)
     try {
       q.processAllAvailable()
       mkVecs(2000 until 2100, 25.0).write.mode("append").parquet(in)
@@ -1269,8 +1259,7 @@ class StreamingSpec extends SparkSpec {
     drop("2023_PV_impresso_D2_CD7.pdf")
     drop("2023_GB_impresso_D2_CD7.pdf")
 
-    val q = PdfIngest.start(spark, in, out, ckpt,
-      pollInterval = "200 milliseconds")
+    val q = PdfIngest.start(spark, in, out, ckpt)
     try q.processAllAvailable() finally q.stop()
 
     val got = spark.read.parquet(out)
@@ -1282,11 +1271,100 @@ class StreamingSpec extends SparkSpec {
       col("question_num") === 136).select("correct_answer")
       .collect()(0).getString(0) === "B")
     // replaying the same checkpointed batch commits nothing twice
-    val q2 = PdfIngest.start(spark, in, out, ckpt,
-      pollInterval = "200 milliseconds")
+    val q2 = PdfIngest.start(spark, in, out, ckpt)
     try q2.processAllAvailable() finally q2.stop()
     assert(spark.read.parquet(out)
       .filter(col("subject") === "math").count() === 35L)
+  }
+
+  test("streaming PDF-folder ingest pairs the delivered file names: the " +
+      "paired booklet extracts as the batch path does, the unpaired one " +
+      "waits uncommitted, and a replay commits nothing twice") {
+    import graft.operators.{ExtractPipeline, Pairing}
+    import graft.sources.PdfSource
+    val in = Files.createTempDirectory("graft_pdfs_in").toString
+    val paired = Files.createTempDirectory("graft_pdfs_paired").toString
+    val out = Files.createTempDirectory("graft_pdfs_out").toString + "/q"
+    def write(dirs: Seq[String], name: String, pages: Seq[String],
+        images: Set[Int] = Set.empty): Unit = dirs.foreach { d =>
+      Files.write(java.nio.file.Paths.get(d, name),
+        PdfFixture.build(pages.map(_.split("\n").toSeq), images)); ()
+    }
+    // one batch: day 1's booklet and key, and day 2's booklet whose key
+    // has not arrived
+    write(Seq(in, paired), TestBooklet.d1File,
+      TestBooklet.d1Pages.sortBy(_._2).map(_._3), images = Set(2))
+    write(Seq(in, paired), TestBooklet.d1KeyFile, Seq(TestBooklet.d1KeyText))
+    write(Seq(in), TestBooklet.d2File,
+      TestBooklet.d2Pages.sortBy(_._2).map(_._3))
+
+    def runOnce(): Seq[String] = {
+      val ckpt = Files.createTempDirectory("graft_pdfs_ck").toString
+      val q = PdfIngest.start(spark, in, out, ckpt)
+      try q.processAllAvailable() finally q.stop()
+      spark.read.parquet(out).drop("batch").collect()
+        .map(_.mkString("|")).toSeq.sorted
+    }
+    val got = runOnce()
+    val (pv, keys) = PdfSource.bookletsAndKeys(PdfSource.pages(spark, paired))
+    val expected = ExtractPipeline.extract(pv, keys,
+        Pairing.pair(pv.select("file_name").union(keys.select("file_name"))))
+      .collect().map(_.mkString("|")).toSeq.sorted
+    assert(expected.nonEmpty)
+    assert(got === expected)
+    // a restart on a fresh checkpoint replays the batch: nothing twice
+    assert(runOnce() === expected)
+  }
+
+  test("streaming PDF-folder ingest pairs a booklet with a key that lands " +
+      "after the booklet's batch has run, and a replay of the key's batch " +
+      "commits the booklet exactly once") {
+    import graft.operators.{ExtractPipeline, Pairing}
+    import graft.sources.PdfSource
+    import org.apache.hadoop.fs.Path
+    val in = Files.createTempDirectory("graft_pdfl_in").toString
+    val paired = Files.createTempDirectory("graft_pdfl_paired").toString
+    val out = Files.createTempDirectory("graft_pdfl_out").toString + "/q"
+    val ckpt = Files.createTempDirectory("graft_pdfl_ck").toString
+    def write(dirs: Seq[String], name: String, pages: Seq[String],
+        images: Set[Int] = Set.empty): Unit = dirs.foreach { d =>
+      Files.write(java.nio.file.Paths.get(d, name),
+        PdfFixture.build(pages.map(_.split("\n").toSeq), images)); ()
+    }
+    def drain(): Unit = {
+      val q = PdfIngest.start(spark, in, out, ckpt)
+      try q.processAllAvailable() finally q.stop()
+    }
+    // batch 0: day 1's booklet alone
+    write(Seq(in, paired), TestBooklet.d1File,
+      TestBooklet.d1Pages.sortBy(_._2).map(_._3), images = Set(2))
+    drain()
+    // batch 1: its key, after batch 0 has run
+    write(Seq(in, paired), TestBooklet.d1KeyFile, Seq(TestBooklet.d1KeyText))
+    drain()
+    // the crash: batch 1 logged its delivered files but neither its sink
+    // commit nor its checkpoint commit landed, so the restart replays it
+    val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new Path(out, "batch=1"), true))
+    Seq("commits/1", "commits/.1.crc").foreach(f =>
+      fs.delete(new Path(ckpt, f), false))
+    drain()
+    // batch 2: day 2's booklet, whose key never arrives
+    write(Seq(in), TestBooklet.d2File,
+      TestBooklet.d2Pages.sortBy(_._2).map(_._3))
+    drain()
+
+    assert(fs.listStatus(new Path(out)).map(_.getPath.getName)
+      .filter(_.startsWith("batch=")).sorted.toSeq ===
+      Seq("batch=0", "batch=1", "batch=2"))
+    val got = spark.read.parquet(out).drop("batch").collect()
+      .map(_.mkString("|")).toSeq.sorted
+    val (pv, keys) = PdfSource.bookletsAndKeys(PdfSource.pages(spark, paired))
+    val expected = ExtractPipeline.extract(pv, keys,
+        Pairing.pair(pv.select("file_name").union(keys.select("file_name"))))
+      .collect().map(_.mkString("|")).toSeq.sorted
+    assert(expected.nonEmpty)
+    assert(got === expected)
   }
 
   test("runningCounts, sessionize, scd2Stream and the drift monitor " +
@@ -1348,5 +1426,126 @@ class StreamingSpec extends SparkSpec {
         "vec_id LONG, embedding ARRAY<DOUBLE>", out, ck, refHist,
         "embedding", 4))
     assert(changed.result() === Nil, "sinks whose output changed on replay")
+  }
+
+  test("QuotaGate, TimerSessionize, startWatermarkDedup and intervalJoin " +
+      "commit each batch once: a restart on a fresh checkpoint over the " +
+      "same input leaves their output unchanged") {
+    import org.apache.spark.sql.streaming.StreamingQuery
+    import spark.implicits._
+    def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
+    def ts(s: Int) = new java.sql.Timestamp(1700000000000L + s * 1000L)
+    // rows as sorted strings, so a duplicated row shows (a set would not)
+    val changed = Seq.newBuilder[String]
+    def replayUnchanged(name: String,
+        start: (String, String) => StreamingQuery): Unit = {
+      val out = tmp("graft_replay_out") + "/sink"
+      def runOnce(): Seq[String] = {
+        val q = start(out, tmp("graft_replay_ck"))
+        try q.processAllAvailable() finally q.stop()
+        spark.read.parquet(out).collect().map(_.mkString("|")).toSeq.sorted
+      }
+      val first = runOnce()
+      assert(first.nonEmpty, s"$name emitted nothing")
+      if (runOnce() != first) changed += name
+    }
+
+    val confKey = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(confKey)
+    spark.conf.set(confKey, "org.apache.spark.sql.execution.streaming." +
+      "state.RocksDBStateStoreProvider")
+    try {
+      // source a is over its quota of 2
+      val docs = tmp("graft_replay_qg")
+      Seq((2L, "a", "a2"), (0L, "a", "a0"), (1L, "a", "a1"), (10L, "b", "b0"))
+        .toDF("doc_id", "source", "text").coalesce(1)
+        .write.mode("append").parquet(docs)
+      replayUnchanged("QuotaGate", (out, ck) =>
+        graft.streaming.QuotaGate.start(spark, docs,
+          "doc_id LONG, source STRING, text STRING", out, ck,
+          maxPerSource = 2L))
+
+      // user 3's far-future event moves the watermark past the close of
+      // users 1 and 2, so their timers fire in the no-data batch
+      val events = tmp("graft_replay_ts")
+      Seq((1L, ts(0)), (1L, ts(10)), (2L, ts(5)), (3L, ts(500)))
+        .toDF("user_id", "ts").coalesce(1).write.mode("append").parquet(events)
+      replayUnchanged("TimerSessionize", (out, ck) =>
+        graft.streaming.TimerSessionize.start(spark, events,
+          "user_id LONG, ts TIMESTAMP", out, ck, gapSeconds = 30L))
+    } finally {
+      prev match {
+        case Some(v) => spark.conf.set(confKey, v)
+        case None => spark.conf.unset(confKey)
+      }
+    }
+
+    val redelivered = tmp("graft_replay_wmd")
+    Seq((1L, ts(0), "first payload"), (1L, ts(1), "retry payload"),
+        (2L, ts(2), "second doc"))
+      .toDF("doc_id", "ts", "text").coalesce(1)
+      .write.mode("append").parquet(redelivered)
+    replayUnchanged("startWatermarkDedup", (out, ck) =>
+      DocIngest.startWatermarkDedup(spark, redelivered,
+        "doc_id LONG, ts TIMESTAMP, text STRING", out, ck))
+
+    val (left, right) = (tmp("graft_replay_ijl"), tmp("graft_replay_ijr"))
+    Seq((1L, ts(0)), (1L, ts(3000)), (2L, ts(0)))
+      .toDF("user_id", "ts").coalesce(1).write.mode("append").parquet(left)
+    Seq((1L, ts(1800)), (2L, ts(5400)))
+      .toDF("user_id", "ts").coalesce(1).write.mode("append").parquet(right)
+    replayUnchanged("intervalJoin", (out, ck) =>
+      DocIngest.intervalJoin(spark, left, right, "user_id LONG, ts TIMESTAMP",
+        "user_id", "ts", out, ck, intervalSeconds = 3600L))
+    assert(changed.result() === Nil, "sinks whose output changed on replay")
+  }
+
+  test("sketch publication survives a crash between retiring CURRENT and " +
+      "renaming its replacement: readers and the replayed batch resolve " +
+      "the pending pointer, and no day is lost") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.Path
+    val in = Files.createTempDirectory("graft_hllcrash_in").toString
+    val out = Files.createTempDirectory("graft_hllcrash_out").toString
+    val ckpt = Files.createTempDirectory("graft_hllcrash_ck").toString
+    val sch = "ts TIMESTAMP, user_id LONG"
+    def day(d: Int, users: Range) = users.map(u =>
+        (java.sql.Timestamp.valueOf(f"2024-01-$d%02d 10:00:00"), u.toLong))
+      .toDF("ts", "user_id").coalesce(1)
+    def days() = DocIngest.currentSketches(spark, out).collect()
+      .map(_.getString(0)).toSet
+
+    day(1, 0 until 100).write.mode("append").parquet(in)
+    val q = DocIngest.startHllDaily(spark, in, sch, out, ckpt)
+    try {
+      q.processAllAvailable()
+      day(2, 50 until 150).write.mode("append").parquet(in)
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(days() === Set("2024-01-01", "2024-01-02"))
+
+    // the crash: batch 1 retired CURRENT but never renamed its pointer
+    // into place, and never committed its checkpoint entry
+    val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(new Path(out, "CURRENT"), new Path(out, "CURRENT.tmp-1")))
+    Seq("commits/1", "commits/.1.crc").foreach(f =>
+      fs.delete(new Path(ckpt, f), false))
+    assert(days() === Set("2024-01-01", "2024-01-02"),
+      "a reader between the two calls lost the published table")
+
+    val q2 = DocIngest.startHllDaily(spark, in, sch, out, ckpt)
+    try {
+      q2.processAllAvailable()
+      assert(days() === Set("2024-01-01", "2024-01-02"),
+        "the replayed batch published without the earlier days")
+      day(3, 0 until 10).write.mode("append").parquet(in)
+      q2.processAllAvailable()
+    } finally q2.stop()
+    assert(days() === Set("2024-01-01", "2024-01-02", "2024-01-03"))
+    assert(fs.exists(new Path(out, "CURRENT")))
+    val day2 = DocIngest.currentSketches(spark, out)
+      .filter(col("day") === "2024-01-02").first().getAs[Array[Byte]](1)
+    val est2 = graft.operators.Hll.estimate(day2)
+    assert(math.abs(est2 - 100) <= 100 * 0.05, s"day2 $est2")
   }
 }
