@@ -6,6 +6,7 @@ import graft.sources.{PdfSource, VectorCollection}
 import graft.stats.LoadStats
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** E1 — the full ETL "query" (pdf_to_qdrant_etl.py:107-159): pair
   * booklets↔keys, extract questions, embed, load into the vector
@@ -51,7 +52,8 @@ object Pipeline {
       embedBatchSize: Int = 64): LoadReport = {
     val names = pages.select(col("file_name"))
       .union(keyTexts.select(col("file_name"))).distinct().collect()
-    load(spark, pages, keyTexts, names.map(_.getString(0)), collectionRoot,
+    load(spark, pages, keyTexts,
+      ArraySeq.unsafeWrapArray(names).map(_.getString(0)), collectionRoot,
       collection, dim, statsCsv, imagesMode, embedder, embedBatchSize)
   }
 
@@ -110,8 +112,9 @@ object Pipeline {
       // A4 stats: todas questoes = attempted per (year, subject), questoes
       // add = rows added THIS run (qdrant_text_loader.__etl_metadata_saving)
       statsCsv.foreach { csv =>
-        val all = questions.groupBy(col("year"), col("subject")).count()
-          .collect().map(r => LoadStats.Count(Option(r.get(0)).map(_.toString),
+        val all = ArraySeq.unsafeWrapArray(questions
+            .groupBy(col("year"), col("subject")).count().collect())
+          .map(r => LoadStats.Count(Option(r.get(0)).map(_.toString),
             r.getString(1), "todas questoes", r.getLong(2)))
         val add = added.map { case ((y, s), n) =>
           LoadStats.Count(y.map(_.toString), s, "questoes add", n) }

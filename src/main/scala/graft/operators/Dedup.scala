@@ -61,8 +61,8 @@ object Dedup {
     * embarrassingly parallel after `spread`. The Catalyst expressions stay
     * as the SQL-facing surface (GraftExtensions) where single-consumer use
     * is the norm. */
-  private def shingleFrame(docs: DataFrame, idCol: String, textCol: String,
-      n: Int, k: Int): DataFrame = {
+  private[operators] def shingleFrame(docs: DataFrame, idCol: String,
+      textCol: String, n: Int, k: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val src = spread(docs)
@@ -85,18 +85,70 @@ object Dedup {
     }.toDF("id", "shs", "sig")
   }
 
-  /** Signature table for the persisted-index path ([[LshIndex]]): the
-    * same (id, shs, sig) kernel the in-process pair generators use, so
-    * an index built today collides correctly with batches signed
-    * tomorrow. */
-  private[operators] def signatureFrame(docs: DataFrame, idCol: String,
-      textCol: String, n: Int, k: Int): DataFrame =
-    shingleFrame(docs, idCol, textCol, n, k)
+  // The candidate-pair skeleton. The sub-quadratic near-dup generators
+  // below (all but cosinePairsSemantic) and the persisted index
+  // (LshIndex) run the same three steps: kernelOnce → keyJoin → verify.
 
-  /** Band-bucket keys for the persisted-index path — see
-    * [[signatureFrame]]. */
-  private[operators] def bandBucketsOf(sig: DataFrame, bands: Int,
-      rows: Int): DataFrame = bandBuckets(sig, bands, rows)
+  /** Id column names of a self-join's pairs and of a batch-vs-corpus
+    * probe's pairs. */
+  private[operators] val SelfPair = ("id_a", "id_b")
+  private[operators] val NewVsCorpus = ("new_id", "corpus_id")
+
+  /** Step 1, the kernel: the per-doc signature or projection table a
+    * generator derives from its input, MATERIALIZED once per call. A
+    * kernel feeds several plan branches — the key build (often both
+    * sides of a self-join) and both verify re-attach sides — and
+    * exchange reuse covers at most the self-join (and none when the
+    * input carries a nondeterministic expression), so left as a plan it
+    * would re-run the input scan and the typed kernel once per consumer.
+    * In the flagship pipeline the input is itself a join over the
+    * quality gate, so each re-evaluation would repay upstream stages.
+    * Measured at sf0.1 (r9): checkpoint ~9.5-10.1 s vs recompute
+    * ~11-16 s for dedup_apply end-to-end, a gap that widens with the
+    * cost of the input scan. EAGER: building a generator's plan already
+    * runs the input scan and the kernel, even if the result is never
+    * consumed. */
+  private[operators] def kernelOnce(kernel: DataFrame): DataFrame =
+    kernel.localCheckpoint()
+
+  /** Step 2, the key join: ids-only equi-join of two (id, key…) tables
+    * on every non-id column they share, under `pair` on the two ids,
+    * each (left, right) pair kept once. Only ids and keys ride the
+    * shuffle, never text or vectors. Self-joins pass `_ < _` (each
+    * unordered pair once), directed ones `_ =!= _`, and batch-vs-corpus
+    * probes no condition. */
+  private[operators] def keyJoin(a: DataFrame, b: DataFrame,
+      ids: (String, String),
+      pair: (Column, Column) => Column = (_, _) => lit(true)): DataFrame = {
+    val keys = a.columns.filter(_ != "id")
+      .map(c => col(s"a.$c") === col(s"b.$c")).reduce(_ && _)
+    a.as("a").join(b.as("b"), keys && pair(col("a.id"), col("b.id")))
+      .select(col("a.id").as(ids._1), col("b.id").as(ids._2))
+      .dropDuplicates(ids._1, ids._2)
+  }
+
+  /** Step 3, verify: re-attach each side's payload to the candidate
+    * pairs by id — `a` and `b` are (id, payload) tables — score each
+    * pair, and keep it when `keep(score)` holds. Candidates are few
+    * next to the kernel, so these are small id-keyed joins. */
+  private[operators] def verify(cand: DataFrame, a: DataFrame,
+      b: DataFrame, scoreName: String, score: (Column, Column) => Column)(
+      keep: Column => Column): DataFrame = {
+    val (ia, ib) = (cand.columns(0), cand.columns(1))
+    cand.join(a.as("pa"), col(ia) === col("pa.id"))
+      .join(b.as("pb"), col(ib) === col("pb.id"))
+      .select(col(ia), col(ib), score(col(s"pa.${a.columns(1)}"),
+        col(s"pb.${b.columns(1)}")).as(scoreName))
+      .filter(keep(col(scoreName)))
+  }
+
+  /** Exact Jaccard of two per-doc shingle arrays, c / (|a| + |b| − c)
+    * with c = |a ∩ b|: the arrays are distinct per doc, so the union
+    * size follows from the set sizes. */
+  private[operators] def jaccard(a: Column, b: Column): Column = {
+    val c = size(array_intersect(a, b))
+    c / (size(a) + size(b) - c)
+  }
 
   /** Public signature table: (id, sig ARRAY<BIGINT> length k) per doc. */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
@@ -273,73 +325,46 @@ object Dedup {
     *
     * Scale shape: one df count keyed by shingle, one doc-keyed prefix
     * aggregation, a self-join that only prefix rows enter, then the
-    * standard candidate-verify joins (ids only on every shuffle). */
+    * skeleton's verify: each side's doc-level shingle SET re-attaches by
+    * id (doc-grain rows, no shingle-grain shuffle) and intersects
+    * in-row. */
   def prefixFilterJaccardPairs(docs: DataFrame, idCol: String,
       textCol: String, n: Int = 3, threshold: Double = 0.8): DataFrame = {
-    // The shingle frame feeds four consumers (df counts, prefix build,
-    // both verify sides): localCheckpoint it so the corpus scan +
-    // shingling kernel runs ONCE. Measured at sf0.1 (r9): checkpoint
-    // ~9.5-10.1 s vs recompute ~11-16 s for dedup_apply end-to-end —
-    // and the gap only widens when the corpus scan is expensive (the
-    // 100 TB case). The r8 note that recompute won predates the
-    // observe-based CC (fewer competing jobs changed the balance).
-    val (base, cand) = jaccardCandidates(docs, idCol, textCol, n, threshold,
-      checkpoint = true)
-    // exact verify WITHOUT shingle-grain shuffles: the candidate set is
-    // prefix-bounded (orders of magnitude below the shingle table), so
-    // join each side's doc-level shingle SET back (doc-grain rows) and
-    // intersect in-row — `shs` is distinct per doc, so
-    // size(array_intersect) IS the common-shingle count. Replaces two
-    // full-shingle-table exchanges + a pair-grain aggregation from the
-    // r7-profiled form (dedup_apply's dominant cost).
-    val sets = base.select($"id", $"shs", $"n_sh")
-    cand
-      .join(sets.select($"id".as("id_a"), $"shs".as("_sa"),
-        $"n_sh".as("na")), "id_a")
-      .join(sets.select($"id".as("id_b"), $"shs".as("_sb"),
-        $"n_sh".as("nb")), "id_b")
-      .withColumn("_c", size(array_intersect($"_sa", $"_sb")))
-      .select($"id_a", $"id_b",
-        ($"_c" / ($"na" + $"nb" - $"_c")).as("jaccard"))
-      .filter($"jaccard" >= threshold)
+    val (base, cand) = jaccardCandidates(docs, idCol, textCol, n, threshold)
+    val sets = base.select($"id", $"shs")
+    verify(cand, sets, sets, "jaccard", jaccard)(_ >= threshold)
   }
 
-  /** ONE candidate builder for [[prefixFilterJaccardPairs]] and its
-    * pruning audit [[prefixFilterCandidateCount]] (as
-    * [[containmentCandidates]] serves the containment pair): the prefix
-    * length and shingle order live here only, so the audit measures the
-    * filter that ships. Returns (base, candidate (id_a < id_b) pairs). */
-  private def jaccardCandidates(docs: DataFrame, idCol: String,
-      textCol: String, n: Int, threshold: Double,
-      checkpoint: Boolean): (DataFrame, DataFrame) = {
+  /** (kernel, shingle rows, prefix rows): the ONE prefix builder of the
+    * Jaccard and containment filters and of their pruning audits, so an
+    * audit measures the filter that ships. A doc's prefix is its first
+    * |S| − ⌈t·|S|⌉ + 1 shingles under the global (document frequency
+    * asc, shingle) order — the same length for both relations. One
+    * doc-keyed aggregation builds it: a per-doc array_sort of
+    * (_df, sg) structs, then a slice, where a row_number window would
+    * also sort the whole shingle table. The PPJoin theorem needs only a
+    * CONSISTENT global order. */
+  private def prefixed(docs: DataFrame, idCol: String, textCol: String,
+      n: Int, threshold: Double): (DataFrame, DataFrame, DataFrame) = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    val raw = shingleFrame(docs, idCol, textCol, n, k = 0)
-      .withColumn("n_sh", size($"shs"))
-    val base = if (checkpoint) raw.localCheckpoint() else raw
-    val sh = base.select($"id", $"n_sh", explode($"shs").as("sg"))
+    val base = kernelOnce(shingleFrame(docs, idCol, textCol, n, k = 0))
+    val sh = base.select($"id", explode($"shs").as("sg"))
     val dfreq = sh.groupBy($"sg").agg(count(lit(1)).as("_df"))
-    // Per-doc prefix via ONE aggregation (r16): the row_number form
-    // exchanged AND sorted the full (id, _df, sg) shingle table to rank
-    // within each doc; the aggregate form shuffles the same rows but
-    // replaces the global sort with a per-doc array_sort over the doc's
-    // own shingles, and the variable-length prefix is a slice. The
-    // (_df, sg) struct order IS the window's (orderBy _df, sg), and the
-    // PPJoin prefix theorem needs only a CONSISTENT global shingle
-    // order, so the candidate set — and the verified pair set — is
-    // unchanged. n_sh is constant per doc (min — any — is exact).
-    val prefix = sh.join(dfreq, "sg")
-      .groupBy($"id")
-      .agg(min($"n_sh").as("_n"),
-        array_sort(collect_list(struct($"_df", $"sg"))).as("_ord"))
-      .select($"id", explode(slice($"_ord", lit(1),
-        ($"_n" - ceil($"_n" * lit(threshold)) + lit(1)).cast("int"))
+    val prefix = sh.join(dfreq, "sg").groupBy($"id")
+      .agg(array_sort(collect_list(struct($"_df", $"sg"))).as("_ord"))
+      .select($"id", explode(slice($"_ord", lit(1), (size($"_ord") -
+        ceil(size($"_ord") * lit(threshold)) + lit(1)).cast("int"))
         .getField("sg")).as("sg"))
-    val cand = prefix.as("a").join(prefix.as("b"),
-        col("a.sg") === col("b.sg") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    (base, cand)
+    (base, sh, prefix)
+  }
+
+  /** (kernel, candidate (id_a < id_b) pairs) of
+    * [[prefixFilterJaccardPairs]] and its audit: prefix meets prefix. */
+  private def jaccardCandidates(docs: DataFrame, idCol: String,
+      textCol: String, n: Int, threshold: Double): (DataFrame, DataFrame) = {
+    val (base, _, prefix) = prefixed(docs, idCol, textCol, n, threshold)
+    (base, keyJoin(prefix, prefix, SelfPair, _ < _))
   }
 
   /** Candidate-pair count under prefix filtering vs the naive shared-
@@ -348,14 +373,14 @@ object Dedup {
     * builder with the operator, by construction. */
   private[graft] def prefixFilterCandidateCount(docs: DataFrame,
       idCol: String, textCol: String, n: Int, threshold: Double): Long =
-    jaccardCandidates(docs, idCol, textCol, n, threshold,
-      checkpoint = false)._2.count()
+    jaccardCandidates(docs, idCol, textCol, n, threshold)._2.count()
 
   /** (id, bucket) band keys from a signature table: bucket = hash of
     * (band index, the band's signature slice). Content-derived and
     * machine-independent, so bucket tables built on different runs — or
     * persisted from a previous snapshot — collide correctly. */
-  private def bandBuckets(sig: DataFrame, bands: Int, rows: Int): DataFrame =
+  private[operators] def bandBuckets(sig: DataFrame, bands: Int,
+      rows: Int): DataFrame =
     sig.select($"id",
       explode(array((0 until bands).map { b =>
         xxhash64(concat_ws("_", lit(b), concat_ws(",",
@@ -384,43 +409,16 @@ object Dedup {
     * so the OUTPUT contract equals `ngramJaccardPairs` whenever banding
     * recall is 1 at the threshold (choose bands so that
     * (1/bands)^(k/bands·…) — standard S-curve — is well left of it).
-    *
-    * EAGER: building the returned plan already runs the corpus scan and
-    * the shingle/minhash kernel, through the signature table's
-    * `localCheckpoint`. Calling this costs a full pass over `docs` even
-    * if the result is never consumed. */
+    * Eager, as every skeleton generator ([[kernelOnce]]). */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3, k: Int = 64, bands: Int = 16,
       threshold: Double = 0.8): DataFrame = {
     require(k % bands == 0, s"bands=$bands must divide k=$k")
-    val rows = k / bands
-    // The signature table feeds three-plus plan branches (the band
-    // bucket build and both verify-join sides; exchange reuse covers
-    // only the bucket self-join): checkpoint it so the corpus scan +
-    // shingle/minhash kernel runs ONCE — the prefixFilterJaccardPairs
-    // discipline (r9/r16), previously missing from the LSH generator.
-    // In the flagship pipeline `docs` is itself a join over the quality
-    // gate, so each re-evaluation repaid upstream stages too.
-    val sig = shingleFrame(docs, idCol, textCol, n, k).localCheckpoint()
-
-    // (band_idx, hash(band slice)) bucket keys; one row per band — ids only,
-    // shingle arrays do NOT ride through the shuffle.
-    val buckets = bandBuckets(sig, bands, rows)
-
-    val cand = buckets.as("a").join(buckets.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-
-    // verify candidates with exact set Jaccard (re-attach shingle arrays
-    // by id — candidates are few, so these joins are small).
-    cand
-      .join(sig.select($"id".as("id_a"), $"shs".as("sha")), "id_a")
-      .join(sig.select($"id".as("id_b"), $"shs".as("shb")), "id_b")
-      .select($"id_a", $"id_b",
-        (size(array_intersect($"sha", $"shb")).cast("double") /
-          size(array_union($"sha", $"shb"))).as("jaccard"))
-      .filter($"jaccard" >= threshold)
+    val sig = kernelOnce(shingleFrame(docs, idCol, textCol, n, k))
+    val buckets = bandBuckets(sig, bands, k / bands)
+    val sets = sig.select($"id", $"shs")
+    verify(keyJoin(buckets, buckets, SelfPair, _ < _), sets, sets,
+      "jaccard", jaccard)(_ >= threshold)
   }
 
   /** Directed shingle-set CONTAINMENT pairs: containment(a in b) =
@@ -446,50 +444,21 @@ object Dedup {
     * long. */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.9): DataFrame = {
-    // base feeds 4 consumers (df counts, prefix build, candidate full
-    // side, both verify sides) — checkpoint so the corpus scan +
-    // shingling kernel runs once (the prefixFilterJaccardPairs
-    // measurement applies unchanged).
     val (base, cand) = containmentCandidates(docs, idCol, textCol, n,
-      threshold, checkpoint = true)
-    val sets = base.select($"id", $"shs", $"n_sh")
-    cand
-      .join(sets.select($"id".as("id_a"), $"shs".as("_sa"),
-        $"n_sh".as("na")), "id_a")
-      .join(sets.select($"id".as("id_b"), $"shs".as("_sb")), "id_b")
-      .withColumn("_c", size(array_intersect($"_sa", $"_sb")))
-      .select($"id_a", $"id_b", ($"_c" / $"na").as("containment"))
-      .filter($"containment" >= threshold)
+      threshold)
+    val sets = base.select($"id", $"shs")
+    verify(cand, sets, sets, "containment",
+      (a, b) => size(array_intersect(a, b)) / size(a))(_ >= threshold)
   }
 
-  /** ONE candidate builder for [[containmentPairs]] and its pruning
-    * audit [[containmentCandidateCount]] — the prefix-length formula
-    * and ordering live here only, so the audit can never drift into
-    * measuring a different filter than the one shipped. */
+  /** (kernel, directed candidate pairs) of [[containmentPairs]] and its
+    * audit [[containmentCandidateCount]]: a's prefix meets b's FULL
+    * shingle set (the contained side is 'a', so only 'a' gets a prefix;
+    * b-in-a pairs form from b's own prefix in the same join). */
   private def containmentCandidates(docs: DataFrame, idCol: String,
-      textCol: String, n: Int, threshold: Double,
-      checkpoint: Boolean): (DataFrame, DataFrame) = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold must be in (0, 1], got $threshold")
-    val raw = shingleFrame(docs, idCol, textCol, n, k = 0)
-      .withColumn("n_sh", size($"shs"))
-    val base = if (checkpoint) raw.localCheckpoint() else raw
-    val sh = base.select($"id", $"n_sh", explode($"shs").as("sg"))
-    val dfreq = sh.groupBy($"sg").agg(count(lit(1)).as("_df"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"id").orderBy($"_df", $"sg")
-    val prefix = sh.join(dfreq, "sg")
-      .withColumn("_pos", row_number().over(w))
-      .filter($"_pos" <= $"n_sh" - ceil($"n_sh" * lit(threshold)) + lit(1))
-      .select($"id", $"sg")
-    // directed candidates: a's prefix hits b's FULL shingle set (the
-    // contained side is 'a', so only 'a' gets a prefix; b-in-a pairs
-    // form from b's own prefix in the same join)
-    val cand = prefix.as("a").join(sh.select($"id", $"sg").as("b"),
-        col("a.sg") === col("b.sg") && col("a.id") =!= col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    (base, cand)
+      textCol: String, n: Int, threshold: Double): (DataFrame, DataFrame) = {
+    val (base, sh, prefix) = prefixed(docs, idCol, textCol, n, threshold)
+    (base, keyJoin(prefix, sh, SelfPair, _ =!= _))
   }
 
   /** The naive shared-shingle containment form — quadratic in
@@ -512,8 +481,7 @@ object Dedup {
     * candidate builder with the operator, by construction. */
   private[graft] def containmentCandidateCount(docs: DataFrame,
       idCol: String, textCol: String, n: Int, threshold: Double): Long =
-    containmentCandidates(docs, idCol, textCol, n, threshold,
-      checkpoint = false)._2.count()
+    containmentCandidates(docs, idCol, textCol, n, threshold)._2.count()
 
   /** Incremental near-dup: which NEW documents near-duplicate an EXISTING
     * corpus document — the nightly-crawl-vs-snapshot production shape.
@@ -532,31 +500,14 @@ object Dedup {
       idCol: String, textCol: String, n: Int = 3, k: Int = 64,
       bands: Int = 16, threshold: Double = 0.8): DataFrame = {
     require(k % bands == 0, s"bands=$bands must divide k=$k")
-    val rows = k / bands
-    // each side feeds its band-bucket build AND its verify re-attach
-    // (2 consumers), so un-materialized the shingle/minhash kernel ran
-    // twice per side — and the corpus side is the big one (r17; the
-    // minhashLshPairs discipline)
-    val sigNew = shingleFrame(newDocs, idCol, textCol, n, k).localCheckpoint()
-    val sigOld = shingleFrame(corpus, idCol, textCol, n, k).localCheckpoint()
-    val cand = bandBuckets(sigNew, bands, rows).as("a")
-      .join(bandBuckets(sigOld, bands, rows).as("b"), Seq("bucket"))
-      .select(col("a.id").as("new_id"), col("b.id").as("corpus_id"))
-      .dropDuplicates("new_id", "corpus_id")
-    cand
-      .join(sigNew.select($"id".as("new_id"), $"shs".as("sha")), "new_id")
-      .join(sigOld.select($"id".as("corpus_id"), $"shs".as("shb")),
-        "corpus_id")
-      .select($"new_id", $"corpus_id",
-        (size(array_intersect($"sha", $"shb")).cast("double") /
-          size(array_union($"sha", $"shb"))).as("jaccard"))
-      .filter($"jaccard" >= threshold)
+    val sigNew = kernelOnce(shingleFrame(newDocs, idCol, textCol, n, k))
+    val sigOld = kernelOnce(shingleFrame(corpus, idCol, textCol, n, k))
+    verify(keyJoin(bandBuckets(sigNew, bands, k / bands),
+        bandBuckets(sigOld, bands, k / bands), NewVsCorpus),
+      sigNew.select($"id", $"shs"), sigOld.select($"id", $"shs"),
+      "jaccard", jaccard)(_ >= threshold)
   }
 
-  /** SimHash near-duplicate pairs: 64-bit signature, candidates from chunk
-    * collisions, verified by bit_count. The 64 bits are partitioned into
-    * maxHamming+1 chunks — by pigeonhole, any pair within the distance must
-    * agree exactly on at least one chunk, so candidate recall is 1. */
   /** (id, sig) 64-bit SimHash signature table — typed kernel, same
     * rationale as `shingleFrame`: a concrete sig column that nothing
     * inlines into downstream chunk expressions. Shared by `simhashPairs`
@@ -579,14 +530,18 @@ object Dedup {
       }.toDF("id", "sig")
   }
 
+  /** SimHash near-duplicate pairs: 64-bit signature, candidates from chunk
+    * collisions, verified by bit_count. The 64 bits are partitioned into
+    * maxHamming+1 chunks — by pigeonhole, any pair within the distance must
+    * agree exactly on at least one chunk, so candidate recall is 1. */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3): DataFrame = {
     // a negative radius would build ZERO chunks and silently return an
     // empty frame — reject it loudly instead
     require(maxHamming >= 0, s"maxHamming must be >= 0, got $maxHamming")
-    val sig = simhashSignatures(docs, idCol, textCol)
+    val sig = kernelOnce(simhashSignatures(docs, idCol, textCol))
     val numChunks = math.min(maxHamming + 1, 64)
-    val chunks = sig.select($"id", $"sig",
+    val chunks = sig.select($"id",
       explode(array((0 until numChunks).map { i =>
         val start = i * 64 / numChunks
         val width = (i + 1) * 64 / numChunks - start
@@ -594,12 +549,8 @@ object Dedup {
         concat_ws("_", lit(i),
           shiftrightunsigned($"sig", start).bitwiseAND(lit(mask)).cast("string"))
       }: _*)).as("chunk"))
-    chunks.as("a").join(chunks.as("b"),
-        col("a.chunk") === col("b.chunk") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).as("hamming"))
-      .dropDuplicates("id_a", "id_b")
-      .filter($"hamming" <= maxHamming)
+    verify(keyJoin(chunks, chunks, SelfPair, _ < _), sig, sig, "hamming",
+      (a, b) => bit_count(a.bitwiseXOR(b)))(_ <= maxHamming)
   }
 
   /** Embedding-cosine near-duplicate pairs, exact (all-pairs). Quadratic:
@@ -624,7 +575,14 @@ object Dedup {
     * when clusters are meaningful (pinned per-corpus in DedupSpec). Per-
     * cell work is quadratic in CELL size — ncells is the knob that trades
     * recall for bounded candidates at 100 TB, and the cell join carries
-    * (id, vector) only after the cell shuffle. */
+    * (id, vector) only after the cell shuffle.
+    *
+    * The one generator off the candidate-pair skeleton: its candidate
+    * set is every within-cell pair, quadratic in cell size, so the
+    * skeleton's pair dedup and two id re-attach joins over that set cost
+    * more than carrying the vector through the cell join — measured
+    * 3.1 → 4.2 s on `emb_semantic_precision` at sf0.1. Each id has one
+    * cell, so the join emits each pair once with no dedup. */
   def cosinePairsSemantic(embs: DataFrame, idCol: String, vecCol: String,
       threshold: Double, ncells: Int, maxIter: Int = 50): DataFrame = {
     val model = KMeansCluster.fit(embs, vecCol, ncells, maxIter)
@@ -654,7 +612,7 @@ object Dedup {
     // scale the embedding column dwarfs the key, so keeping it out of the
     // exchange is the difference between shuffling ids and shuffling the
     // whole corpus.
-    val vecs = {
+    val kernel = kernelOnce {
       val spark = embs.sparkSession
       import spark.implicits._
       spread(embs)
@@ -681,25 +639,11 @@ object Dedup {
             (id, v, bandKeys)
           }
         }.toDF("id", "v", "bands")
-        // the sign-projection kernel feeds four plan branches (bucket
-        // self-join sides + both verify re-attach sides): checkpoint so
-        // the per-row hyperplane dots run ONCE — the minhashLshPairs /
-        // prefixFilterJaccardPairs discipline (r17)
-        .localCheckpoint()
     }
-    val buckets = vecs.select($"id", explode($"bands").as("bucket"))
-    val cand = buckets.as("a").join(buckets.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    // verify exactly: re-attach vectors by id (AQE broadcasts the small
-    // candidate side; vecs streams without a shuffle).
-    cand
-      .join(vecs.select($"id".as("id_a"), $"v".as("va")), "id_a")
-      .join(vecs.select($"id".as("id_b"), $"v".as("vb")), "id_b")
-      .select($"id_a", $"id_b",
-        cosineSimilarity($"va", $"vb").as("cosine"))
-      .filter($"cosine" >= threshold)
+    val buckets = kernel.select($"id", explode($"bands").as("bucket"))
+    val vecs = kernel.select($"id", $"v")
+    verify(keyJoin(buckets, buckets, SelfPair, _ < _), vecs, vecs, "cosine",
+      cosineSimilarity)(_ >= threshold)
   }
 
   private def randomHyperplanes(planes: Int, dim: Int,

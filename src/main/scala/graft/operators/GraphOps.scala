@@ -203,34 +203,6 @@ object GraphOps {
       .filter(col("rank") <= k)
   }
 
-  /** Per-node triangle counts + local clustering coefficient over the
-    * undirected simple graph induced by an id-pair edge list (input
-    * direction, duplicate edges, and self-loops are all ignored) — the
-    * community-density audit for corpus k-NN graphs: a near-duplicate
-    * cluster shows up as a high-coefficient neighborhood, a hub spam
-    * node as a high-degree/zero-coefficient one.
-    *
-    * Each triangle is enumerated EXACTLY ONCE via degree-ordered
-    * orientation: every undirected edge {u,v} is oriented toward the
-    * higher endpoint under the (degree, id) total order, so a triangle
-    * {u,v,w} appears only as the wedge at its lowest-ranked corner
-    * closed by the oriented edge between the other two. Wedge fan-out
-    * at a node is quadratic in its ORIENTED out-degree, which the
-    * ordering caps at O(√|E|) on any graph — the hub-proof shape (naive
-    * wedge counting is quadratic in raw degree; one celebrity node with
-    * 10M neighbors generates 10^14 wedges and kills the job, oriented
-    * counting does not).
-    *
-    * Scale: degree is one map-side-combinable aggregation; the wedge
-    * and closure joins are keyed equi-joins over (id, id, degree) rows
-    * — ids only, no payloads ever shuffle. The canonical edge table and
-    * the oriented table are localCheckpoint'ed because each feeds three
-    * downstream consumers (lineage is flat, recompute is avoided; both
-    * are edge-sized id tables, not corpus data).
-    *
-    * `clustering` = 2·T(v) / (deg(v)·(deg(v)−1)), rounded to 6dp (0
-    * when deg < 2): exact integers into a single fp division — the same
-    * engine-stable final-fixed-tree discipline as [[pageRankInt]]. */
   /** Bounded-round k-core peeling (Seidman 1983; the distributed
     * Batagelj-Zaveršnik shape): round r removes every node whose
     * degree within the round-(r−1) survivor set is < k, all removals
@@ -304,6 +276,34 @@ object GraphOps {
       .groupBy(col("id")).agg(count(lit(1)).as("core_degree"))
   }
 
+  /** Per-node triangle counts + local clustering coefficient over the
+    * undirected simple graph induced by an id-pair edge list (input
+    * direction, duplicate edges, and self-loops are all ignored) — the
+    * community-density audit for corpus k-NN graphs: a near-duplicate
+    * cluster shows up as a high-coefficient neighborhood, a hub spam
+    * node as a high-degree/zero-coefficient one.
+    *
+    * Each triangle is enumerated EXACTLY ONCE via degree-ordered
+    * orientation: every undirected edge {u,v} is oriented toward the
+    * higher endpoint under the (degree, id) total order, so a triangle
+    * {u,v,w} appears only as the wedge at its lowest-ranked corner
+    * closed by the oriented edge between the other two. Wedge fan-out
+    * at a node is quadratic in its ORIENTED out-degree, which the
+    * ordering caps at O(√|E|) on any graph — the hub-proof shape (naive
+    * wedge counting is quadratic in raw degree; one celebrity node with
+    * 10M neighbors generates 10^14 wedges and kills the job, oriented
+    * counting does not).
+    *
+    * Scale: degree is one map-side-combinable aggregation; the wedge
+    * and closure joins are keyed equi-joins over (id, id, degree) rows
+    * — ids only, no payloads ever shuffle. The canonical edge table and
+    * the oriented table are localCheckpoint'ed because each feeds three
+    * downstream consumers (lineage is flat, recompute is avoided; both
+    * are edge-sized id tables, not corpus data).
+    *
+    * `clustering` = 2·T(v) / (deg(v)·(deg(v)−1)), rounded to 6dp (0
+    * when deg < 2): exact integers into a single fp division — the same
+    * engine-stable final-fixed-tree discipline as [[pageRankInt]]. */
   def triangleStats(edges: DataFrame, srcCol: String, dstCol: String)
       : DataFrame = {
     val raw = edges.select(col(srcCol).cast("long").as("u"),

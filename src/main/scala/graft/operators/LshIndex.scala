@@ -56,33 +56,25 @@ object LshIndex {
     }
   }
 
-  /** (id, bucket) band keys + (id, shs) verification sets for `docs`,
-    * using [[Dedup]]'s machine-independent signature kernel. */
+  /** (id, bucket, pb) band keys + (id, shs) verification sets for `docs`,
+    * both from ONE materialized pass of [[Dedup]]'s machine-independent
+    * signature kernel ([[Dedup.kernelOnce]]), so an index built today
+    * collides correctly with batches signed tomorrow. */
   private def signed(docs: DataFrame, idCol: String, textCol: String,
       n: Int, k: Int, bands: Int): (DataFrame, DataFrame) = {
-    val sig = Dedup.signatureFrame(docs, idCol, textCol, n, k)
-    (Dedup.bandBucketsOf(sig, bands, k / bands), sig.select(col("id"),
-      col("shs")))
+    require(k % bands == 0, s"bands=$bands must divide k=$k")
+    val sig = Dedup.kernelOnce(Dedup.shingleFrame(docs, idCol, textCol, n, k))
+    (Dedup.bandBuckets(sig, bands, k / bands)
+      .withColumn("pb", pmod(col("bucket"), lit(PartMod)).cast("int")),
+      sig.select(col("id"), col("shs")))
   }
 
-  /** Build (or rebuild) the index: one corpus pass for signatures, two
-    * writes. */
+  /** Build (or rebuild) the index: one pass of the signature kernel
+    * feeds the bucket and sig writes; the fps write is its own md5 pass
+    * over `corpus`. */
   def build(corpus: DataFrame, idCol: String, textCol: String,
-      path: String, n: Int = 3, k: Int = 64, bands: Int = 16): Unit = {
-    require(k % bands == 0, s"bands=$bands must divide k=$k")
-    val (buckets, sigs) = signed(corpus, idCol, textCol, n, k, bands)
-    buckets.withColumn("pb", pmod(col("bucket"), lit(PartMod)).cast("int"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("pb")
-      .parquet(bucketsPath(path))
-    sigs.write.mode(SaveMode.Overwrite).parquet(sigsPath(path))
-    // exact-duplicate fingerprints cover EVERY doc — including ones too
-    // short to shingle, which have no signature row and would otherwise
-    // slip any exact-re-send check
-    corpus.select(col(idCol).cast("long").as("id"),
-        md5(col(textCol)).as("fp"))
-      .write.mode(SaveMode.Overwrite).parquet(fpsPath(path))
-  }
+      path: String, n: Int = 3, k: Int = 64, bands: Int = 16): Unit =
+    write(corpus, idCol, textCol, path, n, k, bands, SaveMode.Overwrite)
 
   /** Ids of `batch` whose text is an EXACT duplicate (md5) of any indexed
     * doc — the companion check to [[probePairs]] for sub-shingle-width
@@ -106,53 +98,42 @@ object LshIndex {
   def probePairs(spark: SparkSession, path: String, newDocs: DataFrame,
       idCol: String, textCol: String, n: Int = 3, k: Int = 64,
       bands: Int = 16, threshold: Double = 0.8): DataFrame = {
-    require(k % bands == 0, s"bands=$bands must divide k=$k")
     healSwaps(spark, path)
     val (newBuckets, newSigs) = signed(newDocs, idCol, textCol, n, k, bands)
-    val nb = newBuckets
-      .withColumn("pb", pmod(col("bucket"), lit(PartMod)).cast("int"))
-    val folds = nb.select(col("pb")).distinct()
+    val folds = newBuckets.select(col("pb")).distinct()
       .collect().map(_.getInt(0)).toSeq // ≤ 64 ints — bounded sidecar
     val corpusBuckets = spark.read.parquet(bucketsPath(path))
       .filter(col("pb").isin(folds: _*))
-    val cand = nb.as("a")
-      .join(corpusBuckets.as("b"), Seq("bucket", "pb"))
-      .select(col("a.id").as("new_id"), col("b.id").as("corpus_id"))
-      .dropDuplicates("new_id", "corpus_id")
     // at-least-once append window: a crash-replayed batch leaves
     // duplicate rows per id in sigs/ (bucket dups are absorbed by the
-    // cand dropDuplicates above, but duplicate SIG rows would re-expand
+    // key join's pair dedup, but duplicate SIG rows would re-expand
     // deduped candidates into duplicate output pairs). Signatures are
     // content-derived, so any copy is the right copy — keep one per id.
     val corpusSigs = spark.read.parquet(sigsPath(path))
       .dropDuplicates("id")
-    cand
-      .join(newSigs.select(col("id").as("new_id"), col("shs").as("sha")),
-        "new_id")
-      .join(corpusSigs.select(col("id").as("corpus_id"),
-        col("shs").as("shb")), "corpus_id")
-      .select(col("new_id"), col("corpus_id"),
-        (size(array_intersect(col("sha"), col("shb"))).cast("double") /
-          size(array_union(col("sha"), col("shb")))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    Dedup.verify(Dedup.keyJoin(newBuckets, corpusBuckets, Dedup.NewVsCorpus),
+      newSigs, corpusSigs, "jaccard", Dedup.jaccard)(_ >= threshold)
   }
 
   /** Fold an accepted batch into the index (plain partition append —
     * untouched `pb=` folds are not rewritten). The next probe collides
     * against it immediately. */
   def append(newDocs: DataFrame, idCol: String, textCol: String,
-      path: String, n: Int = 3, k: Int = 64, bands: Int = 16): Unit = {
-    require(k % bands == 0, s"bands=$bands must divide k=$k")
-    healSwaps(newDocs.sparkSession, path)
-    val (buckets, sigs) = signed(newDocs, idCol, textCol, n, k, bands)
-    buckets.withColumn("pb", pmod(col("bucket"), lit(PartMod)).cast("int"))
-      .write.mode(SaveMode.Append)
-      .partitionBy("pb")
-      .parquet(bucketsPath(path))
-    sigs.write.mode(SaveMode.Append).parquet(sigsPath(path))
-    newDocs.select(col(idCol).cast("long").as("id"),
-        md5(col(textCol)).as("fp"))
-      .write.mode(SaveMode.Append).parquet(fpsPath(path))
+      path: String, n: Int = 3, k: Int = 64, bands: Int = 16): Unit =
+    write(newDocs, idCol, textCol, path, n, k, bands, SaveMode.Append)
+
+  /** The three table writes of [[build]] (Overwrite) and [[append]]. */
+  private def write(docs: DataFrame, idCol: String, textCol: String,
+      path: String, n: Int, k: Int, bands: Int, mode: SaveMode): Unit = {
+    healSwaps(docs.sparkSession, path)
+    val (buckets, sigs) = signed(docs, idCol, textCol, n, k, bands)
+    buckets.write.mode(mode).partitionBy("pb").parquet(bucketsPath(path))
+    sigs.write.mode(mode).parquet(sigsPath(path))
+    // exact-duplicate fingerprints cover EVERY doc — including ones too
+    // short to shingle, which have no signature row and would otherwise
+    // slip any exact-re-send check
+    docs.select(col(idCol).cast("long").as("id"), md5(col(textCol)).as("fp"))
+      .write.mode(mode).parquet(fpsPath(path))
   }
 
   /** Maintenance: restore one-row-per-key across all three tables

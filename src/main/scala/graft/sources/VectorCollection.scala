@@ -25,8 +25,11 @@ import org.apache.spark.storage.StorageLevel
   *    are (offset + dense enumeration), matching the reference's
   *    running-count ids (qdrant_text_loader.py:189-210) without a driver
   *    loop.
-  *  - append is idempotent per batch directory; `count()` after write is
-  *    the reference's status-check reconciliation (:222, :306).
+  *  - `append` writes the batch as new part files in the collection
+  *    directory and is not idempotent: appending a batch twice stores
+  *    its rows twice. Its `added` count reads back only the files that
+  *    write created — the reference's status-check reconciliation
+  *    (:222, :306) without a collection scan.
   *  - every file is read with the declared [[Schema]], so planning a read
   *    launches no schema-inference job.
   *  - `search` scores a persisted snapshot of the collection (see
